@@ -53,12 +53,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # wall at local[16]: 32 -> 12.8 s, 16 -> 10.6 s, 8 -> 11.6 s).  On a real
 # cluster SPARK_GRAFT_SHUFFLE is set to ~2-3x total cores (see SCALE.md).
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "16")
-# Core count likewise: local[16] beats local[32] on the full headline
-# (measured same-session A/B: 15.93 s vs 17.31 s — at sf0.1 most stages
-# are dispatch-bound and 32 local threads add scheduling + GC pressure;
-# only the two pair-join-heavy queries prefer 32).  A cluster submit
-# overrides via SPARK_GRAFT_CPUS; setdefault never overrides the caller.
-os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
+# Core count: the cores this process may run on.  More local threads than
+# cores only add scheduling and GC pressure (measured full headline:
+# local[16] 15.93 s vs local[32] 17.31 s), and a fixed 16 on a 4-core
+# host hides which setting a run used.  A cluster submit overrides via
+# SPARK_GRAFT_CPUS; setdefault never overrides the caller.
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 # AQE off for the benched session: every adaptive exchange is a stage
 # barrier, and at sf0.1 that barrier dominates sub-second queries
 # (q01 0.42 -> 0.19 s measured; see session.py).  The plans are static

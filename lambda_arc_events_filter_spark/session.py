@@ -46,7 +46,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get(
+            "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+        )
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
@@ -85,6 +87,18 @@ def get_spark(
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider"
+        ),
+        # Checkpoint and state logs through Hadoop's FileSystem API, not
+        # the default FileContext one.  Both write a temp file and rename
+        # it into place, never over an existing entry.  Without libhadoop
+        # the FileContext path forks `chmod` on every create and `ls -ld`
+        # on every rename: 30-45 ms per offsets/commits/sources/sink-
+        # metadata entry, four entries per micro-batch (walCommit and
+        # commitOffsets 32 -> 8 ms per batch on 4 cores; SCALE.md
+        # §Streaming).
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
         ),
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),

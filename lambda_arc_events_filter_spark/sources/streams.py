@@ -183,12 +183,31 @@ def write_stream_parquet(
     The checkpoint directory is the replacement for the Lambda/ESM implicit
     shard-iterator checkpointing of the reference deployment (SURVEY §3.1):
     restart resumes from the last committed batch.
+
+    One writer per core: the stream is coalesced to the session's
+    ``defaultParallelism`` before the sink, so a micro-batch writes at most
+    one parquet file per core instead of one per input file.  Each writer
+    is a fixed cost (a per-task Hadoop ``Configuration`` deserialization,
+    forked ``chmod`` calls for the file, its ``.crc`` and the directory):
+    35k ARC rows took 1.83 s to write as 100 files and 0.29 s as 4 files
+    on a 4-core host.  Coalesce is narrow, so the read and decode still
+    run one task per core.
+
+    ``session.get_spark`` logs the checkpoint through Spark's
+    FileSystem-based checkpoint manager, about 8 ms per log entry where
+    the default FileContext manager took about 32 ms.  Both commit an
+    entry by writing a temp file and renaming it into place, refusing an
+    existing entry; the rename is atomic on local FS and HDFS.  On object
+    stores without atomic rename (S3 and the like) neither manager is
+    atomic: keep the checkpoint on HDFS or a store with atomic rename.
     """
     checkpoint = checkpoint or os.path.join(
         tempfile.gettempdir(), f"ckpt_{uuid.uuid4().hex[:8]}"
     )
+    cores = df.sparkSession.sparkContext.defaultParallelism
     q = (
-        df.writeStream.format("parquet")
+        df.coalesce(cores)
+        .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)

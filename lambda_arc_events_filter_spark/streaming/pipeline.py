@@ -52,13 +52,21 @@ def decode_kinesis_records(records: DataFrame, data_col: str = "data") -> DataFr
 
     Input: a DataFrame with a base64 ``data`` column (the
     ``Records[].kinesis.data`` field of the Lambda envelope).  Output: the
-    original columns plus a typed ``event`` struct.  ``unbase64`` +
+    original columns plus a typed ``event`` struct.  ``try_to_binary`` +
     ``from_json`` are Catalyst expressions — decode happens columnar,
     JVM-side, per micro-batch (vs per-record Python in a Lambda handler).
+
+    A malformed payload never fails the batch: invalid base64 decodes to
+    null (ANSI ``unbase64`` would raise and kill the stream), and
+    ``from_json`` is PERMISSIVE, so both bad base64 and bad JSON leave a
+    null or all-null ``event`` — count them as ``event._id IS NULL``.
     """
     return records.withColumn(
         "event",
-        F.from_json(F.unbase64(F.col(data_col)).cast("string"), ARC_EVENT_SCHEMA),
+        F.from_json(
+            F.try_to_binary(F.col(data_col), F.lit("base64")).cast("string"),
+            ARC_EVENT_SCHEMA,
+        ),
     )
 
 

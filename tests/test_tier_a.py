@@ -90,11 +90,111 @@ def test_malformed_payload_yields_null_event(spark):
         "sequenceNumber string, data string, partitionKey string",
     )
     out = decode_kinesis_records(bad).collect()
-    # from_json is PERMISSIVE: malformed record → null struct, no crash —
-    # the pipeline-level dead-letter behavior (filter event IS NULL routes it)
+    # from_json is PERMISSIVE: malformed record → null or all-null struct,
+    # no crash.  Nothing routes it anywhere: a filter predicate drops it,
+    # and with no predicate set it is forwarded as an all-null row.
     assert out[0]["event"] is None or all(
         v is None for v in out[0]["event"].asDict().values()
     )
+
+
+def test_bad_base64_yields_null_event(spark):
+    """Invalid base64 in one record must not fail the batch (ANSI
+    ``unbase64`` raises "Last unit does not have enough valid bits"): it
+    decodes to a null ``event`` and counts as malformed beside the good
+    record."""
+    good = _b64(EVENTS[0])
+    truncated = good[: (len(good) // 4) * 4 - 3]  # length 1 mod 4
+    recs = spark.createDataFrame(
+        [("0", good, "pk"), ("1", truncated, "pk"), ("2", "%%not*b64", "pk")],
+        "sequenceNumber string, data string, partitionKey string",
+    )
+    out = {
+        r["sequenceNumber"]: r["event"]
+        for r in decode_kinesis_records(recs).collect()
+    }
+    assert out["0"]["_id"] == "a1"
+    assert out["1"] is None and out["2"] is None
+    malformed = (
+        decode_kinesis_records(recs).filter(F.col("event._id").isNull()).count()
+    )
+    assert malformed == 2
+
+
+def test_write_stream_parquet_restart_exactly_once(spark, tmp_path):
+    """The ARC pipeline through ``write_stream_parquet``: drain a backlog,
+    add files, restart from the same checkpoint.  The sink holds every
+    forwarded ``_id`` exactly once, and no micro-batch wrote more parquet
+    files than the session has cores, although each batch reads more
+    input files than that (the sink's one-writer-per-core coalesce)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from lambda_arc_events_filter_spark.sources.streams import (
+        write_stream_parquet,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    # fixture_conf's 1m split size reads each tiny file as its own task, so
+    # without the coalesce a batch would write ``per_trigger`` files.
+    per_trigger = cores + 2
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+    os.makedirs(src)
+    expected: set[str] = set()
+    serial = 0
+
+    def add_files(n: int) -> None:
+        nonlocal serial
+        for _ in range(n):
+            lines = []
+            for doc in EVENTS:
+                serial += 1
+                eid = f"{doc['_id']}-{serial}"
+                lines.append(json.dumps({
+                    "data": _b64({**doc, "_id": eid}),
+                    "partitionKey": "pk",
+                    "sequenceNumber": str(serial),
+                }))
+                if (doc["type"] == "story" and doc["operation"] != "delete"
+                        and doc["published"]):
+                    expected.add(eid)
+            lines.append(json.dumps(
+                {"data": "%%", "partitionKey": "pk", "sequenceNumber": "bad"}
+            ))
+            with open(os.path.join(src, f"part-{serial:06d}.json"), "w") as f:
+                f.write("\n".join(lines))
+
+    def drain() -> list[str]:
+        raw = (
+            spark.readStream.schema(
+                "data string, partitionKey string, sequenceNumber string"
+            )
+            .option("maxFilesPerTrigger", per_trigger)
+            .json(src)
+        )
+        kept = filter_events(
+            decode_kinesis_records(raw),
+            types=["story"], operations=["insert", "update"], published=True,
+        )
+        write_stream_parquet(project_payload(kept), sink, ckpt)
+        # Every parquet file in the directory, committed or not.
+        return pq.read_table(sink, columns=["_id"]).column("_id").to_pylist()
+
+    add_files(per_trigger)
+    assert sorted(drain()) == sorted(expected)
+    add_files(per_trigger)
+    ids = drain()
+    assert len(ids) == len(set(ids)) and set(ids) == expected
+
+    meta = os.path.join(sink, "_spark_metadata")
+    files_per_batch = {}
+    for b in os.listdir(meta):
+        if not b.startswith("."):
+            with open(os.path.join(meta, b)) as f:
+                files_per_batch[b] = sum(1 for line in f if '"path"' in line)
+    assert len(files_per_batch) == 2, files_per_batch
+    assert max(files_per_batch.values()) <= cores, files_per_batch
 
 
 def test_compaction_reduces_file_count(spark, sf_dir):

@@ -35,7 +35,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "16")
 os.environ.setdefault("SPARK_GRAFT_AQE", "false")
 
