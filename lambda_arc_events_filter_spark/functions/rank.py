@@ -54,13 +54,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lambda_arc_events_filter_spark.cache import bounded_put
-
-#: (applicationId, input-plan semanticHash, column, n_bands) → sorted band
-#: boundaries (see functions/stats.py::_BOUNDS_IDX — identical safety
-#: argument: bounds steer balance, never correctness).
-_BOUNDS_IDX: dict[tuple[str, int, str, int], list[float]] = {}
-_BOUNDS_IDX_MAX = 64
+from lambda_arc_events_filter_spark.cache import band_bounds
 
 #: running-aggregate kinds → (aggregator, cross-partition offset combiner)
 _AGGS = {
@@ -121,21 +115,21 @@ def _band_column(core: DataFrame, name: str, direction: str, n_bands: int):
     qs = [i / n_bands for i in range(1, n_bands)]
     if not qs:
         return F.lit(0)
-    # session bounds cache, same protocol as functions/stats.py: the
-    # probe only steers band balance (any fixed cuts are order-
-    # consistent), so repeat constructions over the same input plan skip
-    # the approxQuantile job.  Lazily-checkpointed derived inputs get a
-    # fresh plan id per call and simply never hit — scan-chain inputs
-    # (the common consumers) do.
+    # session bounds cache (cache.band_bounds, shared with
+    # functions/stats.py): the probe only steers band balance (any fixed
+    # cuts are order-consistent), so repeat constructions over the same
+    # input plan skip the approxQuantile job.  Lazily-checkpointed derived
+    # inputs get a fresh plan id per call and simply never hit —
+    # scan-chain inputs (the common consumers) do.
     key = (
         core.sparkSession.sparkContext.applicationId,
         core.semanticHash(),
         name,
         n_bands,
     )
-    bounds = _BOUNDS_IDX.get(key)
-    if bounds is None:
-        bounds = sorted(
+    bounds = band_bounds(
+        key,
+        lambda: sorted(
             {
                 b
                 for b in core.select(conv.alias("_v")).stat.approxQuantile(
@@ -143,8 +137,8 @@ def _band_column(core: DataFrame, name: str, direction: str, n_bands: int):
                 )
                 if b == b  # drop NaN boundaries (all-NaN / empty columns)
             }
-        )
-        bounded_put(_BOUNDS_IDX, key, bounds, _BOUNDS_IDX_MAX)
+        ),
+    )
     n = len(bounds)
     asc: Column = F.lit(n)
     for i, b in reversed(list(enumerate(bounds))):

@@ -32,7 +32,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from lambda_arc_events_filter_spark.cache import bounded_put
+from lambda_arc_events_filter_spark.cache import band_bounds
 
 #: internal column names the banded-rank plan materializes on the fact
 #: relation (plus ``_rn``/``_n`` from the ``group`` strategy).  Input
@@ -43,16 +43,6 @@ _RESERVED_NAMES = frozenset(
         "_lo", "_hi", "_frac", "_v", "_v_lo", "_v_hi", "q_alias", "_rn",
     }
 )
-
-#: (applicationId, input-plan semanticHash, value_col, num_partitions) →
-#: sorted band boundaries.  The boundary probe is one approxQuantile job
-#: at plan-construction time; its output only steers band BALANCE, never
-#: correctness (any fixed cut points are order-consistent), so serving a
-#: cached — even colliding — entry is always safe.  Build-once/probe-many
-#: callers (agg_stats, the histogram/PSI family) skip the probe on every
-#: call after the first.
-_BOUNDS_IDX: dict[tuple[str, int, str, int], list[float]] = {}
-_BOUNDS_IDX_MAX = 64
 
 
 def _join_null_safe(
@@ -223,12 +213,13 @@ def group_percentile_cont(
     # ~P doubles, accuracy only affects band balance, never correctness)
     # that runs at plan-CONSTRUCTION time — build-once/probe-many callers
     # and the plan cache pay it once, like a broadcast build.  Bounds are
-    # additionally session-cached per (app, input plan, column, P) —
-    # repeat calls skip the probe job entirely (and a stale/colliding
-    # entry is still correct: bounds steer balance, not semantics).
-    bounds = _BOUNDS_IDX.get(bounds_key)
-    if bounds is None:
-        bounds = sorted(
+    # additionally session-cached per (app, input plan, column, P) in
+    # ``cache.band_bounds`` — repeat calls skip the probe job entirely (and
+    # a stale/colliding entry is still correct: bounds steer balance, not
+    # semantics).
+    bounds = band_bounds(
+        bounds_key,
+        lambda: sorted(
             {
                 b
                 for b in nn.select(
@@ -243,8 +234,8 @@ def group_percentile_cont(
                 # bound makes sorted(set(...)) order-unstable and the CASE
                 # chain non-monotone
             }
-        )
-        bounded_put(_BOUNDS_IDX, bounds_key, bounds, _BOUNDS_IDX_MAX)
+        ),
+    )
     band: Column = F.lit(len(bounds))
     for i, b in reversed(list(enumerate(bounds))):
         band = F.when(F.col("_vd") <= F.lit(b), i).otherwise(band)

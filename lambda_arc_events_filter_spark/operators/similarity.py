@@ -235,14 +235,6 @@ def label_centroids(
     )
 
 
-# Session-lifetime IVF index cache: cache_key → (centroids, unit corpus).
-# Keyed by Spark applicationId so stale DataFrames from a dead session are
-# never served.  Bounded FIFO (cache.bounded_put) so a long-lived session
-# over many corpora cannot grow driver references without limit.
-_IVF_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_IVF_CACHE_MAX = 8
-
-
 def corpus_units(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -324,7 +316,6 @@ def ivf_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    cache_key: tuple | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index ONCE: (tiny centroid table, corpus with
     precomputed unit vectors partitioned by cell), both materialized via
@@ -336,32 +327,12 @@ def ivf_build_index(
     round 1 rebuilt centroids inside every query execution, making the
     "approximate" path slower than brute force (1.29 s vs 0.46 s at
     sf0.1).  localCheckpoint is the local stand-in for the persisted
-    artifact.  Pass ``cache_key`` to reuse the index across queries within
-    a session.
+    artifact.  To reuse the index across queries within a session, keep
+    it with ``cache.session_artifact``.
     """
-    if cache_key is not None:
-        hit = _IVF_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
     cents = label_centroids(corpus, label_col, vec_col).coalesce(1).localCheckpoint()
     units = corpus_units(corpus, id_col, vec_col, label_col).localCheckpoint()
-    idx = (cents, units)
-    if cache_key is not None:
-        from lambda_arc_events_filter_spark.cache import (
-            bless_resident,
-            bounded_put,
-            release_plans_for,
-        )
-
-        # session-resident index: consumers' prepared plans may pin it
-        # (registry plan-cache blessing protocol)
-        bless_resident(cents)
-        bless_resident(units)
-        bounded_put(
-            _IVF_CACHE, cache_key, idx, _IVF_CACHE_MAX,
-            on_evict=release_plans_for,
-        )
-    return idx
+    return cents, units
 
 
 def ivf_topk(
@@ -432,8 +403,6 @@ _IVFPQ_SUBDIM = 16
 _IVFPQ_CODES = 16  # codes per subspace (deterministic fixture codebook)
 _IVFPQ_SCALE = 1_000_000  # 6-decimal fixed point for ADC distance terms
 
-_IVFPQ_CACHE: dict[tuple, tuple] = {}
-
 
 def _sq_sub(vec: str, s: int) -> str:
     """SQL slice of subspace ``s`` from double-array ``vec``."""
@@ -457,7 +426,6 @@ def ivfpq_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    cache_key: tuple | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Build the IVF-PQ index ONCE: (centroids, unit corpus, PQ residual
     codebook row, PQ-coded corpus partitioned by cell).
@@ -472,10 +440,6 @@ def ivfpq_build_index(
     carries only (cell, id, 4 int codes) — the 32×-compressed form that
     is the entire point at 100 TB: the probe never touches full vectors
     until the exact re-rank of the shortlist."""
-    if cache_key is not None:
-        hit = _IVFPQ_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
     cents = (
         label_centroids(corpus, label_col, vec_col).coalesce(1).localCheckpoint()
     )
@@ -526,21 +490,7 @@ def ivfpq_build_index(
         .repartition("cell")
         .localCheckpoint()
     )
-    idx = (cents, units, cb, coded)
-    if cache_key is not None:
-        from lambda_arc_events_filter_spark.cache import (
-            bless_resident,
-            bounded_put,
-            release_plans_for,
-        )
-
-        for df in idx:
-            bless_resident(df)
-        bounded_put(
-            _IVFPQ_CACHE, cache_key, idx, _IVF_CACHE_MAX,
-            on_evict=release_plans_for,
-        )
-    return idx
+    return cents, units, cb, coded
 
 
 def ivfpq_probes(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load, values_relation
 from lambda_arc_events_filter_spark.functions.exact import (
     round_int_ratio,
@@ -288,19 +289,19 @@ def contamination_ngram_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (_PAIR_CTE family: connected components, representatives, degree /
 #: triangle / two-hop graph stats, dup-rate by source).  The lang-blocked
 #: twin lives in llm_q._postings_index; the UNBLOCKED pair set is a
-#: different artifact (cross-lang pairs included), hence its own cache.
-#: Blessed (cache.bless_resident) so pure-probe consumers ride the
-#: prepared-plan cache.
-_POSTINGS_UNBLOCKED_IDX: dict[tuple, DataFrame] = {}
-
-
+#: different artifact (cross-lang pairs included), hence its own store
+#: entry.  Blessed (cache.session_artifact) so pure-probe consumers ride
+#: the prepared-plan cache.
 def _postings_unblocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lambda_arc_events_filter_spark.queries.postings import (
         build_postings_index,
     )
 
-    return build_postings_index(
-        spark, sf_dir, _POSTINGS_UNBLOCKED_IDX, F.lit(1)
+    return session_artifact(
+        spark,
+        sf_dir,
+        "postings_unblocked",
+        lambda: build_postings_index(spark, sf_dir, F.lit(1)),
     )
 
 
@@ -635,32 +636,23 @@ def dedup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: semantic dedup (cluster once, prune many times / incrementally —
 #: Abbas et al. run exactly this split), so they localCheckpoint like the
 #: IVF index and the dedup postings; the per-run phase is the pair scan.
-#: Blessed via cache.bless_resident, so consumers may ride the
+#: Blessed via cache.session_artifact, so consumers may ride the
 #: prepared-plan cache (registry guard admits blessed RDD scans).
-_SEMDEDUP_INDEX: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _SEMDEDUP_DIM = 64
 
 
 def _semdedup_index(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    from lambda_arc_events_filter_spark.cache import (
-        bless_resident,
-        bounded_put,
-        release_plans_for,
-    )
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     from lambda_arc_events_filter_spark.operators import similarity as S
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _SEMDEDUP_INDEX.get(key)
-    if idx is None:
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
         emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         assign = (
             S.kmeans_lloyd(emb, "vec_id", "embedding", k=8, iters=2)
             .select("vec_id", "cluster")
             .localCheckpoint()
         )
-        bless_resident(assign)  # session index (registry blessing protocol)
         # unit vectors flattened to scalar columns AFTER the checkpoint:
         # extracting v[i] from a live transform() expression re-evaluates
         # the whole normalization per component (CollapseProject inlining
@@ -685,7 +677,6 @@ def _semdedup_index(
         m = (
             assign.join(flat, "vec_id").repartition(width).localCheckpoint()
         )
-        bless_resident(m)
         dim = _SEMDEDUP_DIM
         a_side = m.select(
             F.col("cluster"),
@@ -697,11 +688,9 @@ def _semdedup_index(
             F.col("vec_id").alias("ib"),
             *[F.col(f"c{i}").alias(f"b{i}") for i in range(dim)],
         )
-        idx = bounded_put(
-            _SEMDEDUP_INDEX, key, (assign, a_side, b_side), 8,
-            on_evict=release_plans_for,
-        )
-    return idx
+        return assign, a_side, b_side
+
+    return session_artifact(spark, sf_dir, "semdedup", build)
 
 
 @register(

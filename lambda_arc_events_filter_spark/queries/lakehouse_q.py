@@ -19,6 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load
 from lambda_arc_events_filter_spark.registry import register
 from lambda_arc_events_filter_spark.sources import readers
@@ -33,13 +34,9 @@ _EVENTS_DDL = (
 # Schema evolution across ingest batches (mergeSchema)
 # ---------------------------------------------------------------------------
 
-_EVOLVED_CACHE: dict[tuple, str] = {}
-
 
 def _evolved_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _EVOLVED_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("orders_evolved")
         o = load(spark, sf_dir, "orders")
         # batch 1: the original five columns
@@ -55,8 +52,9 @@ def _evolved_orders_path(spark: SparkSession, sf_dir: str) -> str:
             .otherwise("standard")
             .alias("o_channel"),
         ).drop("o_orderpriority").write.parquet(path + "/batch=2")
-        _EVOLVED_CACHE[key] = path
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "evolved_orders", build)
 
 
 @register(
@@ -108,14 +106,11 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Manifest-driven file pruning (the Iceberg/Delta planning step)
 # ---------------------------------------------------------------------------
 
-_RANGED_CACHE: dict[tuple, str] = {}
 _RANGED_FILES = 16
 
 
 def _time_ranged_events_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _RANGED_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("events_ranged")
         (
             load(spark, sf_dir, "events")
@@ -123,8 +118,9 @@ def _time_ranged_events_path(spark: SparkSession, sf_dir: str) -> str:
             .sortWithinPartitions("ts")
             .write.parquet(path)
         )
-        _RANGED_CACHE[key] = path
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "time_ranged_events", build)
 
 
 @register(
@@ -187,8 +183,6 @@ def manifest_file_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z-order (Morton) clustering: two-dimensional row-group skipping
 # ---------------------------------------------------------------------------
 
-_ZORDER_CACHE: dict[tuple, str] = {}
-
 
 def morton_expr(a, b, bits: int = 16):
     """Morton (Z-order) interleave of two non-negative ints: bit i of
@@ -206,9 +200,7 @@ def morton_expr(a, b, bits: int = 16):
 
 
 def _zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _ZORDER_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("events_zorder")
         # the cluster dims are PERSISTED columns (hr, not hour(ts)): parquet
         # min/max stats only skip on stored columns, never on expressions —
@@ -227,8 +219,9 @@ def _zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
             .write.option("parquet.block.size", 256 * 1024)
             .parquet(path)
         )
-        _ZORDER_CACHE[key] = path
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "zorder_events", build)
 
 
 @register(
@@ -274,13 +267,9 @@ def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parquet column bloom filters: point skipping on unsorted columns
 # ---------------------------------------------------------------------------
 
-_BLOOM_CACHE: dict[tuple, str] = {}
-
 
 def _bloom_events_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _BLOOM_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("events_bloom")
         (
             load(spark, sf_dir, "events")
@@ -294,8 +283,9 @@ def _bloom_events_path(spark: SparkSession, sf_dir: str) -> str:
             .option("parquet.block.size", 256 * 1024)
             .parquet(path)
         )
-        _BLOOM_CACHE[key] = path
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "bloom_events", build)
 
 
 @register(
@@ -478,15 +468,12 @@ def table_reconcile_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental aggregate maintenance (delta-merge vs recompute)
 # ---------------------------------------------------------------------------
 
-_AGG_SNAPSHOT_CACHE: dict[tuple, tuple[str, int]] = {}
-
 
 def _agg_snapshot(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Write-once aggregate snapshot over the first ~80 % of the events
     time span (integer-second cutoff), returning (path, cutoff_sec)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    snap = _AGG_SNAPSHOT_CACHE.get(key)
-    if snap is None:
+
+    def build() -> tuple[str, int]:
         e = load(spark, sf_dir, "events")
         sec = F.floor(F.unix_timestamp("ts")).cast("long")
         lo, hi = e.agg(F.min(sec), F.max(sec)).first()
@@ -501,9 +488,9 @@ def _agg_snapshot(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
             )
             .write.parquet(path)
         )
-        snap = (path, cutoff)
-        _AGG_SNAPSHOT_CACHE[key] = snap
-    return snap
+        return path, cutoff
+
+    return session_artifact(spark, sf_dir, "agg_snapshot", build)
 
 
 @register(

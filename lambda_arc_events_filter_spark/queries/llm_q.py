@@ -10,11 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from lambda_arc_events_filter_spark.cache import (
-    bless_resident,
-    bounded_put,
-    release_plans_for,
-)
+from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load, values_relation
 from lambda_arc_events_filter_spark.functions.exact import (
     round_int_ratio,
@@ -39,48 +35,48 @@ from lambda_arc_events_filter_spark.registry import register
 # Dedup family (B60, B61)
 # ---------------------------------------------------------------------------
 
-#: Shared corpus postings index: (applicationId, sf_dir) → localCheckpointed
-#: (_id, _blk, sk, _n) shingle-postings relation.  The inverted index is a
-#: CORPUS ARTIFACT every shingle-dedup query probes (exact Jaccard, MinHash
-#: LSH, capped LSH) — build-once/probe-many, the same split
-#: ``ivf_build_index`` uses on the embedding side and what a resident
-#: engine amortizes across its dedup passes.  Bounded: at most
-#: _POSTINGS_IDX_MAX entries (insertion order evicted first), so a
-#: long-lived session iterating over many sf_dirs cannot grow driver-side
-#: references without bound (the executor blocks themselves are released
-#: when the checkpointed DataFrame is dropped).
-_POSTINGS_IDX: dict[tuple[str, str], DataFrame] = {}
-_POSTINGS_IDX_MAX = 4
-
-
+#: Shared corpus postings index: localCheckpointed (_id, _blk, sk, _n)
+#: shingle-postings relation per (applicationId, sf_dir).  The inverted
+#: index is a CORPUS ARTIFACT every shingle-dedup query probes (exact
+#: Jaccard, MinHash LSH, capped LSH) — build-once/probe-many, the same
+#: split ``_ivf_index`` uses on the embedding side and what a resident
+#: engine amortizes across its dedup passes.
 def _postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lambda_arc_events_filter_spark.queries.postings import (
         build_postings_index,
     )
 
-    return build_postings_index(
-        spark, sf_dir, _POSTINGS_IDX, F.col("lang"), _POSTINGS_IDX_MAX
+    return session_artifact(
+        spark,
+        sf_dir,
+        "postings_by_lang",
+        lambda: build_postings_index(spark, sf_dir, F.col("lang")),
     )
 
 
-#: (applicationId, sf_dir) → localCheckpointed uncapped (_id, _n, minhash)
-#: signature relation — the second stored half of the MinHash index (the
-#: capped variant filters the signature INPUT, so it builds its own).
-_MINHASH_SIG_IDX: dict[tuple[str, str], DataFrame] = {}
-
-
+#: LocalCheckpointed uncapped (_id, _n, minhash) signature relation — the
+#: second stored half of the MinHash index (the capped variant filters
+#: the signature INPUT, so it builds its own).
 def _minhash_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _MINHASH_SIG_IDX.get(key)
-    if sig is None:
-        post = _postings_index(spark, sf_dir).drop("_blk")
-        sig = D.minhash_signatures(post).localCheckpoint()
-        bless_resident(sig)
-        bounded_put(
-            _MINHASH_SIG_IDX, key, sig, _POSTINGS_IDX_MAX,
-            on_evict=release_plans_for,
-        )
-    return sig
+    return session_artifact(
+        spark,
+        sf_dir,
+        "minhash_signatures",
+        lambda: D.minhash_signatures(
+            _postings_index(spark, sf_dir).drop("_blk")
+        ).localCheckpoint(),
+    )
+
+
+#: The IVF index (centroids, cell-partitioned unit corpus) over the
+#: embeddings table, built once per session (``S.ivf_build_index``).
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    return session_artifact(
+        spark,
+        sf_dir,
+        "ivf",
+        lambda: S.ivf_build_index(load(spark, sf_dir, "embeddings")),
+    )
 
 
 @register(
@@ -407,9 +403,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     built once per session and cached — the query itself is probe-only,
     as it must be at 100 TB where the index is a persisted artifact."""
     e = load(spark, sf_dir, "embeddings")
-    idx = S.ivf_build_index(
-        e, cache_key=(spark.sparkContext.applicationId, sf_dir, "embeddings")
-    )
+    idx = _ivf_index(spark, sf_dir)
     return S.ivf_topk(e.filter(F.col("vec_id") < 5), k=5, nprobe=2, index=idx)
 
 
@@ -568,9 +562,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (a double sum can flip a shortlist tie).  Recall vs
     brute force is pinned in tests/test_llm.py."""
     e = load(spark, sf_dir, "embeddings")
-    idx = S.ivfpq_build_index(
-        e,
-        cache_key=(spark.sparkContext.applicationId, sf_dir, "embeddings-pq"),
+    idx = session_artifact(
+        spark, sf_dir, "ivfpq", lambda: S.ivfpq_build_index(e)
     )
     return S.ivfpq_topk(
         e.filter(F.col("vec_id") < 5), idx, k=5, nprobe=2, shortlist=50
@@ -2894,10 +2887,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 20)
     exact = S.brute_force_topk(q, e, k=5)
-    idx = S.ivf_build_index(
-        e, cache_key=(spark.sparkContext.applicationId, sf_dir, "embeddings")
-    )
-    approx = S.ivf_topk(q, k=5, nprobe=2, index=idx)
+    approx = S.ivf_topk(q, k=5, nprobe=2, index=_ivf_index(spark, sf_dir))
     hits = exact.select("query_id", "neighbor_id").join(
         approx.select(
             "query_id", "neighbor_id", F.lit(1).alias("hit")

@@ -4,47 +4,30 @@ Two corpus artifacts share this build: the lang-BLOCKED postings
 (llm_q._postings_index — candidates never cross a language block) and
 the UNBLOCKED postings (curation_q._postings_unblocked — the _PAIR_CTE
 whole-corpus family).  They differ only in the blocking expression, so
-the build-bless-bound idiom lives here once (round-8 review: the two
-hand-copies had to be kept in sync manually).
+the build lives here once (round-8 review: the two hand-copies had to
+be kept in sync manually); each caller keeps its result as its own
+``cache.session_artifact``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from lambda_arc_events_filter_spark.cache import (
-    bless_resident,
-    bounded_put,
-    release_plans_for,
-)
 from lambda_arc_events_filter_spark.catalog import load
 from lambda_arc_events_filter_spark.operators import dedup as D
 
 
 def build_postings_index(
-    spark: SparkSession,
-    sf_dir: str,
-    cache: dict[tuple[str, str], DataFrame],
-    blk_col: Column,
-    max_entries: int = 4,
+    spark: SparkSession, sf_dir: str, blk_col: Column
 ) -> DataFrame:
-    """Build-once/probe-many (doc, block, shingle-key, set-size) index.
+    """Build the (doc, block, shingle-key, set-size) index, checkpointed.
 
-    ``cache`` is the caller's (applicationId, sf_dir)-keyed dict —
-    separate artifacts keep separate caches.  ``blk_col`` produces the
-    blocking key (``F.col("lang")`` or ``F.lit(1)``).  The checkpointed
-    relation is blessed (prepared plans may pin it) and its eviction
-    releases dependent prepared plans.
+    ``blk_col`` produces the blocking key (``F.col("lang")`` or
+    ``F.lit(1)``).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    post = cache.get(key)
-    if post is None:
-        d = D.with_tokens(load(spark, sf_dir, "documents")).withColumn(
-            "_blk", blk_col
-        )
-        post = D.shingle_postings(
-            d, "doc_id", extra_cols=("_blk",), with_sizes=True
-        ).localCheckpoint()
-        bless_resident(post)
-        bounded_put(cache, key, post, max_entries, on_evict=release_plans_for)
-    return post
+    d = D.with_tokens(load(spark, sf_dir, "documents")).withColumn(
+        "_blk", blk_col
+    )
+    return D.shingle_postings(
+        d, "doc_id", extra_cols=("_blk",), with_sizes=True
+    ).localCheckpoint()

@@ -8,6 +8,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load
 from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
 from lambda_arc_events_filter_spark.operators.range_join import banded_range_join
@@ -246,48 +247,36 @@ def range_join_library(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the LAYOUT job (at 100 TB a one-time table-maintenance pass), not part of
 # the query — round 1 re-wrote the full sink inside every execution, so the
 # bench measured write throughput instead of the pruned read it exists to
-# demonstrate (178× the read-only DuckDB oracle).  Bounded FIFO
-# (cache.bounded_put); evicted paths are scratch dirs cleaned at exit.
-_PART_SINK_CACHE: dict[tuple, str] = {}
-_PART_SINK_CACHE_MAX = 8
-
-
+# demonstrate (178× the read-only DuckDB oracle).
 def _partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
-    from lambda_arc_events_filter_spark.cache import bounded_put
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _PART_SINK_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("pq_part")
         load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
             "event_type"
         ).parquet(path)
-        bounded_put(_PART_SINK_CACHE, key, path, _PART_SINK_CACHE_MAX)
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "partitioned_events", build)
 
 
 #: One-file parquet copy of the 4-row wanted-types dim, written once per
-#: session: a file-source dim keeps the selective filter visible to the
-#: DPP rule (a VALUES LocalRelation folds it away) while its broadcast
-#: build is a 1-task scan instead of createDataFrame's 32-slice RDD job.
-_DPP_DIM_CACHE: dict[str, str] = {}
-
-
-def _dpp_dim_path(spark: SparkSession) -> str:
-    from lambda_arc_events_filter_spark.cache import bounded_put
+#: (session, sf_dir): a file-source dim keeps the selective filter visible
+#: to the DPP rule (a VALUES LocalRelation folds it away) while its
+#: broadcast build is a 1-task scan instead of createDataFrame's 32-slice
+#: RDD job.
+def _dpp_dim_path(spark: SparkSession, sf_dir: str) -> str:
     from lambda_arc_events_filter_spark.catalog import values_relation
 
-    key = spark.sparkContext.applicationId
-    path = _DPP_DIM_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("pq_dim")
         values_relation(
             spark,
             [("view", 1), ("purchase", 1), ("click", 0), ("scroll", 0)],
             "event_type string, keep int",
         ).coalesce(1).write.mode("overwrite").parquet(path)
-        bounded_put(_DPP_DIM_CACHE, key, path, _PART_SINK_CACHE_MAX)
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "dpp_dim", build)
 
 
 @register(
@@ -334,7 +323,7 @@ def partitioned_sink_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TABLE with a pushed filter).
     wanted = (
         spark.read.schema("event_type string, keep int")
-        .parquet(_dpp_dim_path(spark))
+        .parquet(_dpp_dim_path(spark, sf_dir))
         .filter(F.col("keep") == 1)
     )
     return (
@@ -352,14 +341,11 @@ def partitioned_sink_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partitioned-sink fixture above: bucketing is a LAYOUT decision made at
 # ingest time (a one-time table-maintenance pass at 100 TB), not part of
 # the query being measured.
-_BUCKET_CACHE: dict[tuple, tuple[str, str]] = {}
 _BUCKETS = 8
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tables = _BUCKET_CACHE.get(key)
-    if tables is None:
+    def build() -> tuple[str, str]:
         suffix = uuid.uuid4().hex[:6]
         o_name, l_name = f"orders_bkt_{suffix}", f"lineitem_bkt_{suffix}"
         # repartition(N, key) uses the same Murmur3 hash-mod as the bucket
@@ -383,9 +369,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .option("path", readers.scratch_dir("bkt_lineitem"))
             .saveAsTable(l_name)
         )
-        tables = (o_name, l_name)
-        _BUCKET_CACHE[key] = tables
-    return tables
+        return o_name, l_name
+
+    return session_artifact(spark, sf_dir, "bucketed_tables", build)
 
 
 @register(
@@ -429,17 +415,13 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Small-files fixture: events written as 64 tiny parquet files (once per
 # session) — the shape a streaming sink or over-parallel writer leaves
 # behind, which compaction exists to repair.
-_SMALL_FILES_CACHE: dict[tuple, str] = {}
-
-
 def _small_files_events(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SMALL_FILES_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("events_small")
         load(spark, sf_dir, "events").repartition(64).write.parquet(path)
-        _SMALL_FILES_CACHE[key] = path
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "small_files_events", build)
 
 
 def compact_parquet_dir(
@@ -501,13 +483,8 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
 
 # Write-once sorted copy of events (clustered layout), same cache pattern
 # as the partitioned/bucketed fixtures above.
-_SORTED_CACHE: dict[tuple, str] = {}
-
-
 def _sorted_events_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SORTED_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("events_sorted")
         # range-partition + in-partition sort on the cluster key: each
         # parquet file (and row group) covers a narrow user_id range, so
@@ -519,8 +496,9 @@ def _sorted_events_path(spark: SparkSession, sf_dir: str) -> str:
             .sortWithinPartitions("user_id")
             .write.parquet(path)
         )
-        _SORTED_CACHE[key] = path
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "sorted_events", build)
 
 
 @register(

@@ -20,6 +20,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import SCHEMAS, load
 from lambda_arc_events_filter_spark.registry import register
 from lambda_arc_events_filter_spark.sources import readers
@@ -398,19 +399,15 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Write-once sharded copy of events (4 ts-range parquet files) so the
 # availableNow replay below yields multiple micro-batches — one file per
 # trigger — and the upsert sink's merge path is actually exercised.
-_SHARDED_EVENTS_CACHE: dict[tuple, str] = {}
-
-
 def _sharded_events_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SHARDED_EVENTS_CACHE.get(key)
-    if path is None:
+    def build() -> str:
         path = readers.scratch_dir("events_shards")
         load(spark, sf_dir, "events").repartitionByRange(
             4, "ts"
         ).write.parquet(path)
-        _SHARDED_EVENTS_CACHE[key] = path
-    return path
+        return path
+
+    return session_artifact(spark, sf_dir, "sharded_events", build)
 
 
 @register(

@@ -36,44 +36,32 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from lambda_arc_events_filter_spark.cache import (
-    bless_resident,
-    bounded_put,
-    release_plans_for,
-)
+from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load
-
-_TF_IDX: dict[tuple[str, str], DataFrame] = {}
-_VOCAB_IDX: dict[tuple[str, str], DataFrame] = {}
-_TOTALS_IDX: dict[tuple[str, str], DataFrame] = {}
-_IDX_MAX = 4
 
 
 def tf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached ``(doc_id, term, tf)`` over the documents corpus
     (whitespace tokenization, identical to operators/dedup.with_tokens)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tf = _TF_IDX.get(key)
-    if tf is None:
-        tf = (
+
+    def build() -> DataFrame:
+        return (
             load(spark, sf_dir, "documents")
             .select("doc_id", F.explode(F.split("text", " ")).alias("term"))
             .groupBy("doc_id", "term")
             .agg(F.count(F.lit(1)).alias("tf"))
             .localCheckpoint()
         )
-        tf = bless_resident(tf)
-        bounded_put(_TF_IDX, key, tf, _IDX_MAX, on_evict=release_plans_for)
-    return tf
+
+    return session_artifact(spark, sf_dir, "tf_index", build)
 
 
 def corpus_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached 1-row ``(n_docs, n_tokens)`` corpus totals
     (n_docs over the documents table itself, so docs that tokenize to
     nothing still count — matching ``count(DISTINCT doc_id)`` oracles)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    t = _TOTALS_IDX.get(key)
-    if t is None:
+
+    def build() -> DataFrame:
         n_docs = (
             load(spark, sf_dir, "documents")
             .agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -81,9 +69,9 @@ def corpus_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tokens = tf_index(spark, sf_dir).agg(
             F.sum("tf").cast("bigint").alias("n_tokens")
         )
-        t = bless_resident(n_docs.crossJoin(n_tokens).localCheckpoint())
-        bounded_put(_TOTALS_IDX, key, t, _IDX_MAX, on_evict=release_plans_for)
-    return t
+        return n_docs.crossJoin(n_tokens).localCheckpoint()
+
+    return session_artifact(spark, sf_dir, "corpus_totals", build)
 
 
 def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,9 +82,8 @@ def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``idf`` — ln((1 + n_docs) / (1 + df)) + 1 (smoothed, sklearn form)
     - ``lp``  — ln(cf / n_tokens), the corpus unigram-LM log-probability
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    v = _VOCAB_IDX.get(key)
-    if v is None:
+
+    def build() -> DataFrame:
         base = (
             tf_index(spark, sf_dir)
             .groupBy("term")
@@ -105,7 +92,7 @@ def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("tf").alias("cf"),
             )
         )
-        v = (
+        return (
             base.crossJoin(F.broadcast(corpus_totals(spark, sf_dir)))
             .select(
                 "term",
@@ -119,6 +106,5 @@ def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        v = bless_resident(v)
-        bounded_put(_VOCAB_IDX, key, v, _IDX_MAX, on_evict=release_plans_for)
-    return v
+
+    return session_artifact(spark, sf_dir, "vocab_stats", build)

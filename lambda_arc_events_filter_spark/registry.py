@@ -209,84 +209,7 @@ def _ensure_loaded() -> None:
     from lambda_arc_events_filter_spark import queries as _q  # noqa: F401
 
 
-# The driver's correctness gate checks at most ~50 queries per round, in
-# registry order (CORRECTNESS_r01.json stopped after entry 50), so the
-# ORDER of specs() is the per-round check budget.  Rounds 1-2 pinned the
-# window by hand; that froze out queries registered after the freeze (the
-# whole round-2 C-addendum went driver-unchecked).  Now the registry
-# derives the window from the driver's own artifacts: every
-# CORRECTNESS_r*.json at the repo root records which queries round N
-# checked, so sort (a) never-checked queries first in registration order
-# (new work always lands in the window), then (b) checked queries by the
-# round they were LAST checked, oldest first (stale greens get re-verified
-# before fresh ones — fixtures mutate between rounds, so old signal
-# decays).  Self-maintaining: when the driver writes CORRECTNESS_r03.json,
-# round 4's ordering updates automatically.
-def _driver_checked() -> tuple[dict[str, int], set[str]]:
-    """(name → latest round checked, names red in their LATEST check).
-
-    A red result (any matcher false, or an error other than the
-    by-design ``no_oracle``) must re-enter the next window even though it
-    WAS checked — otherwise a fixed red would sort behind every
-    never-checked query and could sit unverified for a round (the
-    guarantee the old hand-frozen window encoded explicitly).
-    """
-    import json
-    from pathlib import Path
-
-    last: dict[str, int] = {}
-    red: set[str] = set()
-    root = Path(__file__).resolve().parent.parent
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            rnd = int(f.stem.rsplit("_r", 1)[1])
-            results = json.loads(f.read_text())
-        except (ValueError, OSError, json.JSONDecodeError):
-            continue
-        for name, res in results.items():
-            if rnd < last.get(name, 0):
-                continue
-            last[name] = rnd
-            is_red = False
-            if isinstance(res, dict):
-                matchers = [
-                    res.get("rows_match"),
-                    res.get("schema_match"),
-                    res.get("hash_match"),
-                ]
-                err = res.get("err")
-                is_red = any(m is False for m in matchers) or (
-                    err not in (None, "no_oracle")
-                )
-            red.discard(name)
-            if is_red:
-                red.add(name)
-    return last, red
-
-
-_LAST_CHECKED, _LAST_RED = _driver_checked()
-
-
-def _priority(name: str) -> tuple[int, int]:
-    # (0, _) = red in its latest driver check → must re-verify first;
-    # (1, _) = never driver-checked → head of the window, registration
-    # order; (1 + round, _) = green in that round → stalest first.
-    if name in _LAST_RED:
-        return (0, 0)
-    return (1 + _LAST_CHECKED.get(name, 0), 0)
-
-
 def specs() -> dict[str, QuerySpec]:
+    """Every registered query, in registration order."""
     _ensure_loaded()
-    order = sorted(
-        enumerate(_REGISTRY), key=lambda t: (_priority(t[1]), t[0])
-    )
-    return {name: _REGISTRY[name] for _, name in order}
-
-
-def all_queries() -> dict[str, QueryFn]:
-    return {name: s.fn for name, s in specs().items()}
-
-
-def all_oracles() -> dict[str, str]:
-    return {name: s.oracle for name, s in specs().items() if s.oracle is not None}
+    return dict(_REGISTRY)

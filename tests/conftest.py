@@ -19,40 +19,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 os.environ.setdefault("SPARK_GRAFT_DEDUP_PARTITIONS", "4")
 
 
-def _slow_nodeids() -> frozenset[str]:
-    """Node-ids measured >= 1.0 s (tests/slow_tests.txt — regenerate with
-    tools/mark_slow.py).  The default tier deselects them (pytest.ini
-    ``-m "not slow"``) so the driver's verify-window run finishes; the
-    full suite runs at round close with ``-m "slow or not slow"``."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "slow_tests.txt")
-    try:
-        with open(path) as f:
-            return frozenset(
-                line.strip()
-                for line in f
-                if line.strip() and not line.startswith("#")
-            )
-    except OSError:
-        return frozenset()
-
-
-def pytest_collection_modifyitems(config, items):
-    slow = _slow_nodeids()
-    if not slow:
-        return
-    for item in items:
-        if item.nodeid in slow:
-            item.add_marker(pytest.mark.slow)
-
-
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        "tests",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-        extra_conf=fixture_conf(),
-    )
-    yield s
+    yield get_spark("tests", extra_conf=fixture_conf())
 
 
 @pytest.fixture(scope="session")

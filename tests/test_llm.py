@@ -248,10 +248,9 @@ def test_ann_recall_matches_operator_intersection(spark, sf_dir):
     exact = {}
     for r in S.brute_force_topk(q, e, k=5).collect():
         exact.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    idx = S.ivf_build_index(
-        e,
-        cache_key=(spark.sparkContext.applicationId, sf_dir, "embeddings"),
-    )
+    from lambda_arc_events_filter_spark.queries.llm_q import _ivf_index
+
+    idx = _ivf_index(spark, sf_dir)
     approx = {}
     for r in S.ivf_topk(q, k=5, nprobe=2, index=idx).collect():
         approx.setdefault(r["query_id"], set()).add(r["neighbor_id"])

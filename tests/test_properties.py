@@ -466,43 +466,6 @@ def test_custom_pyds_handles_nanos_timestamps(spark, tmp_path):
     ]
 
 
-def test_registry_window_reprioritizes_reds(tmp_path, monkeypatch):
-    """A query red in its latest driver check must sort AHEAD of
-    never-checked queries; greens sort stalest-first behind them."""
-    import json
-
-    from lambda_arc_events_filter_spark import registry as R
-
-    art = {
-        "green_r1": {"rows_match": True, "schema_match": True,
-                     "hash_match": True, "err": None},
-        "red_r1": {"rows_match": True, "schema_match": True,
-                   "hash_match": False, "err": None},
-        "rows_only_r1": {"rows_match": None, "schema_match": None,
-                         "hash_match": None, "err": "no_oracle"},
-        "fixed_r2": {"rows_match": False, "schema_match": True,
-                     "hash_match": False, "err": None},
-    }
-    art2 = {
-        "fixed_r2": {"rows_match": True, "schema_match": True,
-                     "hash_match": True, "err": None},
-    }
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(art))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(art2))
-
-    real_glob = R.Path.glob if hasattr(R, "Path") else None  # noqa: F841
-    import pathlib
-
-    monkeypatch.setattr(
-        pathlib.Path, "resolve", lambda self: tmp_path / "pkg" / "x.py",
-        raising=False,
-    )
-    last, red = R._driver_checked()
-    assert red == {"red_r1"}, red
-    assert last["fixed_r2"] == 2  # green in its LATEST check
-    assert last["rows_only_r1"] == 1  # no_oracle is not red
-
-
 def test_funnel_steps_monotonically_shrink(spark, sf_dir):
     """Ordered-funnel invariant: each step's user count is at most the
     previous step's (a user cannot convert without entering)."""

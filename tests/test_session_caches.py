@@ -1,8 +1,9 @@
-"""Session-cache invariants: the bounded driver-side caches behind the
-corpus indexes (postings, tf/lexicon, band bounds) must be build-once per
-(application, sf_dir) and FIFO-bounded — an unbounded cache is a driver
-leak on a long-lived session, and a cache that misses on repeat calls
-silently re-runs the index build it exists to amortize."""
+"""Session-cache invariants: the session-artifact store behind the corpus
+indexes and layout paths (postings, tf/lexicon, IVF, written copies) and
+the band-bounds cache must be build-once per (application, sf_dir) and
+FIFO-bounded — an unbounded cache is a driver leak on a long-lived
+session, and a cache that misses on repeat calls silently re-runs the
+index build it exists to amortize."""
 
 from __future__ import annotations
 
@@ -201,8 +202,8 @@ def test_view_name_plans_are_never_cached(spark, sf_dir):
 
 def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     """Blessing-lifecycle adversarial path (VERDICT r8 ask #5): force a
-    blessed tf index out of its bound-4 cache through the REAL runtime
-    eviction path (four further bounded_put insertions — alternate path
+    blessed tf index out of the bound-4 artifact store through the REAL
+    runtime eviction path (four further group insertions — alternate path
     SPELLINGS of the same fixture dir, distinct keys, all readable), then
     assert (a) every dependent prepared plan of that (app, sf_dir) is
     dropped with it — coupled eviction at runtime, not just the unit-level
@@ -210,6 +211,7 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     value-matches its DuckDB oracle."""
     import os
 
+    from lambda_arc_events_filter_spark import cache as C
     from lambda_arc_events_filter_spark import registry as R
     from lambda_arc_events_filter_spark.queries import text_index as TI
     from lambda_arc_events_filter_spark.testing import (
@@ -224,7 +226,7 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
 
     spec.fn(spark, sf_dir).collect()
     assert plan_key in R._PLAN_CACHE
-    idx_before = TI._TF_IDX[idx_key]
+    idx_before = C._ARTIFACTS[idx_key]["tf_index"]
 
     head, tail = os.path.dirname(sf_dir), os.path.basename(sf_dir)
     spellings = [
@@ -238,7 +240,7 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
         TI.tf_index(spark, alt)
 
     # (a) index evicted AND its dependent prepared plans released
-    assert idx_key not in TI._TF_IDX
+    assert idx_key not in C._ARTIFACTS
     assert plan_key not in R._PLAN_CACHE
     assert not any(k[:2] == idx_key for k in R._PLAN_CACHE)
 
@@ -246,5 +248,90 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     con = duck_connection(sf_dir)
     assert check_query(spec, spark, con, sf_dir) == []
     con.close()
-    assert TI._TF_IDX[idx_key] is not idx_before
+    assert C._ARTIFACTS[idx_key]["tf_index"] is not idx_before
     assert plan_key in R._PLAN_CACHE
+
+
+def test_session_artifact_builds_once(spark):
+    """(a) A repeat call serves the stored object; ``build`` runs once."""
+    from lambda_arc_events_filter_spark.cache import session_artifact
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    first = session_artifact(spark, "/sf/build-once", "thing", build)
+    assert session_artifact(spark, "/sf/build-once", "thing", build) is first
+    assert len(calls) == 1
+
+
+def test_fifth_group_evicts_oldest_artifacts_and_plans(spark, monkeypatch):
+    """(b) A fifth (app, sf_dir) group evicts the oldest group: all its
+    artifacts and all its prepared plans go together; the other groups'
+    artifacts and plans stay."""
+    from lambda_arc_events_filter_spark import cache as C
+
+    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    app = spark.sparkContext.applicationId
+    sink: dict = {(app, f"/sf/{i}", "q"): object() for i in range(5)}
+    C.PLAN_CACHE_SINKS.append(sink)
+    try:
+        for i in range(4):
+            C.session_artifact(spark, f"/sf/{i}", "a", lambda: "A")
+            C.session_artifact(spark, f"/sf/{i}", "b", lambda: "B")
+        assert len(C._ARTIFACTS) == 4
+        C.session_artifact(spark, "/sf/4", "a", lambda: "A")
+        assert (app, "/sf/0") not in C._ARTIFACTS
+        assert (app, "/sf/0", "q") not in sink
+        for i in range(1, 5):
+            assert (app, f"/sf/{i}") in C._ARTIFACTS
+            assert (app, f"/sf/{i}", "q") in sink
+        assert C._ARTIFACTS[(app, "/sf/1")] == {"a": "A", "b": "B"}
+    finally:
+        C.PLAN_CACHE_SINKS.remove(sink)
+
+
+def test_session_artifact_blesses_dataframes_only(spark, monkeypatch):
+    """(c) A DataFrame value (alone or in a tuple) is blessed as
+    session-resident; a path value leaves the blessings untouched."""
+    from lambda_arc_events_filter_spark import cache as C
+
+    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    app = spark.sparkContext.applicationId
+    before = dict(C.RESIDENT_RDD_IDS)
+    C.session_artifact(spark, "/sf/bless", "path", lambda: "/tmp/x")
+    C.session_artifact(spark, "/sf/bless", "paths", lambda: ("/tmp/x", 3))
+    assert C.RESIDENT_RDD_IDS == before
+
+    df = C.session_artifact(
+        spark, "/sf/bless", "df", lambda: spark.range(3).localCheckpoint()
+    )
+    pair = C.session_artifact(
+        spark,
+        "/sf/bless",
+        "pair",
+        lambda: (spark.range(2).localCheckpoint(), "/tmp/y"),
+    )
+    for frame in (df, pair[0]):
+        ids = C.rdd_scan_ids(frame._jdf.queryExecution().logical())
+        assert ids and C.is_blessed(app, ids)
+
+
+def test_layout_path_cache_is_bounded(spark, sf_dir, monkeypatch):
+    """(d) A layout path that used to live in an unbounded module dict
+    (``lakehouse_q._evolved_orders_path``) is now kept in the bounded
+    store and evicted with its group."""
+    from lambda_arc_events_filter_spark import cache as C
+    from lambda_arc_events_filter_spark.queries import lakehouse_q as L
+
+    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    key = (spark.sparkContext.applicationId, sf_dir)
+    path = L._evolved_orders_path(spark, sf_dir)
+    assert L._evolved_orders_path(spark, sf_dir) == path
+    assert C._ARTIFACTS[key]["evolved_orders"] == path
+    for i in range(C._ARTIFACT_GROUPS):
+        C.session_artifact(spark, f"/sf/{i}", "other", lambda: None)
+    assert key not in C._ARTIFACTS
+    assert len(C._ARTIFACTS) == C._ARTIFACT_GROUPS
