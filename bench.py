@@ -1,7 +1,7 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints two JSON lines: a detail line, then the contract line
+  {"metric": "...", "value": N, "unit": "sec", "ratio": R, ...}
 
 The driver runs this per-round (BENCH_r{N}.json) against BASELINE.md.
 Timing = full query wall-clock including result collection.  Protocol:
@@ -15,33 +15,30 @@ poisoning even the median (seen: 0.25 s query → 5.4 s "median" — every
 rep slow).  A query's rescue rep runs ~10 s of other work later, outside
 the window, so the minimum reflects the engine, not the neighbor.
 
-Canary protocol / how to READ a recording (r10-r12 rules, consolidated
-here so a fresh round does not rediscover them):
+The headline comparison is SAME-SESSION: before the Spark JVM starts,
+the DuckDB oracle of every selected query runs through
+``testing.duck_connection`` (one warm run, then the median of 3,
+materialized with ``fetchdf``).  Both engines run on the same host
+minutes apart, so ``ratio = value / duck_total`` (both totals summed
+over the same query set) needs no frozen recording and no normalizer.
+``value`` (raw wall) stays the headline number;
+``compute_only_total`` and the per-query compute-only maps subtract the
+measured local-mode dispatch/collect floor.  The detail line lists the
+WEAK queries, ``compute_only[q] / duck[q] >= 2.0`` (BASELINE.md round-13
+rule); ``python bench.py NAME ...`` classifies just the named queries
+(``BENCH_REPS=6`` matches the six reps that rule was measured with).
+The contract line also reports ``cpus_effective`` and
+``shuffle_partitions`` as read from the live session.
 
-- Run on an otherwise-quiet host, NEVER with another Spark/DuckDB
-  process alive (a concurrent probe triples medians; seen 1.4 -> 10.5 s).
-- Two DISJOINT DuckDB canary sets run same-session and each yields a
-  host normalizer vs BASELINE_NUMBERS.json.  ``canary_split_pct`` is
-  their disagreement; ``disturbed: true`` (split > 10%) means the host
-  was disturbed DURING recording and the normalized reading is a band,
-  not a point — re-record rather than interpret.  Four r12 attempts
-  were auto-rejected at splits 360-462% (host throttling of
-  multi-threaded DuckDB); the valid one agreed at 5.2%.
-- ``value`` (raw wall) is the headline number; ``normalized_total``
-  rescales it to the baseline-recording host; ``compute_only_total``
-  and the per-query compute-only maps subtract the measured local-mode
-  dispatch/collect floor.  Per-query WEAK-LINE classification reads
-  compute-only ratios against a SAME-SESSION DuckDB re-measure
-  (tools/weakline.py; BASELINE.md round-13 note), not the frozen
-  recording — sub-100 ms recorded denominators carry enough protocol
-  noise to flap a borderline query across the 2x line with zero code
-  change (seen r11->r12 on four queries).
+Run on an otherwise-quiet host, NEVER with another Spark/DuckDB process
+alive (a concurrent probe triples medians; seen 1.4 -> 10.5 s).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -151,91 +148,24 @@ def _materialize(name: str, df) -> None:
         df.collect()
 
 
-#: Same-session DuckDB canary (VERDICT r8 ask #1).  Session-to-session host
-#: variance (~1.3×, observed up to 1.8× between the driver's recording and a
-#: same-tree local run) is the biggest error bar on the headline ratio the
-#: gate reads.  Re-running a small DuckDB reference subset IN THIS SESSION
-#: calibrates it out: host_normalizer = (canary wall now) / (canary wall when
-#: BASELINE_NUMBERS.json was recorded), and normalized_total = value /
-#: host_normalizer is the Spark total as-if run on the baseline-recording
-#: host.  The subset mixes q01 with the three largest stable DuckDB line
-#: items (~3.4 s of the 6.9 s recorded total) so the calibration signal
-#: dwarfs per-query timer noise.
-_CANARY = (
-    "q01_pricing_summary",
-    "tokens_bpe_merge_rounds",
-    "dedup_minhash_lsh",
-    "join_range_theta",
-)
-
-#: Second, DISJOINT canary set (r9 verdict ask #8): if a DuckDB-side plan
-#: change, fixture quirk, or cache effect skews one canary query, the two
-#: normalizers diverge and the artifact shows it — a single-set canary
-#: would silently fold the skew into every normalized ratio.  Both sets
-#: are emitted; ``host_normalizer`` (the gate input) stays the primary
-#: set for cross-round continuity, ``host_normalizer_b`` is the
-#: cross-check (~1.9 s of recorded DuckDB mass: the #2/#3/#6 line items).
-_CANARY_B = (
-    "dedup_prefix_cosine_pairs",
-    "semdedup_cluster_prune",
-    "dedup_ngram_jaccard",
-    "text_rake_keyphrases",
-)
-
-
-def _duck_canary(sf_dir: str, all_specs, names=_CANARY) -> dict | None:
-    """Run the canary oracles through DuckDB (same protocol as
-    tools/baseline.py: warm + median of 3, pandas materialization) and
-    return per-query seconds plus the normalizer vs BASELINE_NUMBERS.json.
-    Returns None — normalization skipped, never faked — when the recorded
-    file is missing or was recorded at a different scale factor."""
-    import statistics
-
+def _duck_times(sf_dir: str, all_specs, names) -> dict[str, float]:
+    """Per-query DuckDB seconds for the oracles of ``names``: one warm
+    run, then the median of 3, materialized with ``fetchdf``."""
     from lambda_arc_events_filter_spark.testing import duck_connection
 
-    root = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(root, "BASELINE_NUMBERS.json")) as f:
-            recorded = json.load(f)
-    except (OSError, ValueError):
-        return None
-    if os.path.normpath(recorded.get("sf_dir", "")) != os.path.normpath(
-        sf_dir
-    ):
-        return None
-    rec_q = recorded.get("queries", {})
-    if any(n not in rec_q for n in names):
-        return None
-    # Any canary-side failure (fixture drift, DuckDB error, corrupt
-    # recording) degrades to canary=None — it must never take down the
-    # Spark bench whose artifact is the round's contract.
-    try:
-        con = duck_connection(sf_dir)
-        session: dict[str, float] = {}
-        for name in names:
-            spec = all_specs.get(name)
-            if spec is None or spec.oracle is None:
-                return None
-            con.sql(spec.oracle).fetchdf()  # warm
-            reps = []
-            for _ in range(3):
-                t0 = time.time()
-                con.sql(spec.oracle).fetchdf()
-                reps.append(time.time() - t0)
-            session[name] = round(statistics.median(reps), 4)
-        con.close()
-        recorded_total = round(sum(rec_q[n] for n in names), 4)
-        if not recorded_total > 0:
-            return None
-        session_total = round(sum(session.values()), 4)
-        return {
-            "queries": session,
-            "session_total": session_total,
-            "recorded_total": recorded_total,
-            "host_normalizer": round(session_total / recorded_total, 4),
-        }
-    except Exception:  # noqa: BLE001
-        return None
+    con = duck_connection(sf_dir)
+    duck: dict[str, float] = {}
+    for name in names:
+        oracle = all_specs[name].oracle
+        con.sql(oracle).fetchdf()  # warm
+        reps = []
+        for _ in range(3):
+            t0 = time.time()
+            con.sql(oracle).fetchdf()
+            reps.append(time.time() - t0)
+        duck[name] = round(statistics.median(reps), 4)
+    con.close()
+    return duck
 
 
 def _measure_floor(spark) -> dict[str, float]:
@@ -263,21 +193,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     all_specs = specs()
-    # DuckDB canary BEFORE the Spark JVM exists: both engines use every
-    # core, and calibration must not be polluted by the other engine's
-    # warm-up running concurrently.  Skipped on filtered local-iteration
-    # runs — the normalizer is only meaningful against the full headline
-    # total, and the ~3.5 s canary would tax every iteration loop.
-    canary = _duck_canary(sf_dir, all_specs) if len(sys.argv) <= 1 else None
-    canary_b = (
-        _duck_canary(sf_dir, all_specs, _CANARY_B)
-        if len(sys.argv) <= 1
-        else None
-    )
-    spark = get_spark("bench", extra_conf=fixture_conf())
     names = [n for n in HEADLINE if n in all_specs]
     if len(sys.argv) > 1:  # optional substring filter for local iteration
         names = [n for n in names if any(f in n for f in sys.argv[1:])]
+    # DuckDB BEFORE the Spark JVM exists: both engines use every core,
+    # and neither may share the host with the other's warm-up.
+    duck = _duck_times(sf_dir, all_specs, names)
+    spark = get_spark("bench", extra_conf=fixture_conf())
     # Result materialization: see _ARROW_RESULTS — Arrow→pandas for large
     # results, plain collect for small ones.
     #
@@ -288,8 +210,8 @@ def main() -> None:
     # decode) are compiled — without this, whichever queries run FIRST
     # absorb the compile time into their minima (measured: q01 first-in-
     # list 0.32 s vs 0.20 s hot; agg_stats 0.85 vs 0.50).  The DuckDB
-    # baseline is recorded warm-cache/median-of-3 under the same
-    # residency assumption (tools/baseline.py, BASELINE.md protocol).
+    # side above is measured warm/median-of-3 under the same residency
+    # assumption (BASELINE.md protocol).
     for name in names:
         _materialize(name, all_specs[name].fn(spark, sf_dir))
     reps: dict[str, list[float]] = {n: [] for n in names}
@@ -318,9 +240,9 @@ def main() -> None:
         )
         for n in names
     }
-    # Two lines: a DETAIL line first (per-query compute-only seconds,
-    # per-path floors, arrow-result list — everything a human or a later
-    # tool wants), then the driver-contract line LAST.  The driver
+    # Two lines: a DETAIL line first (per-query compute-only and DuckDB
+    # seconds, weak list, floors, arrow list — everything a human or a
+    # later tool wants), then the driver-contract line LAST.  The driver
     # captures only the final ~2000 chars of stdout and json-parses the
     # last line; rounds 4-5 lost their machine-readable artifact
     # ("parsed": null) because one combined line outgrew that window as
@@ -333,8 +255,9 @@ def main() -> None:
     detail = {
         "detail": True,
         "floor": floors,
-        "duck_canary": canary,
-        "duck_canary_b": canary_b,
+        "duck": duck,
+        # BASELINE.md round-13 weak line: compute-only >= 2x DuckDB
+        "weak": [n for n in names if compute_only[n] >= 2.0 * duck[n]],
         "queries_compute_only": compute_only,
         # result materialization is per-query (Arrow→pandas for
         # >10k-row results, plain collect otherwise — see
@@ -344,15 +267,21 @@ def main() -> None:
     print(json.dumps(detail, separators=(",", ":")))
     print(
         contract_line(
-            timings, total, compute_only, sf, canary, canary_b,
+            timings, total, compute_only, sf, duck,
             floors=floors, arrow=_ARROW_RESULTS & set(names),
+            parallelism={
+                "cpus_effective": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(
+                    spark.conf.get("spark.sql.shuffle.partitions")
+                ),
+            },
         )
     )
 
 
 def contract_line(
-    timings, total, compute_only, sf, canary=None, canary_b=None,
-    floors=None, arrow=None,
+    timings, total, compute_only, sf, duck, floors=None, arrow=None,
+    parallelism=None,
 ) -> str:
     """The driver-contract JSON line: guaranteed ≤1800 chars.
 
@@ -365,10 +294,11 @@ def contract_line(
     − floor[path(q)]).  The explicit ``queries_compute_only`` map is
     also emitted when it fits (filtered/local runs); at the full
     39-query headline two maps exceed the budget, so the ladder drops
-    it first, then wall precision, then all maps (keeping
-    metric/value/unit/sf/compute_only_total/floor) — the line can NEVER
+    it first, then wall precision, then all maps (keeping the totals,
+    ``ratio``, ``floor`` and the parallelism fields) — the line can NEVER
     overflow the driver's ~2000-char tail window, and the detail line
     above always carries the full 4-decimal versions of both maps."""
+    duck_total = round(sum(duck[n] for n in timings), 4)
     base = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -378,6 +308,10 @@ def contract_line(
         # (detail line carries the per-query breakdown); "value" stays
         # the honest wall total.
         "compute_only_total": round(sum(compute_only.values()), 4),
+        # same-session DuckDB total over the SAME query set (a query
+        # without a DuckDB reading is a KeyError, never a skewed ratio)
+        "duck_total": duck_total,
+        "ratio": round(total / duck_total, 4),
     }
     if floors is not None:
         # per-path dispatch/collect floors + the toPandas-path query
@@ -386,32 +320,9 @@ def contract_line(
         # compute-only map degrades out of the budget below
         base["floor"] = floors
         base["arrow"] = sorted(arrow or ())
-    if canary is not None:
-        # Same-session host calibration (see _CANARY): normalized_total is
-        # "value" rescaled to the BASELINE_NUMBERS-recording host's speed.
-        # "value" is untouched — raw wall stays the headline number.
-        base["host_normalizer"] = canary["host_normalizer"]
-        base["normalized_total"] = round(
-            total / canary["host_normalizer"], 4
-        )
-    if canary_b is not None:
-        # Disjoint second canary set (r9 ask #8): a cross-check only —
-        # the gate keeps reading host_normalizer; divergence between the
-        # two flags a DuckDB-side skew in one set.
-        base["host_normalizer_b"] = canary_b["host_normalizer"]
-    if canary is not None and canary_b is not None:
-        # Self-reported validity (r10 verdict ask #2): BASELINE.md's
-        # round-10 stability rule — a >10% split between the two
-        # independent canary normalizers means the host was disturbed
-        # during recording and the normalized reading is a band, not a
-        # point.  BENCH_r10 was recorded with a 21% split and nothing in
-        # the artifact said so; now the reading rule lives IN the
-        # artifact.
-        a = canary["host_normalizer"]
-        b = canary_b["host_normalizer"]
-        split = round(abs(a - b) / min(a, b) * 100, 1)
-        base["canary_split_pct"] = split
-        base["disturbed"] = split > 10.0
+    if parallelism is not None:
+        # the cores and shuffle width the live session actually used
+        base.update(parallelism)
     wall3 = {n: round(t, 3) for n, t in timings.items()}
     wall2 = {n: round(t, 2) for n, t in timings.items()}
     co3 = {n: round(t, 3) for n, t in compute_only.items()}

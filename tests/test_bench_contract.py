@@ -21,10 +21,18 @@ sys.path.insert(0, {root!r})
 import bench
 
 def fake(n, t):
-    timings = {{f"q{{i:03d}}_some_rather_long_query_name": t for i in range(n)}}
+    # n == 39 is the real headline; larger sets are synthetic long names
+    names = bench.HEADLINE if n == len(bench.HEADLINE) else [
+        f"q{{i:03d}}_some_rather_long_query_name" for i in range(n)]
+    timings = {{name: t for name in names}}
     compute = {{k: t * 0.9 for k, t in timings.items()}}
+    duck = {{k: t * 0.8 for k in timings}}
     return bench.contract_line(timings, round(sum(timings.values()), 4),
-                               compute, "0.1")
+                               compute, "0.1", duck,
+                               floors={{"collect": 0.02, "toPandas": 0.05}},
+                               arrow=sorted(bench._ARROW_RESULTS),
+                               parallelism={{"cpus_effective": 4,
+                                            "shuffle_partitions": 16}})
 
 for n in (39, 200, 2000):
     line = fake(n, 0.123456)
@@ -35,9 +43,18 @@ for n in (39, 200, 2000):
     assert obj["sf"] == 0.1
     assert isinstance(obj["value"], float)
     assert isinstance(obj["compute_only_total"], float)
-    # no canary -> normalization fields honestly absent, never faked
-    assert "host_normalizer" not in obj and "normalized_total" not in obj
+    # same-session ratio: both totals over the same query set
+    assert abs(obj["ratio"] - obj["value"] / obj["duck_total"]) < 1e-3
+    assert obj["cpus_effective"] == 4 and obj["shuffle_partitions"] == 16
+    # the frozen-recording normalizer and its validity flag are gone
+    assert not {{"host_normalizer", "normalized_total", "host_normalizer_b",
+                "canary_split_pct", "disturbed"}} & set(obj)
     print(n, len(line), "queries" in obj)
+
+# every headline query has an oracle, so duck_total always sums the same
+# query set as value
+specs = bench.specs()
+assert [n for n in bench.HEADLINE if specs[n].oracle is None] == []
 
 # compute-only derivability (r12 ask #7): floor + arrow in the contract
 # line make the floor-subtracted per-query map reconstructible even when
@@ -45,11 +62,14 @@ for n in (39, 200, 2000):
 timings = {{"q_small": 0.5, "q_big_arrow": 2.0}}
 compute = {{"q_small": 0.48, "q_big_arrow": 1.95}}
 line = bench.contract_line(timings, 2.5, compute, "0.1",
+                           {{"q_small": 0.1, "q_big_arrow": 0.4}},
                            floors={{"collect": 0.02, "toPandas": 0.05}},
                            arrow=["q_big_arrow"])
 obj = json.loads(line)
 assert obj["floor"] == {{"collect": 0.02, "toPandas": 0.05}}
 assert obj["arrow"] == ["q_big_arrow"]
+assert obj["duck_total"] == 0.5 and obj["ratio"] == 5.0
+assert obj["value"] == 2.5  # raw wall untouched
 # small filtered run: the explicit compute-only map also fits
 assert obj["queries_compute_only"] == {{"q_small": 0.48, "q_big_arrow": 1.95}}
 for q in timings:
@@ -57,53 +77,6 @@ for q in timings:
     derived = max(0.0, obj["queries"][q] - fl)
     assert abs(derived - compute[q]) < 0.051  # wall-floor ~= measured
 print("floor_arrow", len(line), True)
-
-# same-session host calibration (VERDICT r8 ask #1): with a canary the
-# contract line carries host_normalizer and value-rescaled normalized_total
-timings = {{"q01": 1.0, "q02": 2.0}}
-canary = {{"queries": {{}}, "session_total": 4.2, "recorded_total": 3.0,
-          "host_normalizer": 1.4}}
-line = bench.contract_line(timings, 3.0, {{k: v for k, v in timings.items()}},
-                           "0.1", canary)
-obj = json.loads(line)
-assert obj["host_normalizer"] == 1.4
-assert abs(obj["normalized_total"] - 3.0 / 1.4) < 1e-3
-assert obj["value"] == 3.0  # raw wall untouched
-assert "host_normalizer_b" not in obj  # no second canary -> honestly absent
-print("canary", len(line), True)
-
-# disjoint second canary (r9 ask #8): cross-check normalizer only — the
-# gate input (host_normalizer / normalized_total) stays set A's
-canary_b = {{"queries": {{}}, "session_total": 3.0, "recorded_total": 2.0,
-            "host_normalizer": 1.5}}
-line = bench.contract_line(timings, 3.0, {{k: v for k, v in timings.items()}},
-                           "0.1", canary, canary_b)
-obj = json.loads(line)
-assert obj["host_normalizer"] == 1.4
-assert obj["host_normalizer_b"] == 1.5
-assert abs(obj["normalized_total"] - 3.0 / 1.4) < 1e-3
-assert set(bench._CANARY).isdisjoint(bench._CANARY_B)
-# self-reported validity (r10 verdict ask #2): |1.4-1.5|/1.4 = 7.1% —
-# inside BASELINE.md's 10% stability rule, so NOT disturbed
-assert obj["canary_split_pct"] == 7.1
-assert obj["disturbed"] is False
-print("canary_b", len(line), True)
-
-# a >10% A/B split must flag the artifact disturbed (the r10 record was
-# taken at a 21% split with no in-artifact signal — never again)
-canary_wild = {{"queries": {{}}, "session_total": 5.1, "recorded_total": 3.0,
-               "host_normalizer": 1.7}}
-line = bench.contract_line(timings, 3.0, {{k: v for k, v in timings.items()}},
-                           "0.1", canary, canary_wild)
-obj = json.loads(line)
-assert obj["canary_split_pct"] == 21.4
-assert obj["disturbed"] is True
-# single-canary runs can't compute a split: fields honestly absent
-line = bench.contract_line(timings, 3.0, {{k: v for k, v in timings.items()}},
-                           "0.1", canary)
-obj = json.loads(line)
-assert "canary_split_pct" not in obj and "disturbed" not in obj
-print("canary_split", len(line), True)
 """
 
 
@@ -117,13 +90,13 @@ def test_contract_line_parses_and_never_overflows():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     lines = [l.split() for l in out.stdout.strip().splitlines()]
-    assert ["canary"] == [l[0] for l in lines if l[0] == "canary"]
+    assert ["floor_arrow"] == [l[0] for l in lines if not l[0].isdigit()]
     # 39-query headline keeps the per-query map; a 2000-query set must
     # drop it rather than overflow the driver window
     by_n = {
         int(n): (int(length), has_q)
         for n, length, has_q in lines
-        if n not in ("canary", "canary_b", "canary_split", "floor_arrow")
+        if n.isdigit()
     }
     assert by_n[39][1] == "True"
     assert by_n[2000][1] == "False"

@@ -4,7 +4,10 @@ multimodal batch plumbing."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from lambda_arc_events_filter_spark.catalog import load
 from lambda_arc_events_filter_spark.operators import dedup as D
@@ -666,3 +669,18 @@ def test_ndcg_histogram_idcg_equals_corpus_sort(spark, sf_dir):
             idcg,
             r["idcg_at_10"],
         )
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_events_user_id_non_negative(sf_dir, scale):
+    """Fixture contract behind ts_user_similarity: its query set joins
+    ``range(50)`` in place of the oracle's ``user_id < 50`` filter, which
+    is the same set only while no user_id is negative (FIXTURES.md)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    path = os.path.join(os.path.dirname(sf_dir), scale, "events.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no {scale} fixture")
+    user_id = pq.read_table(path, columns=["user_id"]).column("user_id")
+    assert pc.min(user_id).as_py() >= 0
