@@ -1,37 +1,41 @@
 """Bounded driver-side session caches.
 
-Every artifact a query builds once per session and probes many times
-lives in ONE store, reached through ``session_artifact``: the corpus
-indexes (tf/lexicon/totals, shingle postings, MinHash signatures, IVF and
-IVF-PQ, SemDeDup) and the layout jobs' output paths (partitioned,
-bucketed, sorted, Z-ordered, ... copies of a fixture table).  The store
-maps ``(applicationId, sf_dir)`` to a group ``{name: value}``:
+Everything one application keeps for one dataset lives in ONE group,
+reached through ``session_group(applicationId, sf_dir)``:
 
-- **One bound.**  At most ``_ARTIFACT_GROUPS`` groups, oldest insertion
-  evicted first (``bounded_put``).  Keys include the application id, so a
-  dead session's entries are never served; the bound keeps a long-lived
-  driver iterating over many datasets from accumulating references
-  without limit.
-- **Whole-group eviction.**  An evicted group drops all its artifacts at
-  once, together with every prepared plan of the same
-  ``(applicationId, sf_dir)`` (``release_plans_for``): a cached plan holds
-  its index's ``LogicalRDD``, so it must not outlive the index.
-- **Blessing by value type.**  A DataFrame value, or each DataFrame in a
-  tuple value, is marked session-resident (``bless_resident``) so the
-  prepared plans of its consumers may be cached; path values are stored
-  as they are.
+- ``artifacts``: what a query builds once per session and probes many
+  times (``session_artifact``) — the corpus indexes (tf/lexicon/totals,
+  shingle postings, MinHash signatures, IVF and IVF-PQ, SemDeDup) and
+  the layout jobs' output paths (partitioned, bucketed, sorted,
+  Z-ordered, ... copies of a fixture table);
+- ``resident``: the RDD ids of the DataFrame artifacts, recorded when
+  each is built.  The registry caches a prepared plan only if every RDD
+  it scans is in this set: a resident index is the engine's architecture
+  (build once, probe many times), while any other checkpointed RDD in a
+  plan is a query-private intermediate whose reuse across executions
+  would be result caching (see ``registry._with_plan_cache``);
+- ``plans``: query name → prepared (optimized) JVM logical plan;
+- ``relations``: table → the scan DataFrame ``catalog.load`` resolves.
+
+The store holds at most ``_MAX_GROUPS`` groups, oldest insertion evicted
+first (``bounded_put``).  Keys include the application id, so a dead
+session's entries are never served (RDD ids restart at 0 with every
+SparkContext); the bound keeps a long-lived driver iterating over many
+datasets from accumulating references without limit.  An evicted group
+takes its plans with it, so no cached plan outlives the index whose
+``LogicalRDD`` it holds.
 
 Eviction only drops the driver-side reference: executor-side blocks
 (localCheckpoint RDDs) are released by the ContextCleaner once the
 DataFrame is unreachable, and evicted paths are scratch dirs cleaned at
-exit.  The other bounded caches here are the band-boundary probes
-(``band_bounds``) and the resident-RDD blessings; the prepared-plan cache
-itself lives in the registry.
+exit.  The other bounded cache here holds the band-boundary probes
+(``band_bounds``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass, field
 from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,71 +44,13 @@ K = TypeVar("K")
 V = TypeVar("V")
 
 
-def bounded_put(
-    cache: dict[K, V],
-    key: K,
-    value: V,
-    max_entries: int,
-    on_evict: Callable[[K], None] | None = None,
-) -> V:
+def bounded_put(cache: dict[K, V], key: K, value: V, max_entries: int) -> V:
     """Insert ``key → value``, evicting oldest insertions to stay under
-    ``max_entries`` (dicts preserve insertion order).  ``on_evict`` runs
-    for each evicted KEY — index caches use it to release dependent
-    prepared plans (see ``release_plans_for``)."""
+    ``max_entries`` (dicts preserve insertion order)."""
     while len(cache) >= max_entries:
-        evicted = next(iter(cache))
-        cache.pop(evicted)
-        if on_evict is not None:
-            on_evict(evicted)
+        cache.pop(next(iter(cache)))
     cache[key] = value
     return value
-
-
-#: Plan caches registered for coupled eviction: when a session INDEX is
-#: evicted from the artifact store, every prepared plan built against
-#: it must be dropped too — a cached JVM logical plan holds a strong
-#: reference to the index's LogicalRDD, and without this coupling the
-#: plan cache (bound 1024) would pin the executor blocks of indexes long
-#: after the artifact store (bound 4) let go (round-8 review finding).
-#: Entries are dicts keyed by (applicationId, sf_dir, ...) tuples.
-PLAN_CACHE_SINKS: list[dict] = []
-
-
-def release_plans_for(evicted_key) -> None:
-    """Drop every registered prepared plan whose key starts with the
-    evicted artifact group's (applicationId, sf_dir) prefix.
-
-    Deliberately coarse: plans over still-live indexes (and plans with no
-    RDD dependency) of the same sf_dir are invalidated too, each paying
-    one ~0.2 s re-preparation on its next call.  The safe direction —
-    under-caching — is chosen over per-plan dependency tracking because
-    index eviction only happens when a session cycles more sf_dirs than
-    the group bound (4), a maintenance pattern, not a serving one."""
-    if not (isinstance(evicted_key, tuple) and len(evicted_key) >= 2):
-        return
-    prefix = evicted_key[:2]
-    for sink in PLAN_CACHE_SINKS:
-        for k in [k for k in sink if k[:2] == prefix]:
-            sink.pop(k, None)
-
-
-#: Session-RESIDENT materializations (corpus indexes: the tf index, the
-#: shingle postings, the IVF index), as (applicationId, rdd id) pairs.
-#: The prepared-plan cache may only cache a plan whose RDD scans all
-#: appear here FOR THE CURRENT APPLICATION: a resident index is the
-#: engine's architecture (build once per session, probe many times —
-#: reuse is the point), while any OTHER checkpointed RDD in a query plan
-#: is a query-private intermediate whose reuse across executions is
-#: result caching and fakes the benchmark (see registry.register).  The
-#: applicationId in the key matters: RDD ids restart at 0 with every new
-#: SparkContext, so a bare-id set would let a stale blessing from a
-#: stopped session admit a new session's private checkpoint (round-8
-#: review finding).  Insertion-ordered dict → FIFO trim of the OLDEST
-#: blessings only (a live index re-blesses nothing, but FIFO can at
-#: worst demote an old index's consumers to uncached — never admit a
-#: private RDD).
-RESIDENT_RDD_IDS: dict[tuple[str, int], None] = {}
-_RESIDENT_MAX = 4096
 
 
 def _iter_plans(jplan):
@@ -113,7 +59,7 @@ def _iter_plans(jplan):
     subqueries, which would hide a LogicalRDD from the guard.  Raises if
     the subquery API is unavailable: a caller deciding CACHEABILITY must
     fail CLOSED (an unseen subquery RDD would be silently admitted —
-    fewer visible ids makes the blessing check MORE permissive)."""
+    fewer visible ids makes the resident check MORE permissive)."""
     yield jplan
     subs = jplan.subqueriesAll()
     for i in range(subs.size()):
@@ -150,53 +96,55 @@ def has_unresolved_relations(jplan) -> bool:
     return False
 
 
-def is_blessed(app_id: str, rdd_ids: list[int]) -> bool:
-    """True iff every id is a blessed session-resident RDD of THIS app."""
-    return all((app_id, r) in RESIDENT_RDD_IDS for r in rdd_ids)
+@dataclass(eq=False)
+class SessionGroup:
+    """What one application keeps for one dataset; see the module
+    docstring."""
+
+    artifacts: dict[str, Any] = field(default_factory=dict)
+    resident: set[int] = field(default_factory=set)
+    plans: dict[str, Any] = field(default_factory=dict)
+    relations: dict[str, DataFrame] = field(default_factory=dict)
 
 
-def bless_resident(df):
-    """Mark every RDD scan in ``df``'s plan as session-resident (an index
-    whose cross-execution reuse is intended).  Returns ``df`` so builders
-    can wrap their ``localCheckpoint()`` call site.  No-op on sessions
-    without JVM access (Connect mode)."""
-    try:
-        app = df.sparkSession.sparkContext.applicationId
-        ids = rdd_scan_ids(df._jdf.queryExecution().logical())
-    except Exception:
-        return df
-    for r in ids:
-        bounded_put(RESIDENT_RDD_IDS, (app, r), None, _RESIDENT_MAX)
-    return df
+#: (applicationId, sf_dir) → SessionGroup.  A serving session probes one
+#: or two datasets; cycling through more than 4 is a maintenance pattern.
+_GROUPS: dict[tuple[str, str], SessionGroup] = {}
+_MAX_GROUPS = 4
 
 
-#: (applicationId, sf_dir) → {artifact name: value}; see the module
-#: docstring.  A serving session probes one or two datasets; cycling
-#: through more than 4 is a maintenance pattern (see release_plans_for).
-_ARTIFACTS: dict[tuple[str, str], dict[str, Any]] = {}
-_ARTIFACT_GROUPS = 4
+def session_group(app_id: str, sf_dir: str) -> SessionGroup:
+    """The group of ``(app_id, sf_dir)``, created (and the oldest group
+    evicted past the bound) on first use."""
+    key = (app_id, sf_dir)
+    group = _GROUPS.get(key)
+    if group is None:
+        group = bounded_put(_GROUPS, key, SessionGroup(), _MAX_GROUPS)
+    return group
 
 
 def session_artifact(
     spark: SparkSession, sf_dir: str, name: str, build: Callable[[], Any]
 ) -> Any:
     """The session's ``name`` artifact for ``sf_dir``: built by ``build()``
-    on the first call, served from the store after that.  DataFrames in
-    the value are blessed as session-resident indexes.  ``build`` may
-    itself call ``session_artifact`` for the same ``sf_dir``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    group = _ARTIFACTS.get(key)
-    if group is None:
-        group = bounded_put(
-            _ARTIFACTS, key, {}, _ARTIFACT_GROUPS, on_evict=release_plans_for
-        )
-    if name not in group:
+    on the first call, served from the group after that.  The RDD scans
+    of a DataFrame value, or of each DataFrame in a tuple value, join the
+    group's ``resident`` set; path values are stored as they are.
+    ``build`` may itself call ``session_artifact`` for the same
+    ``sf_dir``."""
+    group = session_group(spark.sparkContext.applicationId, sf_dir)
+    if name not in group.artifacts:
         value = build()
         for part in value if isinstance(value, tuple) else (value,):
             if isinstance(part, DataFrame):
-                bless_resident(part)
-        group[name] = value
-    return group[name]
+                try:
+                    group.resident.update(
+                        rdd_scan_ids(part._jdf.queryExecution().logical())
+                    )
+                except Exception:  # no JVM access (Connect mode)
+                    pass
+        group.artifacts[name] = value
+    return group.artifacts[name]
 
 
 #: (applicationId, input-plan semanticHash, column, n_bands) → sorted

@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from lambda_arc_events_filter_spark.cache import session_group
+
 
 def _s(*fields: tuple) -> StructType:
     return StructType([StructField(n, t, True) for n, t in fields])
@@ -176,16 +178,6 @@ def _ingested_path(sf_dir: str, table: str) -> str:
 #: Process-local memo of resolved ingest paths (avoids per-query stat+footer).
 _INGEST_PATHS: dict[str, str] = {}
 
-#: Per-(session, sf_dir, table) memo of the resolved scan DataFrame.
-#: Resolving a datasource relation costs ~50 ms of JVM round-trips per
-#: table per query — pure constant overhead on a resident engine, so we
-#: resolve once.  DataFrames are immutable; sharing one relation across
-#: queries is semantically free, and Catalyst still applies per-query
-#: pushdown/pruning on top of the shared relation.  Keyed weakly-ish by
-#: the JVM applicationId so a new session never sees a stale JVM handle.
-_RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Load one fixture table with its explicit schema.
 
@@ -199,15 +191,20 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     nanosecond longs (``spark.sql.legacy.parquet.nanosAsLong``) and convert
     to TimestampType in the plan — lossless (values are µs-grain) and still
     a single vectorized columnar scan.  Micros fixtures read directly.
+
+    The resolved scan is kept in the session group of ``sf_dir``
+    (``cache.session_group``): resolving a datasource relation costs
+    ~50 ms of JVM round-trips per table per query, pure constant overhead
+    on a resident engine.  DataFrames are immutable, so sharing one
+    relation across queries is semantically free, and Catalyst still
+    applies per-query pushdown/pruning on top of it.
     """
     if table not in SCHEMAS:
         raise KeyError(f"unknown table {table!r}; known: {sorted(SCHEMAS)}")
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    hit = _RELATION_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _load_uncached(spark, sf_dir, table)
-    _RELATION_CACHE[key] = df
+    relations = session_group(spark.sparkContext.applicationId, sf_dir).relations
+    df = relations.get(table)
+    if df is None:
+        df = relations[table] = _load_uncached(spark, sf_dir, table)
     return df
 
 
@@ -260,9 +257,9 @@ def values_relation(spark: SparkSession, rows, schema: str) -> DataFrame:
     ``defaultParallelism`` RDD slices, so every broadcast build of such a
     dim runs a full-width job (32 near-empty tasks at local[32], measured
     ~0.3 s of pure dispatch per execution of ``partitioned_sink_dpp``
-    before r14), and the embedded ``LogicalRDD`` excludes the calling
-    query from the prepared-plan cache (unblessed RDD scan — see
-    ``registry.register``).  A ``VALUES`` relation analyzes to a
+    before r14), and the embedded ``LogicalRDD`` keeps the calling query
+    out of the prepared-plan cache (it is not a resident index — see
+    ``registry._with_plan_cache``).  A ``VALUES`` relation analyzes to a
     ``LocalRelation`` instead: the broadcast is built driver-side with no
     job at all, and the plan is cacheable.  The relation IS configuration
     (literals baked into the plan), exactly like ``_ring_points``.

@@ -75,7 +75,7 @@ def group_percentile_cont(
     quantiles: dict[str, float],
     extra_aggs: Sequence[Column] = (),
     num_partitions: int | None = None,
-    strategy: str | None = None,
+    strategy: str = "range",
     materialize: bool = False,
 ) -> DataFrame:
     """Exact interpolated per-group quantiles.
@@ -90,8 +90,7 @@ def group_percentile_cont(
     also evaluated-and-discarded them per band — see the in-body History
     note for why that fusion never actually shared work at runtime).
 
-    ``strategy`` (default from ``SPARK_GRAFT_PERCENTILE_STRATEGY``, else
-    ``group``) picks between two exact plans with identical output —
+    ``strategy`` picks between two exact plans with identical output —
     pytest asserts their equality:
 
     - ``group``: one window partitioned by the group key.  Each group
@@ -106,7 +105,7 @@ def group_percentile_cont(
       stage constants now more than pay for).  ``range`` is therefore
       the DEFAULT (the cluster-sane-default polarity, like session.py's
       scan sizing); ``group`` remains selectable for tiny-relation
-      callers via the env var.
+      callers.
 
     ``materialize`` (range strategy only): localCheckpoint the
     |groups|·|bands|-row ``sizes`` aggregate, so its consumers (the
@@ -117,15 +116,11 @@ def group_percentile_cont(
     the lever only trims the small reduce-side re-aggregations; it stays
     off by default (the checkpoint barrier serializes stages that
     otherwise run concurrently, and an embedded checkpoint disqualifies
-    the caller from the prepared-plan cache).  Callers that enable it
-    must register with ``plan_cache=False`` (the cached logical plan
-    would pin the checkpointed RDD — result caching, not benchmarking).
+    the caller from the prepared-plan cache: the registry keeps plans
+    over query-private RDDs out on its own, since a cached plan would
+    pin the checkpointed RDD — result caching, not benchmarking).
     """
-    import os
-
     spark = df.sparkSession
-    if strategy is None:
-        strategy = os.environ.get("SPARK_GRAFT_PERCENTILE_STRATEGY", "range")
     if strategy not in ("group", "range"):
         raise ValueError(f"unknown percentile strategy {strategy!r}")
     keys = list(keys)

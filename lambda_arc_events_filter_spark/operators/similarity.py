@@ -640,10 +640,11 @@ def kmeans_lloyd(
     # the input so rounds 2..n read executor-local blocks instead of
     # re-running the parquet scan each round (the same multi-pass move the
     # dedup postings use) — worth it for many-iteration cluster runs.
-    # Default FALSE because it is unsafe under the prepared-plan cache:
-    # a cached plan would bake in the checkpointed RDD and repeat
-    # executions would skip the corpus scan entirely (result caching —
-    # see registry.register); opting in requires plan_cache=False.
+    # Default FALSE because the checkpoint is query-private: the
+    # prepared-plan cache keeps such plans out on its own (a cached plan
+    # would bake in the checkpointed RDD and repeat executions would skip
+    # the corpus scan — result caching; see registry._with_plan_cache),
+    # so the caller loses its prepared plan.
     if materialize:
         emb = emb.localCheckpoint()
     # In-row argmin: the k centroids broadcast as ONE row carrying an

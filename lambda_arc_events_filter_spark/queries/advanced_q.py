@@ -380,7 +380,7 @@ def events_rule_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     # VALUES LocalRelation (r14): no 32-slice RDD job per broadcast
     # build, and the query becomes prepared-plan cacheable (the old
-    # createDataFrame's LogicalRDD was an unblessed scan)
+    # createDataFrame's LogicalRDD was not a resident index)
     rules = values_relation(
         spark,
         _ROUTING_RULES,

@@ -900,7 +900,7 @@ def lineitem_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-part rollup feeds the rank helper's two banded branches as
     # a concurrent plan DIAMOND, not a localCheckpoint — a private
     # checkpoint disqualifies the query from the prepared-plan cache
-    # (registry guard: caching it would pin the materialized rollup
+    # (a query-private RDD: caching it would pin the materialized rollup
     # across executions), and the honest per-rep cost flips the choice:
     # 0.78 s checkpoint-per-rep vs 0.35 s checkpoint-free prepared at
     # sf0.1, identical output.  At cluster scale the build side should be

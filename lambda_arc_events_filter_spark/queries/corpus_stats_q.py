@@ -882,7 +882,6 @@ def text_kwic_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) * 1.0 / tot.n > 0.02
     """,
     tags=("llm", "corpus", "udf"),
-    plan_cache=False,  # per-partition summaries rebuilt per call
 )
 def tokens_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters above a 2 % frequency threshold, found the
@@ -2106,7 +2105,6 @@ def labels_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY textrank DESC, word LIMIT 50
     """,
     tags=("llm", "text", "iterative"),
-    plan_cache=False,  # checkpoints the co-occurrence edge relation
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank

@@ -290,8 +290,8 @@ def contamination_ngram_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: triangle / two-hop graph stats, dup-rate by source).  The lang-blocked
 #: twin lives in llm_q._postings_index; the UNBLOCKED pair set is a
 #: different artifact (cross-lang pairs included), hence its own store
-#: entry.  Blessed (cache.session_artifact) so pure-probe consumers ride
-#: the prepared-plan cache.
+#: entry.  A resident session artifact (cache.session_artifact), so
+#: pure-probe consumers ride the prepared-plan cache.
 def _postings_unblocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lambda_arc_events_filter_spark.queries.postings import (
         build_postings_index,
@@ -340,7 +340,6 @@ _PAIR_CTE = """
     FROM reach GROUP BY src
     """,
     tags=("llm", "curation", "dedup"),
-    plan_cache=False,  # iterative: checkpoints label relation per round
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS, not just pairs: transitive closure over the exact
@@ -636,8 +635,8 @@ def dedup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: semantic dedup (cluster once, prune many times / incrementally —
 #: Abbas et al. run exactly this split), so they localCheckpoint like the
 #: IVF index and the dedup postings; the per-run phase is the pair scan.
-#: Blessed via cache.session_artifact, so consumers may ride the
-#: prepared-plan cache (registry guard admits blessed RDD scans).
+#: Kept with cache.session_artifact, so its RDD scans are resident and
+#: consumers may ride the prepared-plan cache.
 _SEMDEDUP_DIM = 64
 
 
@@ -754,10 +753,10 @@ def _semdedup_index(
     GROUP BY m.cluster, acc.n_dup_pairs, acc.n_pruned
     """,
     tags=("llm", "vector", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
+    # The probed index is a resident session artifact
+    # (cache.session_artifact), so the prepared plan is cached; every
+    # probe stage still re-executes per call — only the client-side
+    # plan rebuild is skipped (prepared-statement protocol).
 )
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
@@ -992,7 +991,6 @@ def corpus_filter_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY cluster_id
     """,
     tags=("llm", "curation", "dedup"),
-    plan_cache=False,  # builds on the iterative CC labels (checkpointed)
 )
 def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The step after clustering that an actual dedup WRITER executes:
@@ -1052,10 +1050,10 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     WHERE c * 1.0 / least(nx.n, ny.n) >= 0.9
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
+    # The probed index is a resident session artifact
+    # (cache.session_artifact), so the prepared plan is cached; every
+    # probe stage still re-executes per call — only the client-side
+    # plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-CONTAINMENT pairs: shared-shingle count normalized by the
@@ -1123,10 +1121,10 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM deg GROUP BY degree
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
+    # The probed index is a resident session artifact
+    # (cache.session_artifact), so the prepared plan is cached; every
+    # probe stage still re-executes per call — only the client-side
+    # plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the near-dup pair graph (Jaccard ≥ 0.5
@@ -1184,10 +1182,10 @@ def dedup_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tri
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
+    # The probed index is a resident session artifact
+    # (cache.session_artifact), so the prepared plan is cached; every
+    # probe stage still re-executes per call — only the client-side
+    # plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census of the near-dup graph: counts a<b<c node triples
@@ -1271,10 +1269,10 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN pair_mix m USING (source)
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
+    # The probed index is a resident session artifact
+    # (cache.session_artifact), so the prepared plan is cached; every
+    # probe stage still re-executes per call — only the client-side
+    # plan rebuild is skipped (prepared-statement protocol).
 )
 def corpus_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplication accountability per source: what fraction of each
@@ -1367,10 +1365,10 @@ def corpus_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY node
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
+    # The probed index is a resident session artifact
+    # (cache.session_artifact), so the prepared plan is cached; every
+    # probe stage still re-executes per call — only the client-side
+    # plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-hop neighborhood size per document in the near-dup graph: how
@@ -2518,7 +2516,6 @@ def _ess_islands_report(marked: DataFrame) -> DataFrame:
         dup_frac=round_int_ratio_sql("sum(e2 - s + 1)", "min(n_tokens)", 6)
     ),
     tags=("llm", "curation", "dedup", "streaming"),
-    plan_cache=False,  # drives a real stream + mutates the index artifact
 )
 def stream_dedup_exact_substring(
     spark: SparkSession, sf_dir: str

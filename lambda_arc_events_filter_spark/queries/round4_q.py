@@ -1392,7 +1392,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase-level aggregates + top-15 on ≤21 k-row relations.
 
     Collapsing the two passes with a localCheckpoint disqualifies the
-    prepared plan (registry guard) and measured 0.70 s; in-row
+    prepared plan (a query-private RDD scan) and measured 0.70 s; in-row
     segmentation via boundary-pair HOFs measured 3.5 s (round 8); in-row
     regex stopword-split segmentation (no window, the 100 TB shuffle
     diet) measured a wash at sf0.1 (min 0.60 vs 0.51, median 0.645 vs
@@ -1451,7 +1451,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.964 → 0.695 s, min 0.829 → 0.624 s; executed plan: window+rollup
     # copies 3 → 1, one join removed (plans/r14/text_rake_keyphrases_*).
     # History — a localCheckpoint here would disqualify the query from
-    # the prepared-plan cache (registry guard); in-row segmentation via
+    # the prepared-plan cache (query-private RDD); in-row segmentation via
     # boundary-pair HOFs measured 3.5 s vs 0.6 s (round 8); the r9 shave
     # (pw from pfreq) cut the copies 4 → 3 but left the pruning fork.
     pcount = phrases.groupBy("phrase").agg(
@@ -1811,7 +1811,6 @@ _HAV_SQL = """2 * 6371.0 * asin(sqrt(least(1.0,
     LEFT JOIN border bo ON bo.node = p.user_id
     """.format(pts=_PTS_SQL, hav=_HAV_SQL),
     tags=("geo", "ml", "graph"),
-    plan_cache=False,  # iterative CC checkpoints a label relation
 )
 def users_geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN (eps = 200 km, minPts = 4 incl. self) over the user point

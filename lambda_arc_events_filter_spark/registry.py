@@ -8,6 +8,10 @@ sf0.01 and compares row-count + schema + order-insensitive value-hash.
 Column-name parity rule: alias every computed column identically in the
 Spark code and the oracle SQL (the driver sorts columns by name before
 hashing).
+
+Unless a streaming/source/sink tag exempts it, every query is wrapped by
+the prepared-plan cache (``_with_plan_cache``), which keeps its plans in
+the session group of the dataset it ran on (``cache.session_group``).
 """
 
 from __future__ import annotations
@@ -16,6 +20,13 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from lambda_arc_events_filter_spark.cache import (
+    bounded_put,
+    has_unresolved_relations,
+    rdd_scan_ids,
+    session_group,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -31,12 +42,13 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-#: Prepared-statement cache: (applicationId, sf_dir, query name) → JVM
-#: logical plan.  Building a query through the Python DataFrame API costs
-#: 0.15-0.25 s of py4j round-trips (one per Column expression) — pure
-#: client-side constant overhead a resident engine pays once.  We cache the
-#: OPTIMIZED logical plan (``qe.optimizedPlan()``, r10; analyzed in r8-9,
-#: raw before that) and wrap it in a fresh QueryExecution per call
+#: Prepared-statement cache: each (applicationId, sf_dir) session group
+#: (``cache.session_group``) maps query name → JVM logical plan.
+#: Building a query through the Python DataFrame API costs 0.15-0.25 s of
+#: py4j round-trips (one per Column expression) — pure client-side
+#: constant overhead a resident engine pays once.  We cache the OPTIMIZED
+#: logical plan (``qe.optimizedPlan()``, r10; analyzed in r8-9, raw
+#: before that) and wrap it in a fresh QueryExecution per call
 #: (``Dataset.ofRows``), so every execution re-plans physically and
 #: re-runs all stages — measured (r9, agg_stats): prepared-plan collect
 #: 0.546 s vs same-DataFrame re-collect 0.042 s, so no stage output is
@@ -53,19 +65,9 @@ _REGISTRY: dict[str, QuerySpec] = {}
 #: never cached; the check runs on the RAW plan, where a view reference
 #: is still visible as an UnresolvedRelation.
 #: Queries tagged streaming/source/sink are exempt: their fn performs the
-#: actual run/write per call.  Bounded (cache.bounded_put): FIFO-evicted
-#: past _PLAN_CACHE_MAX entries so a long-lived session over many sf_dirs
-#: cannot grow driver memory without limit.
-_PLAN_CACHE: dict[tuple[str, str, str], object] = {}
-_PLAN_CACHE_MAX = 1024
-
-# Coupled eviction: when a session index is evicted from its own bounded
-# cache, cache.release_plans_for drops every prepared plan of the same
-# (applicationId, sf_dir) — otherwise cached plans would pin the evicted
-# index's LogicalRDD (and its executor blocks) for the session lifetime.
-from lambda_arc_events_filter_spark.cache import PLAN_CACHE_SINKS, bounded_put
-
-PLAN_CACHE_SINKS.append(_PLAN_CACHE)
+#: actual run/write per call.  The plans are bounded by the group store
+#: (at most 4 groups) and leave with their group, together with the
+#: resident indexes they scan.
 #: applicationId → cached ``Dataset.ofRows`` py4j handle (see rebuild path).
 _OF_ROWS: dict[str, object] = {}
 _NO_PLAN_CACHE_TAGS = frozenset({"streaming", "source", "sink"})
@@ -73,18 +75,14 @@ _NO_PLAN_CACHE_TAGS = frozenset({"streaming", "source", "sink"})
 
 def _with_plan_cache(name: str, fn: QueryFn) -> QueryFn:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = None
+        plans = None
         jplan = None
         try:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            jplan = _PLAN_CACHE.get(key)
+            app = spark.sparkContext.applicationId
+            group = session_group(app, sf_dir)
+            plans = group.plans
+            jplan = plans.get(name)
             if jplan is None:
-                from lambda_arc_events_filter_spark.cache import (
-                    has_unresolved_relations,
-                    is_blessed,
-                    rdd_scan_ids,
-                )
-
                 df = fn(spark, sf_dir)
                 qe = df._jdf.queryExecution()
                 # Cache ONLY plans that are (a) free of by-NAME relation
@@ -93,22 +91,21 @@ def _with_plan_cache(name: str, fn: QueryFn) -> QueryFn:
                 # per execution could silently read another dataset
                 # after the view is re-registered, or die on a dropped
                 # per-call view — and (b) whose RDD scans (incl. those
-                # inside subquery expressions) are all blessed
-                # session-resident indexes OF THIS APPLICATION
-                # (cache.bless_resident).  Any other LogicalRDD — a
-                # query-private localCheckpoint, a driver-computed
-                # createDataFrame — is per-execution work; caching it
-                # would convert the prepared-statement protocol into
-                # result caching (round-8 audit: 48 registrations
-                # carried this leak).  The RDD scan walks the ANALYZED
-                # plan (in the raw plan a view name can hide a
-                # checkpointed relation); the by-name check walks the
+                # inside subquery expressions) are all resident indexes
+                # of THIS group (cache.session_artifact records them).
+                # Any other LogicalRDD — a query-private localCheckpoint,
+                # a driver-computed createDataFrame — is per-execution
+                # work; caching it would convert the prepared-statement
+                # protocol into result caching (round-8 audit: 48
+                # registrations carried this leak).  The RDD scan walks
+                # the ANALYZED plan (in the raw plan a view name can hide
+                # a checkpointed relation); the by-name check walks the
                 # RAW plan (analysis inlines views, hiding the
                 # reference).  Scan failures fail CLOSED (no caching).
                 try:
                     cacheable = not has_unresolved_relations(
                         qe.logical()
-                    ) and is_blessed(key[0], rdd_scan_ids(qe.analyzed()))
+                    ) and group.resident.issuperset(rdd_scan_ids(qe.analyzed()))
                 except Exception:
                     cacheable = False
                 if cacheable:
@@ -127,34 +124,29 @@ def _with_plan_cache(name: str, fn: QueryFn) -> QueryFn:
                     # registry (r10).  The build call executes this same
                     # QueryExecution anyway, so forcing the lazy
                     # optimizedPlan here adds no net build cost.
-                    bounded_put(
-                        _PLAN_CACHE,
-                        key,
-                        qe.optimizedPlan(),
-                        _PLAN_CACHE_MAX,
-                    )
+                    plans[name] = qe.optimizedPlan()
                 return df
-            of_rows = _OF_ROWS.get(key[0])
+            of_rows = _OF_ROWS.get(app)
             if of_rows is None:
                 # one JVM-reflection walk per session, not per call —
                 # the attribute chain costs several py4j round-trips
                 of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-                bounded_put(_OF_ROWS, key[0], of_rows, 8)
+                bounded_put(_OF_ROWS, app, of_rows, 8)
             jds = of_rows(spark._jsparkSession, jplan)
             return DataFrame(jds, spark)
         except Exception:  # e.g. Connect-mode session without _jvm
             # self-repair: a cached plan that can no longer analyze
             # (dropped view, stopped context) must not poison every
             # subsequent call with an exception + silent rebuild
-            if key is not None:
-                _PLAN_CACHE.pop(key, None)
+            if plans is not None:
+                plans.pop(name, None)
                 # Evict the ofRows handle only when the failure was on
                 # the cached-plan REBUILD branch — a first-build failure
                 # inside fn() never touched the handle, and a transient
                 # query error must not cost the whole application its
                 # still-valid JVM reflection handle.
                 if jplan is not None:
-                    _OF_ROWS.pop(key[0], None)  # handle may be stale too
+                    _OF_ROWS.pop(app, None)  # handle may be stale too
             return fn(spark, sf_dir)
 
     wrapped.__name__ = fn.__name__
@@ -167,7 +159,6 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    plan_cache: bool = True,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the registry.
 
@@ -176,25 +167,19 @@ def register(
     streaming, approximate sketches) — the driver then records a weaker
     rows-only check, and the judge sees which.
 
-    ``plan_cache=False`` opts out of the prepared-plan cache.  Use it for
-    queries whose fn materializes intermediates (``localCheckpoint``) or
-    embeds driver-computed data: the cached logical plan would reference
-    the materialized RDD and repeat executions would skip recomputing it —
-    result caching, which would fake the benchmark.  Since round 8 the
-    wrapper ENFORCES this structurally: a plan whose RDD scans are not all
-    blessed session-resident indexes (``cache.bless_resident``) is never
-    cached, whatever the flag says — the flag remains as documentation and
-    as a way to skip the wrapper entirely.  Streaming/source/sink tags are
-    exempted automatically.
+    Unless a streaming/source/sink tag exempts it, the query rides the
+    prepared-plan cache (``_with_plan_cache``).  The wrapper itself keeps
+    out every plan that names a view or scans an RDD other than a
+    resident index of its session group, so queries that materialize
+    intermediates (``localCheckpoint``) or embed driver-computed data
+    rebuild on every call.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         reg_fn = (
-            fn
-            if not plan_cache or _NO_PLAN_CACHE_TAGS & set(tags)
-            else _with_plan_cache(name, fn)
+            fn if _NO_PLAN_CACHE_TAGS & set(tags) else _with_plan_cache(name, fn)
         )
         _REGISTRY[name] = QuerySpec(
             name=name, fn=reg_fn, oracle=oracle, tags=tuple(tags), doc=fn.__doc__ or ""

@@ -30,12 +30,8 @@ def fixture_conf() -> dict[str, str]:
     ``get_spark`` (SCALE.md §confs).
     """
     return {
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-            "SPARK_GRAFT_AQE_ADVISORY_BYTES", "4m"
-        ),
+        "spark.sql.files.maxPartitionBytes": "1m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
     }
 
 
@@ -72,12 +68,8 @@ def get_spark(
         # (bench.py / tests / tools) opt INTO toy-scale sizing explicitly
         # via fixture_conf() below — a bare get_spark() must never bake
         # toy-scale settings into a production-shaped session.
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-            "SPARK_GRAFT_AQE_ADVISORY_BYTES", "64m"
-        ),
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"
-        ),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
+        "spark.sql.files.maxPartitionBytes": "128m",
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),

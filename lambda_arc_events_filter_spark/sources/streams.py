@@ -76,7 +76,7 @@ def run_to_memory(
     mode: str = "append",
     state_partitions: int | None = 8,
     drain: bool = False,
-    state_store: str | None = None,
+    state_store: str = "memory",
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow trigger,
     memory sink) and return the materialized result as a batch DataFrame.
@@ -123,11 +123,9 @@ def run_to_memory(
     # ``state_store="rocksdb"`` — the round-8 review found the old
     # env-only switch silently clobbered a provider the caller had set on
     # the session; the parameter makes the requirement explicit.
-    # SPARK_GRAFT_STATE_STORE=rocksdb remains the env-level override.
-    store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE", "memory")
     provider = (
         "RocksDBStateStoreProvider"
-        if store == "rocksdb"
+        if state_store == "rocksdb"
         else "HDFSBackedStateStoreProvider"
     )
     spark.conf.set(

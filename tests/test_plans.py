@@ -259,7 +259,7 @@ def test_pair_family_probes_unblocked_postings_index(spark, sf_dir):
     """The _PAIR_CTE family must PROBE the session unblocked-postings
     index: no Generate/explode (re-shingling) in their plans — a
     regression here re-runs the corpus shingle build per call (round 8:
-    six per-call postings builds were replaced by one blessed index)."""
+    six per-call postings builds were replaced by one resident index)."""
     for name in (
         "dedup_shingle_containment",
         "dedup_graph_degree_stats",

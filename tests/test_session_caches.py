@@ -1,13 +1,22 @@
-"""Session-cache invariants: the session-artifact store behind the corpus
-indexes and layout paths (postings, tf/lexicon, IVF, written copies) and
-the band-bounds cache must be build-once per (application, sf_dir) and
-FIFO-bounded — an unbounded cache is a driver leak on a long-lived
+"""Session-cache invariants: the per-(application, sf_dir) session group
+behind the corpus indexes and layout paths (postings, tf/lexicon, IVF,
+written copies), their resident RDD ids, the prepared plans and the
+resolved scans, and the band-bounds cache, must be build-once per group
+and FIFO-bounded — an unbounded cache is a driver leak on a long-lived
 session, and a cache that misses on repeat calls silently re-runs the
 index build it exists to amortize."""
 
 from __future__ import annotations
 
+from lambda_arc_events_filter_spark import cache as C
 from lambda_arc_events_filter_spark.cache import bounded_put
+
+
+def _plans(spark, sf_dir) -> dict:
+    """Prepared plans of the (application, sf_dir) group, without
+    creating the group."""
+    group = C._GROUPS.get((spark.sparkContext.applicationId, sf_dir))
+    return {} if group is None else group.plans
 
 
 def test_bounded_put_evicts_oldest_insertion():
@@ -48,36 +57,70 @@ def test_plan_cache_refuses_unblessed_rdd_scans(spark, sf_dir):
     are query-private materializations (localCheckpoint inside fn,
     driver-computed createDataFrame) — caching one pins its blocks across
     executions and turns the prepared-statement protocol into result
-    caching.  Blessed session-resident indexes (text_index, IVF) remain
+    caching.  Resident session indexes (text_index, IVF) remain
     cacheable (round-8 guard)."""
     from lambda_arc_events_filter_spark import registry as R
 
     all_specs = R.specs()
 
-    def cache_key(name):
-        return (spark.sparkContext.applicationId, sf_dir, name)
-
     # query-private checkpoint (the rank helper's derived-input
     # materialization inside lorenz): never cached
     all_specs["customer_lorenz_curve"].fn(spark, sf_dir)
-    assert cache_key("customer_lorenz_curve") not in R._PLAN_CACHE
+    assert "customer_lorenz_curve" not in _plans(spark, sf_dir)
 
     # pareto dropped its private checkpoint in round 8 (concurrent
     # diamond) — fully declarative again, so the prepared plan IS cached
     all_specs["lineitem_pareto_abc"].fn(spark, sf_dir)
-    assert cache_key("lineitem_pareto_abc") in R._PLAN_CACHE
+    assert "lineitem_pareto_abc" in _plans(spark, sf_dir)
 
     # driver-computed input data: never cached
     all_specs["events_raking_ipf"].fn(spark, sf_dir)
-    assert cache_key("events_raking_ipf") not in R._PLAN_CACHE
+    assert "events_raking_ipf" not in _plans(spark, sf_dir)
 
-    # blessed resident tf index: prepared plan IS cached
+    # resident tf index: prepared plan IS cached
     all_specs["text_tfidf_top_terms"].fn(spark, sf_dir)
-    assert cache_key("text_tfidf_top_terms") in R._PLAN_CACHE
+    assert "text_tfidf_top_terms" in _plans(spark, sf_dir)
 
     # plain scan-chain query: cached as before
     all_specs["agg_stats"].fn(spark, sf_dir)
-    assert cache_key("agg_stats") in R._PLAN_CACHE
+    assert "agg_stats" in _plans(spark, sf_dir)
+
+
+#: The queries that used to opt out of the prepared-plan cache by a
+#: registration flag and carry no streaming/source/sink tag.  The guard alone decides.
+_DECLARATIVE_FORMERLY_FLAGGED = (
+    "tokens_heavy_hitters_mg",
+    "text_compressibility_filter",
+)
+_PRIVATE_FORMERLY_FLAGGED = (
+    "text_textrank_keywords",
+    "users_geo_dbscan_clusters",
+    "sql_scripting_iterative",
+    "sql_recursive_bfs",
+    "parts_bradley_terry_strength",
+    "dedup_minhash_lsh_capped",
+    "dedup_minhash_incremental",
+    "ann_ivf_incremental_refresh",
+    "hierarchy_doc_rollup",
+    "dedup_connected_components",
+    "dedup_cluster_representatives",
+)
+
+
+def test_formerly_flagged_queries_follow_the_guard(spark, sf_dir):
+    """Without the per-registration opt-out, the guard keeps out exactly
+    the plans it should: the two fully declarative queries are cached,
+    and the eleven that scan a query-private RDD (or, for
+    ``sql_recursive_bfs``, resolve a view by name) are not."""
+    from lambda_arc_events_filter_spark import registry as R
+
+    sp = R.specs()
+    for name in _DECLARATIVE_FORMERLY_FLAGGED + _PRIVATE_FORMERLY_FLAGGED:
+        assert not R._NO_PLAN_CACHE_TAGS & set(sp[name].tags), name
+        sp[name].fn(spark, sf_dir)
+    plans = _plans(spark, sf_dir)
+    assert [n for n in _DECLARATIVE_FORMERLY_FLAGGED if n not in plans] == []
+    assert [n for n in _PRIVATE_FORMERLY_FLAGGED if n in plans] == []
 
 
 def test_private_checkpoint_rematerializes_per_call(spark, sf_dir):
@@ -95,7 +138,7 @@ def test_private_checkpoint_rematerializes_per_call(spark, sf_dir):
 
 def test_every_headline_query_is_prepared_cacheable(spark, sf_dir):
     """Bench protection: every HEADLINE query must either ride the
-    prepared-plan cache (its plan's RDD scans are all blessed indexes)
+    prepared-plan cache (its plan's RDD scans are all resident indexes)
     or carry a structural exemption (streaming/source/sink tags).  A
     regression here means some headline fn grew a query-private
     materialization — its bench reps would silently pay a per-rep py4j
@@ -111,53 +154,77 @@ def test_every_headline_query_is_prepared_cacheable(spark, sf_dir):
         if exempt_tags & set(spec.tags):
             continue
         spec.fn(spark, sf_dir)
-        if (spark.sparkContext.applicationId, sf_dir, name) not in R._PLAN_CACHE:
+        if name not in _plans(spark, sf_dir):
             failures.append(name)
     assert not failures, (
         "headline queries no longer prepared-cacheable: "
-        f"{failures} — either bless the session index they probe or "
-        "remove the query-private materialization"
+        f"{failures} — either keep the index they probe with "
+        "cache.session_artifact or remove the query-private materialization"
     )
 
 
-def test_blessing_is_application_scoped():
-    """RDD ids restart at 0 with every new SparkContext, so a blessing
+def _resident_probe(name: str, index_sf_dir: str):
+    """A wrapped query that scans the resident index of ``index_sf_dir``
+    whatever dataset it is called for."""
+    from lambda_arc_events_filter_spark import registry as R
+
+    def fn(spark, sf_dir):
+        return C.session_artifact(
+            spark, index_sf_dir, "idx", lambda: spark.range(3).localCheckpoint()
+        ).select("id")
+
+    return R._with_plan_cache(name, fn)
+
+
+def test_blessing_is_application_scoped(spark, monkeypatch):
+    """RDD ids restart at 0 with every new SparkContext, so a resident id
     must never leak across applications (round-8 review): a stale id
     from a stopped session admitting a new session's private checkpoint
-    would re-open the result-caching hole."""
-    from lambda_arc_events_filter_spark import cache as C
+    would re-open the result-caching hole.  Resident ids live in the
+    (applicationId, sf_dir) group, so another application never sees
+    them."""
+    monkeypatch.setattr(C, "_GROUPS", {})
+    app = spark.sparkContext.applicationId
+    probe = _resident_probe("app_scope_probe", "/sf/a")
+    probe(spark, "/sf/a")
+    group = C._GROUPS[(app, "/sf/a")]
+    assert "app_scope_probe" in group.plans
+    assert group.resident
+    assert not C.session_group("app-other", "/sf/a").resident
 
-    C.RESIDENT_RDD_IDS[("app-old", 5)] = None
-    try:
-        assert C.is_blessed("app-old", [5])
-        assert not C.is_blessed("app-new", [5])
-        assert C.is_blessed("app-new", [])  # vacuous: no RDD scans
-    finally:
-        C.RESIDENT_RDD_IDS.pop(("app-old", 5), None)
+
+def test_resident_rdd_admits_plans_for_its_own_sf_dir_only(spark, monkeypatch):
+    """A resident index of one dataset does not admit a plan cached for
+    another: the group of the other ``sf_dir`` has its own resident set,
+    so a plan that scans a foreign index rebuilds on every call."""
+    monkeypatch.setattr(C, "_GROUPS", {})
+    app = spark.sparkContext.applicationId
+    probe = _resident_probe("sf_scope_probe", "/sf/a")
+    probe(spark, "/sf/a")
+    probe(spark, "/sf/b")
+    assert "sf_scope_probe" in C._GROUPS[(app, "/sf/a")].plans
+    assert "sf_scope_probe" not in C._GROUPS[(app, "/sf/b")].plans
 
 
-def test_index_eviction_releases_dependent_plans():
-    """bounded_put's on_evict hook + release_plans_for must drop every
-    prepared plan of the evicted (applicationId, sf_dir) so the plan
-    cache cannot pin an evicted index's executor blocks."""
-    from lambda_arc_events_filter_spark import cache as C
-
-    sink: dict = {
-        ("app", "/sf/a", "q1"): object(),
-        ("app", "/sf/a", "q2"): object(),
-        ("app", "/sf/b", "q1"): object(),
-    }
-    C.PLAN_CACHE_SINKS.append(sink)
-    try:
-        idx: dict = {}
-        C.bounded_put(idx, ("app", "/sf/a"), "A", 1, on_evict=C.release_plans_for)
-        C.bounded_put(idx, ("app", "/sf/b"), "B", 1, on_evict=C.release_plans_for)
-        # inserting /sf/b evicted /sf/a → its two plans must be gone
-        assert ("app", "/sf/a", "q1") not in sink
-        assert ("app", "/sf/a", "q2") not in sink
-        assert ("app", "/sf/b", "q1") in sink
-    finally:
-        C.PLAN_CACHE_SINKS.remove(sink)
+def test_index_eviction_releases_dependent_plans(spark, monkeypatch):
+    """Evicting a group drops its prepared plans with its artifacts and
+    resident ids — they are one object — so no plan can pin an evicted
+    index's executor blocks."""
+    monkeypatch.setattr(C, "_GROUPS", {})
+    app = spark.sparkContext.applicationId
+    probe = _resident_probe("eviction_probe", "/sf/a")
+    probe(spark, "/sf/a")
+    evicted = C._GROUPS[(app, "/sf/a")]
+    assert "eviction_probe" in evicted.plans
+    for i in range(C._MAX_GROUPS):
+        C.session_group(app, f"/sf/other{i}")
+    assert (app, "/sf/a") not in C._GROUPS
+    assert all(g is not evicted for g in C._GROUPS.values())
+    probe(spark, "/sf/a")  # rebuilds the index and re-prepares the plan
+    fresh = C._GROUPS[(app, "/sf/a")]
+    assert fresh is not evicted
+    assert fresh.artifacts["idx"] is not evicted.artifacts["idx"]
+    assert "eviction_probe" in fresh.plans
 
 
 def test_rdd_scan_ids_sees_subquery_checkpoints(spark):
@@ -192,26 +259,23 @@ def test_view_name_plans_are_never_cached(spark, sf_dir):
 
     # end-to-end: the registered SQL-front-door queries build through
     # temp views, so their plans must be absent from the cache after a call
-    for name in ("window_ignore_nulls", "sql_frontdoor"):
+    for name in ("window_ignore_nulls", "sql_frontdoor", "sql_recursive_bfs"):
         if name not in R.specs():
             continue
         R.specs()[name].fn(spark, sf_dir)
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        assert key not in R._PLAN_CACHE, name
+        assert name not in _plans(spark, sf_dir), name
 
 
 def test_blessed_index_eviction_end_to_end(spark, sf_dir):
-    """Blessing-lifecycle adversarial path (VERDICT r8 ask #5): force a
-    blessed tf index out of the bound-4 artifact store through the REAL
-    runtime eviction path (four further group insertions — alternate path
-    SPELLINGS of the same fixture dir, distinct keys, all readable), then
-    assert (a) every dependent prepared plan of that (app, sf_dir) is
-    dropped with it — coupled eviction at runtime, not just the unit-level
-    hook — and (b) the next query run rebuilds a fresh index and still
-    value-matches its DuckDB oracle."""
+    """Resident-index lifecycle adversarial path (VERDICT r8 ask #5):
+    force a resident tf index out of the bound-4 group store through the
+    REAL runtime eviction path (four further group insertions — alternate
+    path SPELLINGS of the same fixture dir, distinct keys, all readable),
+    then assert (a) every dependent prepared plan of that (app, sf_dir)
+    is dropped with it, and (b) the next query run rebuilds a fresh
+    index and still value-matches its DuckDB oracle."""
     import os
 
-    from lambda_arc_events_filter_spark import cache as C
     from lambda_arc_events_filter_spark import registry as R
     from lambda_arc_events_filter_spark.queries import text_index as TI
     from lambda_arc_events_filter_spark.testing import (
@@ -220,13 +284,11 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     )
 
     spec = R.specs()["text_tfidf_top_terms"]
-    app = spark.sparkContext.applicationId
-    plan_key = (app, sf_dir, "text_tfidf_top_terms")
-    idx_key = (app, sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
 
     spec.fn(spark, sf_dir).collect()
-    assert plan_key in R._PLAN_CACHE
-    idx_before = C._ARTIFACTS[idx_key]["tf_index"]
+    assert "text_tfidf_top_terms" in _plans(spark, sf_dir)
+    idx_before = C._GROUPS[key].artifacts["tf_index"]
 
     head, tail = os.path.dirname(sf_dir), os.path.basename(sf_dir)
     spellings = [
@@ -240,16 +302,15 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
         TI.tf_index(spark, alt)
 
     # (a) index evicted AND its dependent prepared plans released
-    assert idx_key not in C._ARTIFACTS
-    assert plan_key not in R._PLAN_CACHE
-    assert not any(k[:2] == idx_key for k in R._PLAN_CACHE)
+    assert key not in C._GROUPS
+    assert "text_tfidf_top_terms" not in _plans(spark, sf_dir)
 
     # (b) next run rebuilds (new index object) and still matches the oracle
     con = duck_connection(sf_dir)
     assert check_query(spec, spark, con, sf_dir) == []
     con.close()
-    assert C._ARTIFACTS[idx_key]["tf_index"] is not idx_before
-    assert plan_key in R._PLAN_CACHE
+    assert C._GROUPS[key].artifacts["tf_index"] is not idx_before
+    assert "text_tfidf_top_terms" in _plans(spark, sf_dir)
 
 
 def test_session_artifact_builds_once(spark):
@@ -267,43 +328,38 @@ def test_session_artifact_builds_once(spark):
     assert len(calls) == 1
 
 
-def test_fifth_group_evicts_oldest_artifacts_and_plans(spark, monkeypatch):
+def test_fifth_group_evicts_oldest_artifacts_and_plans(spark, sf_dir, monkeypatch):
     """(b) A fifth (app, sf_dir) group evicts the oldest group: all its
-    artifacts and all its prepared plans go together; the other groups'
-    artifacts and plans stay."""
-    from lambda_arc_events_filter_spark import cache as C
+    artifacts, plans and scans go together; the other groups stay.  A
+    query that only touches a dataset (a scan through ``catalog.load``)
+    counts as much as an artifact build."""
+    from lambda_arc_events_filter_spark.catalog import load
 
-    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    monkeypatch.setattr(C, "_GROUPS", {})
     app = spark.sparkContext.applicationId
-    sink: dict = {(app, f"/sf/{i}", "q"): object() for i in range(5)}
-    C.PLAN_CACHE_SINKS.append(sink)
-    try:
-        for i in range(4):
-            C.session_artifact(spark, f"/sf/{i}", "a", lambda: "A")
-            C.session_artifact(spark, f"/sf/{i}", "b", lambda: "B")
-        assert len(C._ARTIFACTS) == 4
-        C.session_artifact(spark, "/sf/4", "a", lambda: "A")
-        assert (app, "/sf/0") not in C._ARTIFACTS
-        assert (app, "/sf/0", "q") not in sink
-        for i in range(1, 5):
-            assert (app, f"/sf/{i}") in C._ARTIFACTS
-            assert (app, f"/sf/{i}", "q") in sink
-        assert C._ARTIFACTS[(app, "/sf/1")] == {"a": "A", "b": "B"}
-    finally:
-        C.PLAN_CACHE_SINKS.remove(sink)
+    for i in range(4):
+        C.session_artifact(spark, f"/sf/{i}", "a", lambda: "A")
+        C.session_artifact(spark, f"/sf/{i}", "b", lambda: "B")
+        C.session_group(app, f"/sf/{i}").plans["q"] = object()
+    assert len(C._GROUPS) == 4
+    load(spark, sf_dir, "region")
+    assert (app, "/sf/0") not in C._GROUPS
+    assert (app, sf_dir) in C._GROUPS
+    for i in range(1, 4):
+        assert "q" in C._GROUPS[(app, f"/sf/{i}")].plans
+    assert C._GROUPS[(app, "/sf/1")].artifacts == {"a": "A", "b": "B"}
+    assert list(C._GROUPS[(app, sf_dir)].relations) == ["region"]
 
 
 def test_session_artifact_blesses_dataframes_only(spark, monkeypatch):
-    """(c) A DataFrame value (alone or in a tuple) is blessed as
-    session-resident; a path value leaves the blessings untouched."""
-    from lambda_arc_events_filter_spark import cache as C
-
-    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    """(c) The RDD scans of a DataFrame value (alone or in a tuple) join
+    the group's resident set; a path value leaves it untouched."""
+    monkeypatch.setattr(C, "_GROUPS", {})
     app = spark.sparkContext.applicationId
-    before = dict(C.RESIDENT_RDD_IDS)
     C.session_artifact(spark, "/sf/bless", "path", lambda: "/tmp/x")
     C.session_artifact(spark, "/sf/bless", "paths", lambda: ("/tmp/x", 3))
-    assert C.RESIDENT_RDD_IDS == before
+    group = C._GROUPS[(app, "/sf/bless")]
+    assert group.resident == set()
 
     df = C.session_artifact(
         spark, "/sf/bless", "df", lambda: spark.range(3).localCheckpoint()
@@ -316,22 +372,21 @@ def test_session_artifact_blesses_dataframes_only(spark, monkeypatch):
     )
     for frame in (df, pair[0]):
         ids = C.rdd_scan_ids(frame._jdf.queryExecution().logical())
-        assert ids and C.is_blessed(app, ids)
+        assert ids and group.resident.issuperset(ids)
 
 
 def test_layout_path_cache_is_bounded(spark, sf_dir, monkeypatch):
     """(d) A layout path that used to live in an unbounded module dict
     (``lakehouse_q._evolved_orders_path``) is now kept in the bounded
     store and evicted with its group."""
-    from lambda_arc_events_filter_spark import cache as C
     from lambda_arc_events_filter_spark.queries import lakehouse_q as L
 
-    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    monkeypatch.setattr(C, "_GROUPS", {})
     key = (spark.sparkContext.applicationId, sf_dir)
     path = L._evolved_orders_path(spark, sf_dir)
     assert L._evolved_orders_path(spark, sf_dir) == path
-    assert C._ARTIFACTS[key]["evolved_orders"] == path
-    for i in range(C._ARTIFACT_GROUPS):
+    assert C._GROUPS[key].artifacts["evolved_orders"] == path
+    for i in range(C._MAX_GROUPS):
         C.session_artifact(spark, f"/sf/{i}", "other", lambda: None)
-    assert key not in C._ARTIFACTS
-    assert len(C._ARTIFACTS) == C._ARTIFACT_GROUPS
+    assert key not in C._GROUPS
+    assert len(C._GROUPS) == C._MAX_GROUPS
