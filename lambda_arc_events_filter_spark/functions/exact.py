@@ -1,4 +1,5 @@
-"""Exact cross-engine decimal rounding for integer ratios.
+"""Exact cross-engine decimal rounding: integer ratios, and doubles to
+whole numbers.
 
 The divergence class this kills (COVERAGE.md "second divergence class"):
 ``round(a / b, k)`` where ``a`` and ``b`` are exact integers can land on a
@@ -25,12 +26,41 @@ never a rounded decimal Divide (whose result scale Spark clamps to 6
 under precision pressure, which would flip floor() at near-integer
 quotients).  The final quotient is the rounded ratio scaled by 10^k —
 back in comfortable long range.
+
+``round_half_up(x)`` is the other half of the money path: it turns a
+DOUBLE into the whole number ``F.round(x)`` gives (``x`` is typically a
+price scaled to cents), without Spark's per-value
+``BigDecimal.valueOf(x).setScale(0, HALF_UP)``.  Four such calls per
+lineitem row were most of q01's scan-stage CPU.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 import pyspark.sql.functions as F
+
+
+def round_half_up(x: Column) -> Column:
+    """``F.round(x)`` (scale 0, half away from zero) for a DOUBLE ``x``,
+    in double arithmetic.
+
+    Spark's ``Round`` reads the double's decimal string and rounds that
+    HALF_UP.  The string reads ``k.5`` only when the double is exactly
+    ``k.5``: a string that round-trips to ``x`` cannot sit on the other
+    side of a representable half from ``x``.  So the string rounding
+    equals ``rint`` (half to even) everywhere except at exact halves,
+    where it rounds away from zero; ``x + signum(x) * 0.5`` is exact
+    there (halves exist only below 2^52).  NaN, ±inf and null pass
+    through as in ``F.round``.  One difference: a result of zero from a
+    negative ``x`` is ``-0.0`` where ``F.round`` gives ``0.0``; the two
+    compare equal, and a ``.cast("long")`` erases the sign.
+
+    Only for DOUBLE input: ``F.round`` on a DECIMAL or integral column
+    has no per-value string read to save, and this formula would cast
+    it to double.
+    """
+    r = F.rint(x)
+    return F.when(F.abs(x - r) == 0.5, x + F.signum(x) * 0.5).otherwise(r)
 
 
 def round_int_ratio(a: Column, b: Column, k: int, a_scale: int = 0) -> Column:

@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.catalog import load, values_relation
+from lambda_arc_events_filter_spark.functions.exact import round_half_up
 from lambda_arc_events_filter_spark.operators.asof import asof_join
 from lambda_arc_events_filter_spark.operators.skew import salted_join
 from lambda_arc_events_filter_spark.registry import register
@@ -397,7 +398,7 @@ def events_rule_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_delivered"),
         F.min("event_id").alias("first_event_id"),
         F.round(
-            F.sum(F.round(F.col("value") * 10000).cast("long")) / 10000.0, 4
+            F.sum(round_half_up(F.col("value") * 10000).cast("long")) / 10000.0, 4
         ).alias("total_value"),
     )
 

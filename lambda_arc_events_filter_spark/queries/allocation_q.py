@@ -32,6 +32,7 @@ from lambda_arc_events_filter_spark.catalog import load
 from lambda_arc_events_filter_spark.functions.allocation import (
     largest_remainder,
 )
+from lambda_arc_events_filter_spark.functions.exact import round_half_up
 from lambda_arc_events_filter_spark.registry import register
 
 # Fixed budget, in cents ($10M), apportioned across nations.
@@ -104,7 +105,7 @@ def nation_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            F.sum(round_half_up(F.col("o_totalprice") * 100).cast("long")).alias(
                 "rev_cents"
             )
         )
@@ -179,7 +180,7 @@ def lineitem_month_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         li.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+            round_half_up(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
             F.least(
                 F.to_date("o_orderdate"), F.to_date("l_shipdate")
             ).alias("d0"),

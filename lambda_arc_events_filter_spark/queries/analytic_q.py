@@ -13,7 +13,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.catalog import load
-from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
+from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
+    round_int_ratio,
+)
 from lambda_arc_events_filter_spark.functions.rank import global_order_stats
 from lambda_arc_events_filter_spark.operators.interval import (
     interval_overlap_count,
@@ -892,7 +895,7 @@ def lineitem_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate is exact integer addition in any order.
     pr = li.groupBy("l_partkey").agg(
         F.sum(
-            F.round(
+            round_half_up(
                 F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
             ).cast("long")
         ).alias("cents")
@@ -1209,7 +1212,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("o_orderdate").alias("last_d"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            F.sum(round_half_up(F.col("o_totalprice") * 100).cast("long")).alias(
                 "monetary_cents"
             ),
         )
@@ -1313,7 +1316,7 @@ def orders_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     s = o.select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        round_half_up(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
         F.floor(F.unix_timestamp("o_orderdate")).cast("long").alias("date_sec"),
     )
     per_price = s.groupBy("price_cents").agg(F.max("date_sec").alias("mx"))
@@ -1854,7 +1857,7 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost = (
         l.groupBy("l_partkey", "l_suppkey")
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
+            F.sum(round_half_up(F.col("l_extendedprice") * 100).cast("long")).alias(
                 "_cents"
             ),
             F.sum("l_quantity").cast("long").alias("_q"),
@@ -2578,7 +2581,7 @@ def customers_quintile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def quintiles(period_df: DataFrame, alias: str) -> DataFrame:
         agg = period_df.groupBy(F.col("o_custkey").alias("c")).agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            F.sum(round_half_up(F.col("o_totalprice") * 100).cast("long")).alias(
                 "cents"
             )
         )
@@ -2669,9 +2672,9 @@ def brand_pvm_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("int").alias("y"),
         )
         .agg(
-            F.sum(F.round("l_quantity").cast("long")).alias("q"),
+            F.sum(round_half_up(F.col("l_quantity")).cast("long")).alias("q"),
             F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
+                round_half_up(F.col("l_extendedprice") * 100).cast("long")
             ).alias("r"),
         )
     )
@@ -2786,7 +2789,7 @@ def orders_fiscal_spine_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("o_orderpriority").alias("prio"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+        F.sum(round_half_up(F.col("o_totalprice") * 100).cast("long")).alias(
             "cents"
         ),
     )
@@ -2856,7 +2859,7 @@ def orders_deep_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        round_half_up(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
     ranked = global_order_stats(
         o.select("o_orderkey", "o_totalprice"),
@@ -2879,7 +2882,7 @@ def orders_deep_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "page_rank",
             "o_orderkey",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias(
+            round_half_up(F.col("o_totalprice") * 100).cast("long").alias(
                 "price_cents"
             ),
         )
@@ -3031,7 +3034,7 @@ def orders_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         "o_totalprice",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        round_half_up(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
@@ -3101,10 +3104,10 @@ def orders_value_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     lines = li.groupBy("l_orderkey").agg(
         F.sum(
-            F.round(F.col("l_extendedprice") * 100).cast("long")
+            round_half_up(F.col("l_extendedprice") * 100).cast("long")
         ).alias("line_cents")
     )
-    header = F.round(F.col("o_totalprice") * 100).cast("long")
+    header = round_half_up(F.col("o_totalprice") * 100).cast("long")
     cmp = o.join(
         lines, F.col("l_orderkey") == F.col("o_orderkey"), "left"
     ).select(
@@ -3330,7 +3333,7 @@ def orders_mix_shift_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
-                F.round(F.col("o_totalprice") * 100).cast("long")
+                round_half_up(F.col("o_totalprice") * 100).cast("long")
             ).alias("cents"),
         )
     )
@@ -3413,7 +3416,7 @@ def parts_topn_with_other(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
+                round_half_up(F.col("l_extendedprice") * 100).cast("long")
             ).alias("cents")
         )
     )
@@ -3505,7 +3508,7 @@ def orders_duplicate_payment_screen(spark: SparkSession, sf_dir: str) -> DataFra
     base = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_custkey").alias("c"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_half_up(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.to_date("o_orderdate").alias("d"),
     )
     o = base.unionAll(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load, values_relation
 from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
     round_int_ratio,
     round_int_ratio_sql,
 )
@@ -1485,7 +1486,7 @@ def customers_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("id"),
         F.col("c_name").alias("name"),
         F.col("c_nationkey").alias("nat"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
+        round_half_up(F.col("c_acctbal") * 100).cast("long").alias("cents"),
         F.col("c_mktsegment").alias("seg"),
     )
     replica = base.select(
@@ -1713,7 +1714,7 @@ def customers_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
     )
-    cents = F.round(F.col("c_acctbal") * 100).cast("long")
+    cents = round_half_up(F.col("c_acctbal") * 100).cast("long")
     crm = c.select(
         F.col("c_custkey").alias("id"),
         F.col("c_name").alias("name"),
@@ -3274,7 +3275,7 @@ def events_best_of_n_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             F.to_date("ts").alias("day"),
-            F.round(F.col("value") * 100).cast("long").alias("vc"),
+            round_half_up(F.col("value") * 100).cast("long").alias("vc"),
             "event_id",
         )
     )

@@ -13,7 +13,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from lambda_arc_events_filter_spark.catalog import load
-from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
+from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
+    round_int_ratio,
+)
 from lambda_arc_events_filter_spark.functions.stats import group_percentile_cont
 from lambda_arc_events_filter_spark.operators import dedup as D
 from lambda_arc_events_filter_spark.operators import text as T
@@ -581,7 +584,7 @@ def features_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(
                         F.col("event_type") == "purchase",
-                        F.round(F.col("value") * 100).cast("long"),
+                        round_half_up(F.col("value") * 100).cast("long"),
                     )
                 ),
                 F.lit(0),
@@ -673,7 +676,7 @@ def events_best_split_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     no sort, no window over the fact.
     """
     pts = load(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("x"),
+        round_half_up(F.col("value") * 100).cast("long").alias("x"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
     qs = {f"q{i}": i / 10.0 for i in range(1, 10)}
@@ -683,7 +686,9 @@ def events_best_split_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         grid.select(
             F.explode(
-                F.array(*[F.round(F.col(f"q{i}")).cast("long") for i in range(1, 10)])
+                F.array(
+                    *[round_half_up(F.col(f"q{i}")).cast("long") for i in range(1, 10)]
+                )
             ).alias("thr")
         )
         .distinct()

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load
+from lambda_arc_events_filter_spark.functions.exact import round_half_up
 from lambda_arc_events_filter_spark.registry import register
 from lambda_arc_events_filter_spark.sources import readers
 
@@ -450,7 +451,7 @@ def table_reconcile_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents, same as cdc_apply_log
     drift = F.when(
         F.col("b.o_orderkey").isNotNull() & F.col("r.o_orderkey").isNotNull(),
-        F.round(
+        round_half_up(
             F.abs(F.col("r.o_totalprice") - F.col("b.o_totalprice")) * 100
         ).cast("long"),
     ).otherwise(F.lit(0).cast("long"))
@@ -1016,7 +1017,7 @@ def cdc_apply_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_custkey",
             "c_mktsegment",
-            F.round(
+            round_half_up(
                 F.when(F.col("op") == "U", F.col("new_bal")).otherwise(
                     F.round(F.col("c_acctbal"), 2)
                 )
@@ -1097,7 +1098,7 @@ def table_merkle_bucket_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     a = o.select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_half_up(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     a = a.localCheckpoint(eager=False)  # one lineage feeds both replicas
     b = a.select(

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load, values_relation
 from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
     round_int_ratio,
     round_int_ratio_sql,
 )
@@ -2598,10 +2599,10 @@ def embedding_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn("ha", F.expr("slice(ea, 1, 32)"))
         .withColumn("hb", F.expr("slice(eb, 1, 32)"))
         .select(
-            F.round(cosine_expr("ea", "eb") * 1_000_000)
+            round_half_up(cosine_expr("ea", "eb") * 1_000_000)
             .cast("long")
             .alias("c64"),
-            F.round(cosine_expr("ha", "hb") * 1_000_000)
+            round_half_up(cosine_expr("ha", "hb") * 1_000_000)
             .cast("long")
             .alias("c32"),
         )
@@ -3242,7 +3243,7 @@ def retrieval_rerank_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtracts back out after the half-up round).  A float blend hit a
     # .5 boundary at sf0.001 (0.5743325 → 0.574333 vs 0.574332: DuckDB
     # parses 0.2/0.3 literals as DECIMAL, Spark as double).
-    c6 = F.round(F.col("cosine") * 1000000).cast("long")
+    c6 = round_half_up(F.col("cosine") * 1000000).cast("long")
     num = (15 * (c6 + 1000000) + 2000000 * F.col("cov")) * (
         10 + F.col("fpos")
     ) + 90000000

@@ -15,7 +15,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.catalog import load, values_relation
-from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
+from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
+    round_int_ratio,
+)
 from lambda_arc_events_filter_spark.functions.rank import global_order_neighbors
 from lambda_arc_events_filter_spark.queries.text_index import (
     tf_index,
@@ -2549,7 +2552,7 @@ def users_semiadditive_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
-    delta = F.round(
+    delta = round_half_up(
         F.when(
             F.col("event_type") == "purchase", -F.col("value")
         ).otherwise(F.col("value"))

@@ -18,7 +18,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.catalog import load
-from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
+from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
+    round_int_ratio,
+)
 from lambda_arc_events_filter_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -73,14 +76,23 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     7th place, where Spark's string-based Round and DuckDB's binary
     round split deterministically (found by
     ``tests/test_properties.py::test_q01_half_boundary_parity``).
+    The per-row scaling goes through ``exact.round_half_up``, which equals
+    ``F.round`` on a double without Spark's per-value BigDecimal (4 calls
+    a row were most of the scan stage's task CPU).
+
+    The final aggregate and the sort run in ONE task (``coalesce(1)``
+    before ``orderBy``): the sort input is the 6 flag×status groups at
+    any scale, so a range exchange would buy a sampling job and two
+    16-task stages to order 6 rows (``tests/test_plans.py``
+    ``test_one_task_sort_inputs_are_bounded`` pins the domain).
     """
     l = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
-    base_c = F.sum(F.round(F.col("l_extendedprice") * 1e2).cast("long"))
-    disc_c = F.sum(F.round(disc_price * 1e4).cast("long"))
-    charge_c = F.sum(F.round(charge * 1e6).cast("long"))
-    discount_c = F.sum(F.round(F.col("l_discount") * 1e2).cast("long"))
+    base_c = F.sum(round_half_up(F.col("l_extendedprice") * 1e2).cast("long"))
+    disc_c = F.sum(round_half_up(disc_price * 1e4).cast("long"))
+    charge_c = F.sum(round_half_up(charge * 1e6).cast("long"))
+    discount_c = F.sum(round_half_up(F.col("l_discount") * 1e2).cast("long"))
     n = F.count(F.lit(1))
     return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
@@ -99,6 +111,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_int_ratio(discount_c, n, 6, a_scale=2).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
+        .coalesce(1)
         .orderBy("l_returnflag", "l_linestatus")
     )
 
@@ -397,6 +410,11 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     while they fit and degrades to a shuffled join on o_orderkey when they
     don't — the right plan at both sf0.1 and 100 TB.  Measured 0.80 s →
     0.33 s warm at sf0.1.
+
+    The result is one row per nation (at most 25 at any scale), so the
+    final aggregate and the sort share one task (``coalesce(1)`` before
+    ``orderBy``) instead of a range exchange with its sampling job
+    (``test_one_task_sort_inputs_are_bounded`` pins the bound).
     """
     r = F.broadcast(
         load(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
@@ -419,6 +437,7 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
+        .coalesce(1)
         .orderBy(F.col("revenue").desc())
     )
 
@@ -1079,7 +1098,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("l_discount") == 0,
-                    F.round(F.col("l_extendedprice") * 100).cast("long"),
+                    round_half_up(F.col("l_extendedprice") * 100).cast("long"),
                 )
             )
             / 1e2,
@@ -1240,7 +1259,7 @@ def union_by_name_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate.
     """
     o = load(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = round_half_up(F.col("o_totalprice") * 100).cast("long")
     v1 = o.filter(F.col("o_orderdate") < "1998-01-01").select(
         "o_orderkey", cents.alias("cents")
     )

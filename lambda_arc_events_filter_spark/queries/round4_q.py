@@ -17,7 +17,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.catalog import load
-from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
+from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
+    round_int_ratio,
+)
 from lambda_arc_events_filter_spark.functions.rank import global_order_stats
 from lambda_arc_events_filter_spark.registry import register
 
@@ -773,7 +776,7 @@ def customer_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+        F.sum(round_half_up(F.col("o_totalprice") * 100).cast("long")).alias(
             "cents"
         )
     )
@@ -2024,7 +2027,7 @@ def events_blb_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("sw") > 0)
         .select(
             "sub",
-            (F.round(F.round("raw", 6) * 1000000))
+            (round_half_up(F.round("raw", 6) * 1000000))
             .cast("long")
             .alias("m_e6"),
         )

@@ -10,7 +10,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load
-from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
+from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
+    round_int_ratio,
+)
 from lambda_arc_events_filter_spark.operators.range_join import banded_range_join
 from lambda_arc_events_filter_spark.registry import register
 from lambda_arc_events_filter_spark.sources import readers
@@ -820,7 +823,7 @@ def xml_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
+        F.sum(round_half_up(F.col("l_extendedprice") * 100).cast("long")).alias(
             "price_cents"
         ),
     )
@@ -882,7 +885,7 @@ def codec_roundtrip_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(
                 F.sum(
-                    F.round(F.col("o_totalprice") * 100).cast("long")
+                    round_half_up(F.col("o_totalprice") * 100).cast("long")
                 )
                 / 100.0,
                 2,
@@ -1119,7 +1122,7 @@ def custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select("event_type", "value")
     agg = e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias(
+        F.sum(round_half_up(F.col("value") * 100).cast("long")).alias(
             "value_cents"
         ),
     )
@@ -1177,7 +1180,7 @@ def pandas_api_frontdoor(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "event_type",
         "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_half_up(F.col("value") * 100).cast("long").alias("cents"),
     )
     psdf = e.pandas_api()
     out = (

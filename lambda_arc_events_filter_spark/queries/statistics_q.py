@@ -19,7 +19,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.catalog import load, values_relation
-from lambda_arc_events_filter_spark.functions.exact import round_int_ratio
+from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
+    round_int_ratio,
+)
 from lambda_arc_events_filter_spark.functions.rank import (
     global_order_neighbors,
     global_order_stats,
@@ -1020,7 +1023,7 @@ def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_returnflag")
         .agg(
-            F.round(F.min("tw"), 0).cast("long").alias("total_weight"),
+            round_half_up(F.min("tw")).cast("long").alias("total_weight"),
             F.round(
                 F.min(
                     F.when(
@@ -2345,7 +2348,7 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+        F.sum(round_half_up(F.col("o_totalprice") * 100).cast("long")).alias(
             "cents"
         )
     )
@@ -2807,7 +2810,7 @@ def customer_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
         F.sum(
-            F.round(F.col("o_totalprice") * 100).cast("long")
+            round_half_up(F.col("o_totalprice") * 100).cast("long")
         ).alias("cents")
     )
     a = rev.agg(
@@ -3228,7 +3231,7 @@ def events_ab_quantile_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
         e.groupBy("user_id")
         .agg(
-            F.round(F.avg("value") * 1_000_000).cast("long").alias("y6")
+            round_half_up(F.avg("value") * 1_000_000).cast("long").alias("y6")
         )
         .withColumn("variant", F.col("user_id") % 2)
     )
@@ -3244,7 +3247,7 @@ def events_ab_quantile_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the quantile of integer micro-units is an exact quarter-integer
         # (frac ∈ {0, ¼, ½, ¾} on ≤2⁵³ values): 4× casts back to an exact
         # integer; half-up to whole micro-units stays in integer space
-        t = F.round(F.col(col) * 4).cast("long")
+        t = round_half_up(F.col(col) * 4).cast("long")
         return F.call_function(
             "div", F.lit(2) * t + F.lit(4), F.lit(8)
         ) / F.lit(1_000_000.0)
@@ -3379,7 +3382,9 @@ def nations_welch_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("c_custkey", F.col("n_name").alias("nation"))
         ),
         F.col("c_custkey") == F.col("o_custkey"),
-    ).select("nation", F.round(F.col("o_totalprice") * 100).cast("long").alias("v"))
+    ).select(
+        "nation", round_half_up(F.col("o_totalprice") * 100).cast("long").alias("v")
+    )
     per = cents.groupBy("nation").agg(
         F.count(F.lit(1)).alias("n1"),
         F.sum("v").alias("s1"),
@@ -3600,7 +3605,7 @@ def events_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row relation.
     """
     v = load(spark, sf_dir, "events").select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("x")
+        "event_type", round_half_up(F.col("value") * 100).cast("long").alias("x")
     )
     g = v.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -3921,7 +3926,7 @@ def events_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_half_up(F.col("value") * 100).cast("long").alias("cents"),
         F.when(F.col("event_id") % 2 == 0, "cal").otherwise("test").alias(
             "split"
         ),
@@ -4053,7 +4058,7 @@ def events_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").cast("decimal(38,0)"),
             F.lit(2).cast("decimal(38,0)"),
         ) % 2).alias("arm"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
+        round_half_up(F.col("value") * 100).cast("long").alias("v"),
     )
     cells = e.groupBy("event_type", "dow", "arm").agg(
         F.count(F.lit(1)).alias("n"),
@@ -5944,7 +5949,7 @@ def users_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold prunes the output to the tail."""
     u = load(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("x"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_half_up(F.col("value") * 100).cast("long"))
         .cast("long")
         .alias("y"),
     )
@@ -6064,7 +6069,7 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("purchase", "signup"))
         .groupBy(
-            F.round(F.col("value") * 100).cast("long").alias("cents")
+            round_half_up(F.col("value") * 100).cast("long").alias("cents")
         )
         .agg(
             F.sum(

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import SCHEMAS, load
+from lambda_arc_events_filter_spark.functions.exact import round_half_up
 from lambda_arc_events_filter_spark.registry import register
 from lambda_arc_events_filter_spark.sources import readers
 from lambda_arc_events_filter_spark.sources.streams import events_stream, run_to_memory
@@ -886,7 +887,7 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = s.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         (
-            F.sum(F.round(F.col("value") * 10000).cast("long")) / 10000.0
+            F.sum(round_half_up(F.col("value") * 10000).cast("long")) / 10000.0
         ).alias("tv_raw"),
     )
     emitted = run_to_memory(agg, "upd", mode="update", state_partitions=2)
@@ -1348,7 +1349,7 @@ def stream_state_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = events_stream(spark, sf_dir)
     agg = s.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
+        F.sum(round_half_up(F.col("value") * 100).cast("bigint")).alias(
             "total_value_cents"
         ),
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.catalog import load
 from lambda_arc_events_filter_spark.functions.exact import (
+    round_half_up,
     half_up_div,
     half_up_div_sql,
     round_int_ratio,
@@ -165,7 +166,7 @@ def daily_spine_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .groupBy(F.to_date("ts").alias("d"))
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("v"))
+        .agg(F.sum(round_half_up(F.col("value") * 100).cast("long")).alias("v"))
     )
     obs = daily.filter(~(F.dayofmonth("d") % 7).isin(0, 3, 4))
     nb = global_order_neighbors(
@@ -567,7 +568,7 @@ def events_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("x")
+        F.sum(round_half_up(F.col("value") * 100).cast("long")).alias("x")
     )
     daily = daily.localCheckpoint(eager=False)
     bounds = daily.agg(

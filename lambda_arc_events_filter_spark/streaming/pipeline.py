@@ -57,7 +57,8 @@ def decode_kinesis_records(records: DataFrame, data_col: str = "data") -> DataFr
     JVM-side, per micro-batch (vs per-record Python in a Lambda handler).
 
     A malformed payload never fails the batch: invalid base64 decodes to
-    null (ANSI ``unbase64`` would raise and kill the stream), and
+    null (on a truncated payload ``unbase64`` would raise and kill the
+    stream, with or without ANSI mode: the JDK Base64 decoder throws), and
     ``from_json`` is PERMISSIVE, so both bad base64 and bad JSON leave a
     null or all-null ``event`` — count them as ``event._id IS NULL``.
     """

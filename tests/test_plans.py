@@ -4,6 +4,8 @@ stay correct."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -121,6 +123,52 @@ def test_star_join_streams_the_fact_table(spark, sf_dir):
     assert "lineitem" in first_scan_table, (
         "lineitem must be the streaming-side leaf, got " + first_scan_table
     )
+
+
+ONE_TASK_SORTS = {
+    # query -> the columns its ORDER BY sorts on
+    "q01_pricing_summary": ["l_returnflag", "l_linestatus"],
+    "join_multiway_star": ["n_name"],
+}
+
+
+@pytest.mark.parametrize("name", sorted(ONE_TASK_SORTS))
+def test_bounded_results_sort_in_one_task(spark, sf_dir, name):
+    """q01 and the star join order a result bounded by the grouping
+    domain, so they coalesce to one task before the sort: the executed
+    plan must hold no range exchange (which costs a sampling job and two
+    stages to order at most 25 rows)."""
+    df = ALL[name].fn(spark, sf_dir)
+    assert I.executed_range_exchanges(df) == (0, 0), I.formatted_plan(df)[:3000]
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_one_task_sort_inputs_are_bounded(sf_dir, scale):
+    """The fact behind the one-task sorts: q01 groups on (l_returnflag,
+    l_linestatus), at most 6 pairs, and the star join on the nation name,
+    at most 25 rows, at every scale."""
+    import pyarrow.parquet as pq
+
+    root = os.path.join(os.path.dirname(sf_dir), scale)
+    if not os.path.exists(os.path.join(root, "lineitem.parquet")):
+        pytest.skip(f"no {scale} fixture")
+    flags = pq.read_table(
+        os.path.join(root, "lineitem.parquet"),
+        columns=["l_returnflag", "l_linestatus"],
+    )
+    pairs = flags.group_by(["l_returnflag", "l_linestatus"]).aggregate([])
+    assert pairs.num_rows <= 6
+    assert pq.read_metadata(os.path.join(root, "nation.parquet")).num_rows <= 25
+
+
+@pytest.mark.parametrize("name", sorted(ONE_TASK_SORTS))
+def test_one_task_sort_order_matches_duckdb(spark, sf_dir, duck, name):
+    """Row ORDER, which the oracle comparison ignores: Spark's rows come
+    back in the sequence of the DuckDB twin's ORDER BY."""
+    spec, cols = ALL[name], ONE_TASK_SORTS[name]
+    got = [tuple(r[c] for c in cols) for r in spec.fn(spark, sf_dir).collect()]
+    want = list(duck.sql(spec.oracle).df()[cols].itertuples(index=False, name=None))
+    assert got == want
 
 
 def test_bucketed_join_is_exchange_free(spark, sf_dir):

@@ -9,6 +9,8 @@ as-of join totality, jaccard symmetry bounds.
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -699,6 +701,48 @@ def test_round_int_ratio_matches_fraction_and_duckdb(spark, cases, k, a_scale):
         ratio = Fraction(a, b * 10**a_scale)
         expected = float((2 * ratio * 10**k + 1).__floordiv__(2)) / 10**k
         assert got[i] == expected == duck[i], (a, b, k, a_scale)
+
+
+_halves = st.integers(-(2**51), 2**51).map(lambda k: k + 0.5)
+_TINY = 2.2250738585072014e-308  # smallest normal double
+round_inputs = st.lists(
+    st.one_of(
+        _halves,
+        _halves.flatmap(
+            lambda h: st.sampled_from(
+                [math.nextafter(h, -math.inf), math.nextafter(h, math.inf)]
+            )
+        ),
+        st.integers(-(10**6), 10**6).map(lambda k: k / 100),  # scaled cents
+        st.floats(2.0**51, 2.0**53),
+        st.floats(-(2.0**53), -(2.0**51)),
+        st.floats(-_TINY, _TINY, allow_subnormal=True),
+        st.sampled_from([0.0, -0.0, math.nan, math.inf, -math.inf, None]),
+        st.floats(),
+    ),
+    min_size=1,
+    max_size=60,
+)
+# Every example also carries these, so a half-to-even rounding cannot
+# slip through on an unlucky draw.
+ROUND_EDGES = [0.5, -0.5, 1.5, -2.5, 2.0**52 - 0.5, 5e-324, -0.0, None]
+
+
+@given(xs=round_inputs)
+@settings(**SETTINGS)
+def test_round_half_up_equals_spark_round(spark, xs):
+    """exact.round_half_up(x) ≡ F.round(x) (scale 0) on DOUBLE input:
+    exact halves of both signs and their ulp neighbours, ±0.0, NaN, ±inf,
+    2^51..2^53, subnormals and null (compared null-safe; NaN equals NaN
+    and -0.0 equals 0.0 in Spark)."""
+    from lambda_arc_events_filter_spark.functions.exact import round_half_up
+
+    df = spark.createDataFrame([(x,) for x in xs + ROUND_EDGES], "x double")
+    x = F.col("x")
+    bad = df.filter(~F.round(x).eqNullSafe(round_half_up(x))).select(
+        x, F.round(x).alias("spark"), round_half_up(x).alias("helper")
+    )
+    assert bad.collect() == []
 
 
 # ---------------------------------------------------------------------------

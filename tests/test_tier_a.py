@@ -12,6 +12,7 @@ import base64
 import json
 
 import pyspark.sql.functions as F
+import pytest
 
 from lambda_arc_events_filter_spark.streaming.pipeline import (
     decode_kinesis_records,
@@ -98,13 +99,18 @@ def test_malformed_payload_yields_null_event(spark):
     )
 
 
+def _truncated(payload: str) -> str:
+    return payload[: (len(payload) // 4) * 4 - 3]  # length 1 mod 4
+
+
 def test_bad_base64_yields_null_event(spark):
-    """Invalid base64 in one record must not fail the batch (ANSI
-    ``unbase64`` raises "Last unit does not have enough valid bits"): it
-    decodes to a null ``event`` and counts as malformed beside the good
-    record."""
+    """Invalid base64 in one record must not fail the batch (plain
+    ``unbase64`` raises on the truncated payload with or without ANSI
+    mode, see ``test_unbase64_raises_in_both_ansi_modes``): the truncated
+    and the non-base64 payload each decode to a null ``event`` and count
+    as malformed beside the good record."""
     good = _b64(EVENTS[0])
-    truncated = good[: (len(good) // 4) * 4 - 3]  # length 1 mod 4
+    truncated = _truncated(good)
     recs = spark.createDataFrame(
         [("0", good, "pk"), ("1", truncated, "pk"), ("2", "%%not*b64", "pk")],
         "sequenceNumber string, data string, partitionKey string",
@@ -119,6 +125,22 @@ def test_bad_base64_yields_null_event(spark):
         decode_kinesis_records(recs).filter(F.col("event._id").isNull()).count()
     )
     assert malformed == 2
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_unbase64_raises_in_both_ansi_modes(spark, ansi):
+    """Why ``decode_kinesis_records`` uses ``try_to_binary``: plain
+    ``unbase64`` fails the whole query on a truncated payload even with
+    ``spark.sql.ansi.enabled=false`` (the JDK MIME Base64 decoder throws;
+    no ANSI check is involved)."""
+    df = spark.createDataFrame([(_truncated(_b64(EVENTS[0])),)], "data string")
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        with pytest.raises(Exception, match="IllegalArgumentException|base64"):
+            df.select(F.unbase64("data")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
 
 
 def test_write_stream_parquet_restart_exactly_once(spark, tmp_path):
