@@ -9,7 +9,9 @@ DuckDB-oracle sees identical types.  Schemas transcribed from FIXTURES.md
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -142,11 +144,10 @@ def _ingested_path(sf_dir: str, table: str) -> str:
     At the 100 TB design point this step is a no-op — distributed writers
     produce many files/row groups already, which is why the check below
     returns the source path untouched when the layout is already splittable.
-    ``SPARK_GRAFT_INGEST=0`` disables (tests cover both paths).
+    Any failure also returns the source path.  A test pins that the
+    rewritten copy reads back identical to the source file.
     """
     src = table_path(sf_dir, table)
-    if os.environ.get("SPARK_GRAFT_INGEST", "1") == "0":
-        return src
     cached = _INGEST_PATHS.get(src)
     if cached is not None and os.path.exists(cached):
         return cached
@@ -183,14 +184,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
     ``spark.read.schema(...)`` (not inference) keeps the scan single-pass and
     the types bit-stable across engines.  Catalyst still gets full predicate
-    pushdown / column pruning on top of this scan.
-
-    ``events.ts`` has shipped as parquet TIMESTAMP(NANOS) in some fixture
-    generations, which Spark's parquet reader rejects outright
-    ([PARQUET_TYPE_ILLEGAL]).  When the footer says nanos we read it as raw
-    nanosecond longs (``spark.sql.legacy.parquet.nanosAsLong``) and convert
-    to TimestampType in the plan — lossless (values are µs-grain) and still
-    a single vectorized columnar scan.  Micros fixtures read directly.
+    pushdown / column pruning on top of this scan.  ``events`` goes
+    through ``read_events`` (either unit of ``events.ts``).
 
     The resolved scan is kept in the session group of ``sf_dir``
     (``cache.session_group``): resolving a datasource relation costs
@@ -224,26 +219,48 @@ def _events_ts_is_nanos(path: str) -> bool:
         return False
 
 
-def _load_uncached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    if table == "events" and _events_ts_is_nanos(_ingested_path(sf_dir, table)):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        read_schema = StructType(
+def read_events(
+    spark: SparkSession, path: str, read: Callable[[StructType], DataFrame]
+) -> DataFrame:
+    """Read the ``events`` parquet at ``path`` through ``read(schema)`` — a
+    batch or a streaming reader — whichever unit ``ts`` was written in.
+
+    ``events.ts`` has shipped as parquet TIMESTAMP(NANOS) in some fixture
+    generations, which Spark's parquet reader rejects outright
+    ([PARQUET_TYPE_ILLEGAL]).  When the footer says nanos, ``ts`` is read
+    as raw nanosecond longs (``spark.sql.legacy.parquet.nanosAsLong``) and
+    converted to TimestampType in the plan — lossless (values are
+    µs-grain) and still a single vectorized columnar scan.  Micros files
+    read directly.
+    """
+    schema = SCHEMAS["events"]
+    if not _events_ts_is_nanos(path):
+        return read(schema)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = read(
+        StructType(
             [
-                StructField("ts", LongType(), True)
-                if f.name == "ts"
-                else f
-                for f in SCHEMAS[table].fields
+                StructField("ts", LongType(), True) if f.name == "ts" else f
+                for f in schema.fields
             ]
         )
-        import pyspark.sql.functions as F
+    )
+    return raw.withColumn(
+        "ts", F.timestamp_micros(F.expr("ts div 1000"))
+    ).select(schema.fieldNames())
 
-        return (
-            spark.read.schema(read_schema)
-            .parquet(_ingested_path(sf_dir, table))
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            .select([f.name for f in SCHEMAS[table].fields])
-        )
-    return spark.read.schema(SCHEMAS[table]).parquet(_ingested_path(sf_dir, table))
+
+def _read_parquet(spark: SparkSession, table: str, path: str) -> DataFrame:
+    def read(schema: StructType) -> DataFrame:
+        return spark.read.schema(schema).parquet(path)
+
+    if table == "events":
+        return read_events(spark, path, read)
+    return read(SCHEMAS[table])
+
+
+def _load_uncached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    return _read_parquet(spark, table, _ingested_path(sf_dir, table))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -35,12 +35,12 @@ from pyspark.sql import Column, DataFrame, Window
 from lambda_arc_events_filter_spark.cache import band_bounds
 
 #: internal column names the banded-rank plan materializes on the fact
-#: relation (plus ``_rn``/``_n`` from the ``group`` strategy).  Input
-#: columns and caller aliases must not collide — validated up front.
+#: relation.  Input columns and caller aliases must not collide —
+#: validated up front.
 _RESERVED_NAMES = frozenset(
     {
         "_vd", "_band", "_cnt", "_gid", "_n", "_off", "_lr", "_rank",
-        "_lo", "_hi", "_frac", "_v", "_v_lo", "_v_hi", "q_alias", "_rn",
+        "_lo", "_hi", "_frac", "_v", "_v_lo", "_v_hi", "q_alias",
     }
 )
 
@@ -51,9 +51,9 @@ def _join_null_safe(
     """Inner join on ``cols`` with NULL-safe key equality (``<=>``).
 
     A plain ``df.join(other, cols)`` drops rows whose key contains NULL —
-    which would make the ``range`` strategy silently lose NULL-key groups
-    that the ``group`` strategy (a window, no join) keeps.  Key columns are
-    emitted once, from the left side.
+    which would make the banded plan silently lose NULL-key groups that
+    Spark's ``percentile`` keeps.  Key columns are emitted once, from the
+    left side.
     """
     l, r = left.alias("_l"), right.alias("_r")
     if broadcast:
@@ -75,8 +75,6 @@ def group_percentile_cont(
     quantiles: dict[str, float],
     extra_aggs: Sequence[Column] = (),
     num_partitions: int | None = None,
-    strategy: str = "range",
-    materialize: bool = False,
 ) -> DataFrame:
     """Exact interpolated per-group quantiles.
 
@@ -84,45 +82,23 @@ def group_percentile_cont(
     ``quantiles`` (alias → q), plus any ``extra_aggs`` computed in a
     parallel aggregation pass.  NULL values in ``value_col`` are excluded
     (matching both the builtin percentile and DuckDB quantile_cont).
+    Output equals Spark's builtin ``percentile`` — pytest asserts it.
 
     ``extra_aggs`` run in their own plain ``groupBy(keys)`` pass over the
     non-null rows (r13; previously they rode a GROUPING SETS fusion that
     also evaluated-and-discarded them per band — see the in-body History
     note for why that fusion never actually shared work at runtime).
 
-    ``strategy`` picks between two exact plans with identical output —
-    pytest asserts their equality:
-
-    - ``group``: one window partitioned by the group key.  Each group
-      sorts in ONE task — fine while a group fits a task's sort budget,
-      a cliff when it doesn't.
-    - ``range``: range-partitioned global rank (below).  The 100 TB
-      posture — a group never meets a single task, so there is no
-      per-group cliff — and, as of the round-4 re-measurement, ALSO the
-      faster plan at sf0.1 (agg_stats 0.60 → 0.47 s, equi-depth
-      histogram 0.33 → 0.16 s, PSI 0.63 → 0.38 s: per-group sorting
-      capped parallelism at |groups| tasks, which the range plan's extra
-      stage constants now more than pay for).  ``range`` is therefore
-      the DEFAULT (the cluster-sane-default polarity, like session.py's
-      scan sizing); ``group`` remains selectable for tiny-relation
-      callers.
-
-    ``materialize`` (range strategy only): localCheckpoint the
-    |groups|·|bands|-row ``sizes`` aggregate, so its consumers (the
-    offsets/targets window branches) read an executor-local relation
-    instead of re-reducing the shared shuffle output.  Since the r13 restructure the
-    fact pass behind ``sizes`` is shuffled once and REUSED even without
-    it (plain aggregate — nothing for filter pushdown to specialize), so
-    the lever only trims the small reduce-side re-aggregations; it stays
-    off by default (the checkpoint barrier serializes stages that
-    otherwise run concurrently, and an embedded checkpoint disqualifies
-    the caller from the prepared-plan cache: the registry keeps plans
-    over query-private RDDs out on its own, since a cached plan would
-    pin the checkpointed RDD — result caching, not benchmarking).
+    The plan is a value-banded global rank (below), not a window
+    partitioned by the group key: a group never meets a single task, so
+    there is no per-group sort cliff, and the round-4 re-measurement
+    found it also the faster plan at sf0.1 (agg_stats 0.60 → 0.47 s,
+    equi-depth histogram 0.33 → 0.16 s, PSI 0.63 → 0.38 s: per-group
+    sorting capped parallelism at |groups| tasks).  ``num_partitions``
+    sets the band count (default: the session's parallelism, capped at
+    32).
     """
     spark = df.sparkSession
-    if strategy not in ("group", "range"):
-        raise ValueError(f"unknown percentile strategy {strategy!r}")
     keys = list(keys)
     clashes = _RESERVED_NAMES.intersection(df.columns).union(
         _RESERVED_NAMES.intersection(quantiles)
@@ -134,7 +110,7 @@ def group_percentile_cont(
         )
     if extra_aggs:
         # resolve the extra aliases from the analyzed schema (no job runs)
-        # and refuse EVERY collision class up front, for both strategies:
+        # and refuse EVERY collision class up front:
         # a reserved internal name would be silently dropped with the
         # internal column, a key/quantile alias would shadow or vanish in
         # the final select, and a duplicate alias is ambiguous (ADVICE r7).
@@ -150,24 +126,6 @@ def group_percentile_cont(
                 f"extra_aggs alias: {sorted(bad) + dupes}"
             )
     nn = df.filter(F.col(value_col).isNotNull())
-
-    if strategy == "group":
-        w_rank = Window.partitionBy(*keys).orderBy(value_col)
-        w_all = Window.partitionBy(*keys)
-        ranked_g = nn.select(
-            "*",
-            F.row_number().over(w_rank).alias("_rn"),
-            F.count(F.lit(1)).over(w_all).alias("_n"),
-        )
-        aggs: list[Column] = []
-        for alias, q in quantiles.items():
-            p = F.lit(1.0) + (F.col("_n") - F.lit(1)) * F.lit(q)
-            lo, hi = F.floor(p), F.ceil(p)
-            v_lo = F.max(F.when(F.col("_rn") == lo, F.col(value_col)))
-            v_hi = F.max(F.when(F.col("_rn") == hi, F.col(value_col)))
-            frac = F.max(p - lo)
-            aggs.append((v_lo + frac * (v_hi - v_lo)).alias(alias))
-        return ranked_g.groupBy(*keys).agg(*aggs, *extra_aggs)
 
     if num_partitions is None:
         num_partitions = min(32, spark.sparkContext.defaultParallelism)
@@ -270,8 +228,6 @@ def group_percentile_cont(
     # fact sort (targets → hit_bands → bd_hit) and measured ~15% SLOWER
     # at sf0.1 — the window form adds no stage.
     sizes = bd.groupBy(*keys, "_band").agg(F.count(F.lit(1)).alias("_cnt"))
-    if materialize:
-        sizes = sizes.localCheckpoint(eager=True)
     w_off = (
         Window.partitionBy(*keys)
         .orderBy("_band")

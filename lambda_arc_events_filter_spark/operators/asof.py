@@ -23,7 +23,6 @@ def asof_join(
     key: str,
     time_col: str,
     value_cols: Sequence[str],
-    tolerance: str | None = None,
     tiebreakers: Sequence[str] = (),
 ) -> DataFrame:
     """For each left row, attach the latest PRIOR (or same-instant) right row
@@ -33,8 +32,6 @@ def asof_join(
     ``value_cols`` column of the right side lands on left rows as
     ``_asof_<col>`` plus the match timestamp as ``_asof_time``.
 
-    ``tolerance``: optional INTERVAL body (e.g. ``'30 MINUTES'``) — matches
-    older than that are nulled out, like pandas ``merge_asof(tolerance=…)``.
     ``tiebreakers``: extra ordering columns making same-instant right rows
     deterministic (last by tiebreaker wins).
 
@@ -109,12 +106,4 @@ def asof_join(
         carry(time_col).alias("_asof_time"),
     ).filter(F.col("_side") == 1)
 
-    asof_cols = [f"_asof_{c}" for c in value_cols] + ["_asof_time"]
-    if tolerance is not None:
-        in_tol = F.col("_asof_time") >= F.col(time_col) - F.expr(
-            f"INTERVAL {tolerance}"
-        )
-        carried = carried.withColumns(
-            {c: F.when(in_tol, F.col(c)) for c in asof_cols}
-        )
-    return carried.select(*left.columns, *asof_cols)
+    return carried.select(*left.columns, *aliases)

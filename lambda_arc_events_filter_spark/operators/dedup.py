@@ -183,7 +183,6 @@ def exact_jaccard_pairs(
     id_col: str,
     block_col: str,
     threshold: float,
-    max_doc_freq: int | None = None,
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs WITHIN a blocking key (e.g. lang), via a
@@ -200,13 +199,6 @@ def exact_jaccard_pairs(
     sf0.1, and between feasible and not at 100 TB.  (The naive form scored
     every same-block pair with a 50-element array_intersect.)
 
-    ``max_doc_freq``: posting-frequency cap — shingles in more than this
-    many documents are excluded from CANDIDATE generation (their buckets
-    cost df² pair rows), and the common-shingle count is then re-computed
-    over the FULL postings for candidates only, so emitted jaccard values
-    are still exact.  A true-near-dup pair sharing *only* capped shingles
-    would be missed — set the cap well above boilerplate df (the fixture's
-    max df is 25/5000 docs; tests pin capped == uncapped there).
     ``postings``: a prebuilt postings-index relation (from
     ``postings_index``-style sharing at the query layer) with columns
     (_id, _blk, sk, _n); when given, the internal shingle build is
@@ -232,34 +224,16 @@ def exact_jaccard_pairs(
         post = shingle_postings(
             base, id_col, extra_cols=("_blk",), with_sizes=True
         ).localCheckpoint()
-    cand_post = post
-    if max_doc_freq is not None:
-        cand_post = post.join(
-            F.broadcast(_hot_posting_keys(post, max_doc_freq)), "sk", "left_anti"
-        )
     # set sizes ride the postings rows (with_sizes) and the join keys, so
     # the final Jaccard needs no separate size relation or join-back
-    a = cand_post.select(F.col("_id").alias("id_a"), F.col("_n").alias("n_a"), "_blk", "sk")
-    b = cand_post.select(F.col("_id").alias("id_b"), F.col("_n").alias("n_b"), "_blk", "sk")
+    a = post.select(F.col("_id").alias("id_a"), F.col("_n").alias("n_a"), "_blk", "sk")
+    b = post.select(F.col("_id").alias("id_b"), F.col("_n").alias("n_b"), "_blk", "sk")
     pairs = (
         a.join(b, ["_blk", "sk"])
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    if max_doc_freq is not None:
-        # candidates found on rare shingles; recount common shingles over
-        # the FULL postings so the jaccard itself is uncapped-exact
-        cand = pairs.select("id_a", "id_b", "n_a", "n_b")
-        pa = post.select(F.col("_id").alias("id_a"), "sk").join(
-            F.broadcast(cand), "id_a"
-        )
-        pb = post.select(F.col("_id").alias("id_b"), "sk")
-        pairs = (
-            pa.join(pb, ["id_b", "sk"])
-            .groupBy("id_a", "id_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
     return (
         pairs.withColumn(
             "jaccard",

@@ -96,7 +96,6 @@ def ancestor_rollup(
     parent_col: str,
     value_col: str,
     max_depth: int = 64,
-    strict: bool = True,
 ) -> DataFrame:
     """Hierarchy closure by POINTER DOUBLING: for every node, its root,
     depth, and the sum of ``value_col`` along the ancestor path
@@ -123,12 +122,10 @@ def ancestor_rollup(
     Output: (id_col, root_id, depth, path_value); a root has depth 0
     and path_value = its own value.
 
-    ``strict`` (default): nodes still unresolved when the doubling cap
-    expires — a chain deeper than ``max_depth``, a CYCLE, or a dangling
-    parent pointer — raise a ``ValueError`` naming the count instead of
-    passing through as root_id=NULL rows with partial accumulators
-    (silent wrong data).  ``strict=False`` restores the pass-through for
-    callers that want to quarantine the stragglers themselves.
+    Nodes still unresolved when the doubling cap expires — a chain
+    deeper than ``max_depth``, a CYCLE, or a dangling parent pointer —
+    raise a ``ValueError`` naming the count instead of passing through as
+    root_id=NULL rows with partial accumulators (silent wrong data).
     """
     val = F.col(value_col).cast("long")
     # jump1: one-hop entries.  Roots saturate immediately.
@@ -211,16 +208,14 @@ def ancestor_rollup(
         # remain (chain deeper than max_depth, a cycle, or a dangling
         # parent).  The clean path pays nothing — convergence already
         # proved zero stragglers via the O(1) probe.
-        if strict:
-            n_stuck = st.filter(F.col("_root").isNull()).count()
-            if n_stuck:
-                raise ValueError(
-                    f"ancestor_rollup: {n_stuck} node(s) unresolved after "
-                    f"{rounds_cap} doubling rounds (max_depth={max_depth}) "
-                    "— chain too deep, cycle, or dangling parent pointer; "
-                    "raise max_depth or pass strict=False to pass them "
-                    "through with root_id NULL"
-                )
+        n_stuck = st.filter(F.col("_root").isNull()).count()
+        if n_stuck:
+            raise ValueError(
+                f"ancestor_rollup: {n_stuck} node(s) unresolved after "
+                f"{rounds_cap} doubling rounds (max_depth={max_depth}) "
+                "— chain too deep, cycle, or dangling parent pointer; "
+                "raise max_depth or fix the hierarchy"
+            )
     # depth counts VISITED nodes including self; hops/edges = depth − 1
     return st.select(
         F.col("_n").alias(id_col),

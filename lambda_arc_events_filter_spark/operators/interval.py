@@ -32,13 +32,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def _cells(start: str, end: str, cell_s: int, validate: bool) -> Column:
+def _cells(start: str, end: str, cell_s: int) -> Column:
     seq = F.sequence(
         F.floor(F.unix_timestamp(start) / cell_s).cast("long"),
         F.floor(F.unix_timestamp(end) / cell_s).cast("long"),
     )
-    if not validate:
-        return seq
     # A descending interval (start > end) would otherwise be SILENTLY
     # wrong: same-cell descents still own one cell, cross-cell descents
     # make ``sequence`` raise an opaque step error or the row own no
@@ -75,7 +73,6 @@ def interval_overlap_count(
     b_end: str = "b_end",
     cell_s: int = 600,
     count_col: str = "n_matches",
-    validate: bool = True,
 ) -> DataFrame:
     """Per-left-interval count of overlapping right intervals (closed
     bounds: ``a_start <= b_end AND b_start <= a_end``), one output row per
@@ -85,12 +82,10 @@ def interval_overlap_count(
     output — they must be unique per left interval.  Structural
     preconditions are checked at plan-construction time: ``a`` and ``b``
     column sets must be disjoint and neither may already contain the
-    injected ``_cell``.  Intervals must satisfy ``start <= end``; with
-    ``validate`` (the default) a descending interval raises at run time
-    via a codegen'd ``raise_error`` guard on the cell enumeration (cost:
-    one comparison per row), instead of silently owning the wrong cells.
-    ``validate=False`` restores the unchecked plan for callers that prove
-    the invariant upstream.
+    injected ``_cell``.  Intervals must satisfy ``start <= end``; a
+    descending interval raises at run time via a codegen'd
+    ``raise_error`` guard on the cell enumeration (cost: one comparison
+    per row), instead of silently owning the wrong cells.
     """
     for side, df in (("a", a), ("b", b)):
         if "_cell" in df.columns:
@@ -104,8 +99,8 @@ def interval_overlap_count(
             "interval_overlap_count: a/b column names must be disjoint; "
             f"shared: {sorted(shared)}"
         )
-    ac = a.withColumn("_cell", F.explode(_cells(a_start, a_end, cell_s, validate)))
-    bc = b.withColumn("_cell", F.explode(_cells(b_start, b_end, cell_s, validate)))
+    ac = a.withColumn("_cell", F.explode(_cells(a_start, a_end, cell_s)))
+    bc = b.withColumn("_cell", F.explode(_cells(b_start, b_end, cell_s)))
     a_cell0 = F.floor(F.unix_timestamp(a_start) / cell_s).cast("long")
     b_cell0 = F.floor(F.unix_timestamp(b_start) / cell_s).cast("long")
     match = (

@@ -337,29 +337,23 @@ def ivf_build_index(
 
 def ivf_topk(
     queries: DataFrame,
-    corpus: DataFrame | None = None,
+    index: tuple[DataFrame, DataFrame],
     k: int = 5,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    label_col: str = "label",
-    index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: probe only the ``nprobe`` cells whose
     centroids are nearest the query, then exact-score within those cells.
 
     Probe-only: takes a prebuilt ``index`` from :func:`ivf_build_index`
-    (or builds one uncached from ``corpus`` as a convenience).  The probe
+    (or :func:`ivf_refresh_append`).  The probe
     touches the broadcast centroid table plus the probed cells' partitions
     of the materialized unit corpus — scoring cost × (nprobe/ncells) vs
     brute force, and no per-query HOF work on the corpus side at all.
     Approximate because the true neighbor may live in an unprobed cell
     (tests measure recall against brute_force_topk).
     """
-    if index is None:
-        if corpus is None:
-            raise ValueError("ivf_topk needs either a corpus or a prebuilt index")
-        index = ivf_build_index(corpus, id_col, vec_col, label_col)
     cents, units = index
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -607,7 +601,6 @@ def kmeans_lloyd(
     vec_col: str,
     k: int = 8,
     iters: int = 2,
-    materialize: bool = False,
 ) -> DataFrame:
     """Deterministic Lloyd k-means on DataFrames: ``iters`` rounds of
     assign-then-update from a fixed seed (the first ``k`` vectors by id),
@@ -636,17 +629,11 @@ def kmeans_lloyd(
     is the real-world seeding.)
     """
     # The corpus is read once per round (assignment) plus once for the
-    # dims refresh — O(iters) scans.  ``materialize=True`` localCheckpoints
-    # the input so rounds 2..n read executor-local blocks instead of
-    # re-running the parquet scan each round (the same multi-pass move the
-    # dedup postings use) — worth it for many-iteration cluster runs.
-    # Default FALSE because the checkpoint is query-private: the
-    # prepared-plan cache keeps such plans out on its own (a cached plan
-    # would bake in the checkpointed RDD and repeat executions would skip
-    # the corpus scan — result caching; see registry._with_plan_cache),
-    # so the caller loses its prepared plan.
-    if materialize:
-        emb = emb.localCheckpoint()
+    # dims refresh — O(iters) scans.  No localCheckpoint of the input: the
+    # checkpoint is query-private, so the prepared-plan cache would keep
+    # the caller's plan out (a cached plan would bake in the checkpointed
+    # RDD and repeat executions would skip the corpus scan — result
+    # caching; see registry._with_plan_cache).
     # In-row argmin: the k centroids broadcast as ONE row carrying an
     # array<struct<cluster, cent>>, and each corpus row folds over it
     # with a higher-order transform + array_min (struct ordering =

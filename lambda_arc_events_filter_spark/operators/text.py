@@ -8,7 +8,7 @@ inside whole-stage codegen; the only shuffles are the final aggregations.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 #: tiny english-ish stopword list, shared verbatim with oracle SQL
 STOPWORDS = ("a", "the", "and", "of", "to")
@@ -55,29 +55,6 @@ def total_token_len_expr(tokens_col: str = "tokens") -> Column:
     )
 
 
-def distinct_ratio_expr(tokens_col: str = "tokens") -> Column:
-    """Type-token ratio: lexical diversity [0,1]."""
-    return (
-        F.size(F.array_distinct(F.col(tokens_col)))
-        / F.size(F.col(tokens_col))
-    ).cast("double")
-
-
-def stopword_ratio_expr(tokens_col: str = "tokens") -> Column:
-    arr = ",".join(f"'{w}'" for w in STOPWORDS)
-    return F.expr(
-        f"size(filter({tokens_col}, t -> array_contains(array({arr}), t)))"
-        f" / cast(size({tokens_col}) as double)"
-    )
-
-
-def mean_token_len_expr(tokens_col: str = "tokens") -> Column:
-    return F.expr(
-        f"aggregate({tokens_col}, 0D, (s, t) -> s + length(t))"
-        f" / cast(size({tokens_col}) as double)"
-    )
-
-
 def regex_token_count_expr(text_col: str = "text", pattern: str = "[a-z]+") -> Column:
     """BPE-ish regex token counting (B64 'token counting' — the whitespace
     variant is token_count_expr)."""
@@ -102,56 +79,4 @@ def fingerprint_expr(text_col: str = "text") -> Column:
     return F.expr(
         f"aggregate(split({text_col}, ''), 0L,"
         f" (h, c) -> pmod(h * {FINGERPRINT_BASE} + ascii(c), {FINGERPRINT_P}))"
-    )
-
-
-def tfidf_terms(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """Per-(doc, term) TF-IDF via explicit DataFrame math (oracle-able,
-    unlike HashingTF): tf = in-doc count, idf = ln((1+N)/(1+df)) + 1.
-
-    Both aggregations are map-side combinable; the df table is tiny
-    (vocabulary-sized) and broadcast into the final join.
-    """
-    total = docs.agg(F.countDistinct(id_col).alias("n_total"))
-    tf = (
-        docs.select(id_col, F.explode(F.col(tokens_col)).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    return tfidf_from_tf(tf, total, id_col=id_col)
-
-
-def tfidf_from_tf(
-    tf: DataFrame,
-    n_total: DataFrame,
-    id_col: str = "doc_id",
-    df_counts: DataFrame | None = None,
-) -> DataFrame:
-    """TF-IDF scoring from a precomputed ``(id, term, tf)`` relation (e.g.
-    the session tf index, queries/text_index.py) — ``df`` per term is a
-    row count over it ((id, term) is unique), so the corpus is never
-    re-tokenized.  ``n_total`` is a 1-row (n_total) relation; pass a
-    precomputed ``(term, df)`` lexicon (text_index.vocab_stats) to skip
-    the df aggregation too."""
-    if df_counts is None:
-        df_counts = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        tf.join(F.broadcast(df_counts), "term")
-        .crossJoin(F.broadcast(n_total))
-        .withColumn(
-            "tfidf",
-            F.round(
-                F.col("tf")
-                * (
-                    F.log((1 + F.col("n_total")) / (1 + F.col("df")))
-                    + F.lit(1.0)
-                ),
-                6,
-            ),
-        )
-        .select(id_col, "term", "tf", "df", "tfidf")
     )

@@ -1068,8 +1068,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical machinery to ``dedup_ngram_jaccard`` — the same inverted
     shingle-postings index generates candidates through the posting-key
     equi-join (never all-pairs), only the normalization differs.  Same
-    100 TB posture: cost tracks posting-list mass; hot postings get the
-    ``max_doc_freq`` cap.
+    100 TB posture: cost tracks posting-list mass.
     """
     # probe the session unblocked-postings index (round 8) — identical
     # (_id, sk, _n) relation, built once per session instead of

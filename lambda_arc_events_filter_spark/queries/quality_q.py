@@ -380,14 +380,7 @@ def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lambda_arc_events_filter_spark.operators.similarity import kmeans_lloyd
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # materialize=False at fixture scale: the corpus parquet is ~2 MB, so
-    # a per-round re-scan is cheaper than trading away the prepared-plan
-    # cache (localCheckpoint forbids it, register() docstring).  A real
-    # cluster run with many iterations sets materialize=True — measured
-    # A/B at sf0.1 shows the two within noise here (±0.05 s).
-    return kmeans_lloyd(
-        emb, "vec_id", "embedding", k=8, iters=2, materialize=False
-    )
+    return kmeans_lloyd(emb, "vec_id", "embedding", k=8, iters=2)
 
 
 # ---------------------------------------------------------------------------

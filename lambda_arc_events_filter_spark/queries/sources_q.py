@@ -569,38 +569,23 @@ def custom_source_events_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's Kinesis role): ``partitions()`` keeps Spark's split/task
     model, ``read()`` yields pyarrow RecordBatches so no per-row Python
     objects exist on the data path.  Same ns/µs fixture handling as
-    every other events read path (catalog probes the footer).
+    every other events read path (``catalog.read_events``).
     """
-    from lambda_arc_events_filter_spark.catalog import (
-        SCHEMAS,
-        _events_ts_is_nanos,
-        table_path,
-    )
-    from lambda_arc_events_filter_spark.sources.pyds import (
-        register_events_replay,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
+    from lambda_arc_events_filter_spark.catalog import read_events, table_path
+    from lambda_arc_events_filter_spark.sources import pyds
 
-    register_events_replay(spark)
+    pyds.register(spark, pyds.make_events_replay_datasource)
     path = table_path(sf_dir, "events")
-    nanos = _events_ts_is_nanos(path)
-    if nanos:
-        read_schema = StructType(
-            [
-                StructField("ts", LongType(), True) if f.name == "ts" else f
-                for f in SCHEMAS["events"].fields
-            ]
+
+    def read(schema):
+        return (
+            spark.read.format("events_replay")
+            .schema(schema)
+            .option("path", path)
+            .load()
         )
-    else:
-        read_schema = SCHEMAS["events"]
-    df = (
-        spark.read.format("events_replay")
-        .schema(read_schema)
-        .option("path", path)
-        .load()
-    )
-    if nanos:
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+
+    df = read_events(spark, path, read)
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.round(F.sum("value"), 4).alias("total_value"),
@@ -1114,11 +1099,9 @@ def custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid as _uuid
 
-    from lambda_arc_events_filter_spark.sources.pyds import (
-        register_jsonl_audit,
-    )
+    from lambda_arc_events_filter_spark.sources import pyds
 
-    register_jsonl_audit(spark)
+    pyds.register(spark, pyds.make_jsonl_audit_datasource)
     e = load(spark, sf_dir, "events").select("event_type", "value")
     agg = e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),

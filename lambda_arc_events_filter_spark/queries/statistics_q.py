@@ -1406,11 +1406,9 @@ def events_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     band cell holds a few hundred values).
 
     Runs on ``functions/stats.py::group_percentile_cont`` — the same
-    dual-strategy exact-percentile operator as ``agg_stats``, here with
-    a composite (type, day) key: 150 small groups instead of 3 large
-    ones, which is precisely the regime where the ``group`` strategy's
-    one-window plan wins and the range-partitioned plan is the 100 TB
-    fallback.  Interpolation arithmetic (linear between adjacent order
+    exact-percentile operator as ``agg_stats``, here with a composite
+    (type, day) key: 150 small groups instead of 3 large ones.
+    Interpolation arithmetic (linear between adjacent order
     statistics) is the same formula DuckDB's quantile_cont applies to
     the same sorted doubles.
     """
@@ -2184,8 +2182,8 @@ def events_robust_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut indices in integer arithmetic from the group count, the two cut
     VALUES joined back as per-group scalars — then all three means in
     one aggregate.  At scale the rank pass is the same machinery as the
-    exact percentiles; the 'range' strategy applies identically if a
-    single group outgrows a task.
+    exact percentiles; the banded global rank of ``group_percentile_cont``
+    applies identically if a single group outgrows a task.
     """
     e = load(spark, sf_dir, "events")
     w_rank = Window.partitionBy("event_type").orderBy("value", "event_id")
@@ -3913,8 +3911,8 @@ def events_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: the split is a hash-free parity rule on event_id; the
     predictor mean is one float division of exact integer sums; the
-    residual quantile rides ``group_percentile_cont`` (range strategy —
-    no per-group sort cliff); the coverage test compares each residual
+    residual quantile rides ``group_percentile_cont`` (banded global
+    rank — no per-group sort cliff); the coverage test compares each residual
     to the SAME identical-op threshold both engines computed.  Two
     pushed-down scans of the fact, two map-side-combinable aggregates,
     one broadcast join of the |types|-row model.

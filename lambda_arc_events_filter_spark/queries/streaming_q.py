@@ -994,13 +994,12 @@ def stream_python_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``DataSourceStreamReader`` with one shard per input partition.
     """
     from lambda_arc_events_filter_spark.catalog import table_path
-    from lambda_arc_events_filter_spark.sources.pyds import (
-        register_events_stream_chunks,
-    )
+    from lambda_arc_events_filter_spark.sources import pyds
 
-    register_events_stream_chunks(spark)
+    pyds.register(spark, pyds.make_events_stream_chunks_datasource)
     s = (
         spark.readStream.format("events_stream_chunks")
+        .schema("event_type string, value double")
         .option("path", table_path(sf_dir, "events"))
         .option("chunk", "20000")
         .load()
@@ -1280,13 +1279,12 @@ def stream_python_source_windowed(spark: SparkSession, sf_dir: str) -> DataFrame
     10 min — the final drain micro-batch performs the flush).
     """
     from lambda_arc_events_filter_spark.catalog import table_path
-    from lambda_arc_events_filter_spark.sources.pyds import (
-        register_events_stream_ts,
-    )
+    from lambda_arc_events_filter_spark.sources import pyds
 
-    register_events_stream_ts(spark)
+    pyds.register(spark, pyds.make_events_stream_chunks_datasource)
     s = (
-        spark.readStream.format("events_stream_ts")
+        spark.readStream.format("events_stream_chunks")
+        .schema("ts_us bigint, value double")
         .option("path", table_path(sf_dir, "events"))
         .option("chunk", "20000")
         .load()

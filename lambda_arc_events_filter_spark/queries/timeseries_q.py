@@ -701,8 +701,8 @@ def events_transition_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Dwells are exact integer MICROSECONDS (the unix_micros discipline —
     casting timestamps to long truncates to seconds); percentiles ride
-    ``group_percentile_cont`` keyed by the transition pair (range
-    strategy — no per-group sort cliff) and report at SEVEN decimals —
+    ``group_percentile_cont`` keyed by the transition pair (banded
+    global rank — no per-group sort cliff) and report at SEVEN decimals —
     a µs percentile interpolates to at most one fractional decimal, so
     /10⁶ is exactly representable at 7 digits and no rounding boundary
     exists (6 digits put a TRUE half at the cut: caught at sf0.01, the

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from lambda_arc_events_filter_spark.cache import (
+    SessionGroup,
     bounded_put,
     has_unresolved_relations,
     rdd_scan_ids,
@@ -75,84 +76,79 @@ _NO_PLAN_CACHE_TAGS = frozenset({"streaming", "source", "sink"})
 
 def _with_plan_cache(name: str, fn: QueryFn) -> QueryFn:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        plans = None
-        jplan = None
         try:
             app = spark.sparkContext.applicationId
             group = session_group(app, sf_dir)
-            plans = group.plans
-            jplan = plans.get(name)
-            if jplan is None:
-                df = fn(spark, sf_dir)
-                qe = df._jdf.queryExecution()
-                # Cache ONLY plans that are (a) free of by-NAME relation
-                # references in their RAW form — a temp view is global
-                # mutable state, so a cached plan re-resolving the name
-                # per execution could silently read another dataset
-                # after the view is re-registered, or die on a dropped
-                # per-call view — and (b) whose RDD scans (incl. those
-                # inside subquery expressions) are all resident indexes
-                # of THIS group (cache.session_artifact records them).
-                # Any other LogicalRDD — a query-private localCheckpoint,
-                # a driver-computed createDataFrame — is per-execution
-                # work; caching it would convert the prepared-statement
-                # protocol into result caching (round-8 audit: 48
-                # registrations carried this leak).  The RDD scan walks
-                # the ANALYZED plan (in the raw plan a view name can hide
-                # a checkpointed relation); the by-name check walks the
-                # RAW plan (analysis inlines views, hiding the
-                # reference).  Scan failures fail CLOSED (no caching).
-                try:
-                    cacheable = not has_unresolved_relations(
-                        qe.logical()
-                    ) and group.resident.issuperset(rdd_scan_ids(qe.analyzed()))
-                except Exception:
-                    cacheable = False
-                if cacheable:
-                    # Cache the OPTIMIZED plan (round 10): re-execution
-                    # still re-plans physically and re-runs every stage
-                    # (no stage-output or result reuse — the protocol
-                    # line), but the optimizer fixed-point over an
-                    # already-optimized tree converges in one cheap
-                    # iteration instead of re-deriving every rewrite.
-                    # Measured per-execution (sf0.1, toPandas):
-                    # fn_string_suite 0.184→0.157, agg_stats
-                    # 1.068→1.030, q01 0.191→0.183.  Optimizer
-                    # idempotency over the whole registry is proven by
-                    # the SPARK_GRAFT_CHECK_REUSE=1 sweep, which
-                    # oracle-checks the REUSED execution of the whole
-                    # registry (r10).  The build call executes this same
-                    # QueryExecution anyway, so forcing the lazy
-                    # optimizedPlan here adds no net build cost.
-                    plans[name] = qe.optimizedPlan()
-                return df
-            of_rows = _OF_ROWS.get(app)
-            if of_rows is None:
-                # one JVM-reflection walk per session, not per call —
-                # the attribute chain costs several py4j round-trips
-                of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-                bounded_put(_OF_ROWS, app, of_rows, 8)
-            jds = of_rows(spark._jsparkSession, jplan)
-            return DataFrame(jds, spark)
         except Exception:  # e.g. Connect-mode session without _jvm
-            # self-repair: a cached plan that can no longer analyze
-            # (dropped view, stopped context) must not poison every
-            # subsequent call with an exception + silent rebuild
-            if plans is not None:
-                plans.pop(name, None)
-                # Evict the ofRows handle only when the failure was on
-                # the cached-plan REBUILD branch — a first-build failure
-                # inside fn() never touched the handle, and a transient
-                # query error must not cost the whole application its
-                # still-valid JVM reflection handle.
-                if jplan is not None:
-                    _OF_ROWS.pop(app, None)  # handle may be stale too
             return fn(spark, sf_dir)
+        plans = group.plans
+        jplan = plans.get(name)
+        if jplan is not None:
+            try:
+                of_rows = _OF_ROWS.get(app)
+                if of_rows is None:
+                    # one JVM-reflection walk per session, not per call —
+                    # the attribute chain costs several py4j round-trips
+                    of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+                    bounded_put(_OF_ROWS, app, of_rows, 8)
+                jds = of_rows(spark._jsparkSession, jplan)
+                return DataFrame(jds, spark)
+            except Exception:
+                # self-repair: a cached plan that can no longer analyze
+                # (dropped view, stopped context) must not poison every
+                # subsequent call — drop it (and the ofRows handle, which
+                # may be stale too) and rebuild below
+                plans.pop(name, None)
+                _OF_ROWS.pop(app, None)
+        # A failing ``fn`` raises to the caller: it runs once per call.
+        df = fn(spark, sf_dir)
+        _prepare(name, group, df)
+        return df
 
     wrapped.__name__ = fn.__name__
     wrapped.__doc__ = fn.__doc__
     wrapped.__wrapped__ = fn  # type: ignore[attr-defined]
     return wrapped
+
+
+def _prepare(name: str, group: SessionGroup, df: DataFrame) -> None:
+    """Cache ``df``'s optimized plan in ``group`` if it is cacheable.
+
+    Cache ONLY plans that are (a) free of by-NAME relation references in
+    their RAW form — a temp view is global mutable state, so a cached plan
+    re-resolving the name per execution could silently read another
+    dataset after the view is re-registered, or die on a dropped per-call
+    view — and (b) whose RDD scans (incl. those inside subquery
+    expressions) are all resident indexes of THIS group
+    (cache.session_artifact records them).  Any other LogicalRDD — a
+    query-private localCheckpoint, a driver-computed createDataFrame — is
+    per-execution work; caching it would convert the prepared-statement
+    protocol into result caching (round-8 audit: 48 registrations carried
+    this leak).  The RDD scan walks the ANALYZED plan (in the raw plan a
+    view name can hide a checkpointed relation); the by-name check walks
+    the RAW plan (analysis inlines views, hiding the reference).  Any
+    failure here fails CLOSED (no caching).
+
+    The OPTIMIZED plan is cached (round 10): re-execution still re-plans
+    physically and re-runs every stage (no stage-output or result reuse —
+    the protocol line), but the optimizer fixed-point over an
+    already-optimized tree converges in one cheap iteration instead of
+    re-deriving every rewrite.  Measured per-execution (sf0.1, toPandas):
+    fn_string_suite 0.184→0.157, agg_stats 1.068→1.030, q01 0.191→0.183.
+    Optimizer idempotency over the whole registry is proven by the
+    SPARK_GRAFT_CHECK_REUSE=1 sweep, which oracle-checks the REUSED
+    execution of the whole registry (r10).  The build call executes this
+    same QueryExecution anyway, so forcing the lazy optimizedPlan here
+    adds no net build cost.
+    """
+    try:
+        qe = df._jdf.queryExecution()
+        if not has_unresolved_relations(
+            qe.logical()
+        ) and group.resident.issuperset(rdd_scan_ids(qe.analyzed())):
+            group.plans[name] = qe.optimizedPlan()
+    except Exception:
+        pass
 
 
 def register(

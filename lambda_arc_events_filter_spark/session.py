@@ -37,17 +37,14 @@ def fixture_conf() -> dict[str, str]:
 
 def get_spark(
     app_name: str = "lambda-arc-events-filter-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    if master is None:
-        cpus = os.environ.get(
-            "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
-        )
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    """Local session on ``SPARK_GRAFT_CPUS`` cores (default: the usable
+    cores) with ``SPARK_GRAFT_SHUFFLE`` shuffle partitions (default 32);
+    ``extra_conf`` overrides any setting built here."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    master = f"local[{cpus}]"
+    shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     conf = {
         # AQE is the 100 TB posture (runtime re-planning, skew splitting,
         # partition coalescing) and stays the default.  It is also an

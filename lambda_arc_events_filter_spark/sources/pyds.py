@@ -111,28 +111,40 @@ def make_events_replay_reader(options: dict):
     return make_events_replay_datasource()(options=options).reader(None)
 
 
-_REGISTERED: set[str] = set()
+_REGISTERED: set[tuple[str, str]] = set()
 
 
-def register_events_replay(spark) -> None:
-    """Idempotently register the source with this session."""
+def register(spark, make_datasource) -> None:
+    """Idempotently register the data source that ``make_datasource``
+    builds (one of this module's ``make_*_datasource`` factories) with
+    this session."""
     if not PYDS_AVAILABLE:
         raise RuntimeError(
             "pyspark.sql.datasource API not available in this Spark"
         )
-    key = spark.sparkContext.applicationId
+    key = (make_datasource.__name__, spark.sparkContext.applicationId)
     if key not in _REGISTERED:
-        spark.dataSource.register(make_events_replay_datasource())
+        spark.dataSource.register(make_datasource())
         _REGISTERED.add(key)
 
 
 def make_events_stream_chunks_datasource():
     """Streaming twin of the replay source: a Spark-4 Python STREAMING
     data source (``SimpleDataSourceStreamReader``) that replays the
-    events parquet in fixed-size row chunks, one chunk per micro-batch,
-    with JSON offsets ``{"row": k}`` — the shape of a REST-paginated or
-    cursor-based feed connector (the reference's Kinesis consumer is
-    exactly this: poll → records + next shard iterator).
+    events parquet in fixed-size row chunks (option ``chunk``, default
+    20000 rows), one chunk per micro-batch, with JSON offsets
+    ``{"row": k}`` — the shape of a REST-paginated or cursor-based feed
+    connector (the reference's Kinesis consumer is exactly this: poll →
+    records + next shard iterator).
+
+    Rows carry the columns of the schema the caller declares with
+    ``readStream.schema(...)`` (default: all four), and only those
+    columns are read from the file: ``event_id``, ``event_type``,
+    ``value``, and ``ts_us`` — the event time as epoch MICROSECONDS
+    (int64), so watermarks and event-time windows work through the
+    connector.  ``ts_us`` normalizes the fixture's ns/µs timestamp-unit
+    drift by casting the arrow column to timestamp[us] before extracting
+    int64 — the same dual-layout contract as ``catalog.read_events``.
 
     API notes discovered the hard way (pinned by tests):
 
@@ -158,30 +170,39 @@ def make_events_stream_chunks_datasource():
         SimpleDataSourceStreamReader,
     )
 
+    columns = "event_id bigint, ts_us bigint, event_type string, value double"
+
     class _ChunkStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options: dict):
+        def __init__(self, options: dict, schema):
             path = options.get("path")
             if not path:
                 raise ValueError("events_stream_chunks requires option 'path'")
             self.path = path
             self.chunk = int(options.get("chunk", "20000"))
+            names = (
+                [c.split()[0] for c in columns.split(",")]
+                if schema is None
+                else schema.fieldNames()
+            )
+            # parquet column behind each output column
+            self.sources = ["ts" if c == "ts_us" else c for c in names]
 
         def initialOffset(self):
             return {"row": 0}
 
         def _slice(self, start_row: int, end_row: int):
+            import pyarrow as pa
             import pyarrow.parquet as pq
 
-            tbl = pq.read_table(
-                self.path, columns=["event_id", "event_type", "value"]
-            )
+            tbl = pq.read_table(self.path, columns=self.sources)
             tbl = tbl.slice(start_row, end_row - start_row)
-            return iter(
-                [
-                    (r["event_id"], r["event_type"], r["value"])
-                    for r in tbl.to_pylist()
-                ]
-            )
+            cols = [
+                tbl.column(c).cast(pa.timestamp("us")).cast(pa.int64())
+                if c == "ts"
+                else tbl.column(c)
+                for c in self.sources
+            ]
+            return iter(list(zip(*(c.to_pylist() for c in cols))))
 
         def read(self, start):
             import pyarrow.parquet as pq
@@ -202,24 +223,12 @@ def make_events_stream_chunks_datasource():
             return "events_stream_chunks"
 
         def schema(self) -> str:
-            return "event_id bigint, event_type string, value double"
+            return columns
 
         def simpleStreamReader(self, schema) -> _ChunkStreamReader:
-            return _ChunkStreamReader(self.options)
+            return _ChunkStreamReader(self.options, schema)
 
     return EventsStreamChunksDataSource
-
-
-def register_events_stream_chunks(spark) -> None:
-    """Idempotently register the streaming chunk source with this session."""
-    if not PYDS_AVAILABLE:
-        raise RuntimeError(
-            "pyspark.sql.datasource API not available in this Spark"
-        )
-    key = ("stream_chunks", spark.sparkContext.applicationId)
-    if key not in _REGISTERED:
-        spark.dataSource.register(make_events_stream_chunks_datasource())
-        _REGISTERED.add(key)
 
 
 def make_jsonl_audit_datasource():
@@ -305,98 +314,3 @@ def make_jsonl_audit_datasource():
             return _JsonlWriter(self.options)
 
     return JsonlAuditDataSource
-
-
-def register_jsonl_audit(spark) -> None:
-    """Idempotently register the audit sink with this session."""
-    if not PYDS_AVAILABLE:
-        raise RuntimeError(
-            "pyspark.sql.datasource API not available in this Spark"
-        )
-    key = ("jsonl_audit", spark.sparkContext.applicationId)
-    if key not in _REGISTERED:
-        spark.dataSource.register(make_jsonl_audit_datasource())
-        _REGISTERED.add(key)
-
-
-def make_events_stream_ts_datasource():
-    """Event-TIME variant of the chunk stream source: rows carry the
-    event timestamp as epoch MICROSECONDS (int64) so watermarks and
-    event-time windows work through the custom connector.  The reader
-    normalizes the fixture's ns/µs timestamp-unit drift (TESTDATA
-    regenerations alternate) by casting the arrow column to
-    timestamp[us] before extracting int64 — the same dual-layout
-    contract as catalog.load.  Same offset/pickling/drain contract as
-    ``EventsStreamChunksDataSource``.
-    """
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
-    class _TsChunkReader(SimpleDataSourceStreamReader):
-        def __init__(self, options: dict):
-            path = options.get("path")
-            if not path:
-                raise ValueError("events_stream_ts requires option 'path'")
-            self.path = path
-            self.chunk = int(options.get("chunk", "20000"))
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def _slice(self, start_row: int, end_row: int):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                self.path, columns=["event_id", "ts", "event_type", "value"]
-            )
-            ts = tbl.column("ts").cast(pa.timestamp("us")).cast(pa.int64())
-            tbl = tbl.set_column(1, pa.field("ts", pa.int64()), ts)
-            tbl = tbl.slice(start_row, end_row - start_row)
-            return iter(
-                [
-                    (r["event_id"], r["ts"], r["event_type"], r["value"])
-                    for r in tbl.to_pylist()
-                ]
-            )
-
-        def read(self, start):
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(self.path).metadata.num_rows
-            s = int(start["row"])
-            e = min(n, s + self.chunk)
-            return (self._slice(s, e), {"row": e})
-
-        def readBetweenOffsets(self, start, end):
-            return self._slice(int(start["row"]), int(end["row"]))
-
-    class EventsStreamTsDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "events_stream_ts"
-
-        def schema(self) -> str:
-            return (
-                "event_id bigint, ts_us bigint, event_type string,"
-                " value double"
-            )
-
-        def simpleStreamReader(self, schema) -> _TsChunkReader:
-            return _TsChunkReader(self.options)
-
-    return EventsStreamTsDataSource
-
-
-def register_events_stream_ts(spark) -> None:
-    """Idempotently register the event-time chunk source."""
-    if not PYDS_AVAILABLE:
-        raise RuntimeError(
-            "pyspark.sql.datasource API not available in this Spark"
-        )
-    key = ("stream_ts", spark.sparkContext.applicationId)
-    if key not in _REGISTERED:
-        spark.dataSource.register(make_events_stream_ts_datasource())
-        _REGISTERED.add(key)

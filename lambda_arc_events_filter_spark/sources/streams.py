@@ -16,58 +16,31 @@ Spark rather than a Lambda handler.
 
 from __future__ import annotations
 
-import os
-import tempfile
 import uuid
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import StructType
 
-from lambda_arc_events_filter_spark.catalog import SCHEMAS
+from lambda_arc_events_filter_spark.catalog import read_events, table_path
 
 
-def events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded DataFrame replaying the fixture ``events`` table.
 
-    Same ts-unit handling as the batch path (catalog.load): fixture
-    generations vary between TIMESTAMP(NANOS) and TIMESTAMP(MICROS), so
-    probe the footer; nanos reads as raw longs converted in-plan.
+    Same ts-unit handling as the batch path (``catalog.read_events``).
     ``pathGlobFilter`` scopes the directory scan to the events file so the
-    other nine tables in sf_dir are not picked up.
+    other nine tables in sf_dir are not picked up.  The replay is one
+    file, so every trigger reads it whole.
     """
-    from lambda_arc_events_filter_spark.catalog import (
-        _events_ts_is_nanos,
-        table_path,
-    )
 
-    nanos = _events_ts_is_nanos(table_path(sf_dir, "events"))
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        read_schema = StructType(
-            [
-                StructField("ts", LongType(), True) if f.name == "ts" else f
-                for f in SCHEMAS["events"].fields
-            ]
+    def read(schema: StructType) -> DataFrame:
+        return (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
         )
-    else:
-        read_schema = SCHEMAS["events"]
-    reader = (
-        spark.readStream.schema(read_schema)
-        .option("pathGlobFilter", "events.parquet")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = reader.parquet(sf_dir)
-    if nanos:
-        out = out.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        ).select([f.name for f in SCHEMAS["events"].fields])
-    return out
+
+    return read_events(spark, table_path(sf_dir, "events"), read)
 
 
 def run_to_memory(
@@ -82,8 +55,8 @@ def run_to_memory(
     memory sink) and return the materialized result as a batch DataFrame.
 
     availableNow = process-everything-then-stop: the backfill trigger
-    (SURVEY.md B59).  The memory sink is the deterministic test sink; prod
-    sinks are parquet/kinesis via ``write_stream_parquet`` below.
+    (SURVEY.md B59).  The memory sink is the deterministic test sink; the
+    prod sink is parquet via ``write_stream_parquet`` below.
     Unique query name per call so repeated runs in one session don't
     collide.
 
@@ -173,14 +146,13 @@ def run_to_memory(
     return out
 
 
-def write_stream_parquet(
-    df: DataFrame, path: str, checkpoint: str | None = None
-) -> None:
+def write_stream_parquet(df: DataFrame, path: str, checkpoint: str) -> None:
     """Prod-shaped sink: parquet files + checkpoint WAL (exactly-once).
 
     The checkpoint directory is the replacement for the Lambda/ESM implicit
     shard-iterator checkpointing of the reference deployment (SURVEY §3.1):
-    restart resumes from the last committed batch.
+    restart resumes from the last committed batch, so the caller names a
+    durable ``checkpoint`` directory.
 
     One writer per core: the stream is coalesced to the session's
     ``defaultParallelism`` before the sink, so a micro-batch writes at most
@@ -199,9 +171,6 @@ def write_stream_parquet(
     stores without atomic rename (S3 and the like) neither manager is
     atomic: keep the checkpoint on HDFS or a store with atomic rename.
     """
-    checkpoint = checkpoint or os.path.join(
-        tempfile.gettempdir(), f"ckpt_{uuid.uuid4().hex[:8]}"
-    )
     cores = df.sparkSession.sparkContext.defaultParallelism
     q = (
         df.coalesce(cores)

@@ -10,7 +10,7 @@ that pipeline is:
       → decode_kinesis_records   (b64 + JSON parse)     [A2]
       → filter_events            (predicates)           [A3]
       → project_payload          (envelope strip)       [A4]
-      → sink (parquet/kinesis/memory via sources.streams) [A5]
+      → sink (parquet or memory via sources.streams)    [A5]
 
 Every stage is a plain DataFrame→DataFrame function, so the SAME code runs
 batch (backfill over parquet) and streaming (live feed) — Catalyst

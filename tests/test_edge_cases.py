@@ -153,22 +153,19 @@ def test_group_percentile_rejects_reserved_names(spark):
             "v",
             {"p50": 0.5},
             extra_aggs=[F.count(F.lit(1)).alias("_cnt")],
-            strategy="range",
         )
     # the full reserved set — '_n' formerly slipped past the length-based
     # check and the aggregate silently vanished (ADVICE r7); also keys,
-    # quantile aliases, duplicates, and BOTH strategies
+    # quantile aliases and duplicates
     for alias in ("_n", "_lo", "_rank", "k", "p50"):
-        for strat in ("range", "group"):
-            with pytest.raises(ValueError, match="alias"):
-                group_percentile_cont(
-                    df,
-                    ["k"],
-                    "v",
-                    {"p50": 0.5},
-                    extra_aggs=[F.count(F.lit(1)).alias(alias)],
-                    strategy=strat,
-                )
+        with pytest.raises(ValueError, match="alias"):
+            group_percentile_cont(
+                df,
+                ["k"],
+                "v",
+                {"p50": 0.5},
+                extra_aggs=[F.count(F.lit(1)).alias(alias)],
+            )
     with pytest.raises(ValueError, match="alias"):
         group_percentile_cont(
             df,
@@ -179,36 +176,7 @@ def test_group_percentile_rejects_reserved_names(spark):
                 F.count(F.lit(1)).alias("c"),
                 F.max("v").alias("c"),
             ],
-            strategy="range",
         )
-
-
-def test_group_percentile_materialize_matches_diamond(spark):
-    """materialize=True (the cluster lever: checkpoint the fused build
-    side) must be a pure plan change — identical output to the default
-    concurrent-diamond plan, including extra aggregates."""
-    from lambda_arc_events_filter_spark.functions.stats import (
-        group_percentile_cont,
-    )
-
-    rows = [(chr(97 + i % 3), float(i * 7 % 23)) for i in range(60)]
-    df = spark.createDataFrame(rows, "k string, v double")
-    kw = dict(
-        keys=["k"],
-        value_col="v",
-        quantiles={"p25": 0.25, "p90": 0.9},
-        extra_aggs=[F.count(F.lit(1)).alias("n_rows")],
-        strategy="range",
-    )
-    want = {
-        r.k: (r.p25, r.p90, r.n_rows)
-        for r in group_percentile_cont(df, **kw).collect()
-    }
-    got = {
-        r.k: (r.p25, r.p90, r.n_rows)
-        for r in group_percentile_cont(df, materialize=True, **kw).collect()
-    }
-    assert got == want and len(want) == 3
 
 
 def test_group_percentile_band_bounds_session_cache(spark):
@@ -226,7 +194,7 @@ def test_group_percentile_band_bounds_session_cache(spark):
     first = {
         r.k: r.p50
         for r in group_percentile_cont(
-            df, ["k"], "v", {"p50": 0.5}, strategy="range"
+            df, ["k"], "v", {"p50": 0.5}
         ).collect()
     }
     orig = DataFrameStatFunctions.approxQuantile
@@ -235,7 +203,7 @@ def test_group_percentile_band_bounds_session_cache(spark):
         second = {
             r.k: r.p50
             for r in group_percentile_cont(
-                df, ["k"], "v", {"p50": 0.5}, strategy="range"
+                df, ["k"], "v", {"p50": 0.5}
             ).collect()
         }
     finally:
@@ -296,8 +264,8 @@ def test_salted_join_empty_big_side(spark, sf_dir):
 
 
 def test_ancestor_rollup_cycle_raises_strict(spark):
-    """A cycle can never resolve: strict mode (default) must fail loudly
-    instead of emitting root_id=NULL rows with partial accumulators."""
+    """A cycle can never resolve: the rollup must fail loudly instead of
+    emitting root_id=NULL rows with partial accumulators."""
     import pytest as _pytest
 
     from lambda_arc_events_filter_spark.operators.graph import ancestor_rollup
@@ -307,23 +275,15 @@ def test_ancestor_rollup_cycle_raises_strict(spark):
     )
     with _pytest.raises(ValueError, match="unresolved"):
         ancestor_rollup(nodes, "id", "parent", "v", max_depth=4).collect()
-    # non-strict passes the stranded pair through with NULL roots
-    out = {
-        r["id"]: r["root_id"]
-        for r in ancestor_rollup(
-            nodes, "id", "parent", "v", max_depth=4, strict=False
-        ).collect()
-    }
-    assert out[3] == 3 and out[1] is None and out[2] is None
 
 
 def test_group_percentile_nan_band_guard(spark):
     """NaN-bearing / all-NaN value columns: approxQuantile boundaries may
     contain NaN, which must be dropped before building the band CASE
     chain (a NaN bound makes sorted() order-unstable and the chain
-    non-monotone).  The banded `range` strategy must agree value-for-value
-    with the window-based `group` strategy: clean groups keep exact
-    interpolated quantiles, NaN-straddling groups yield NaN on both."""
+    non-monotone).  The banded plan must agree value-for-value with
+    Spark's builtin ``percentile``: clean groups keep exact interpolated
+    quantiles, NaN-straddling groups yield NaN on both."""
     from lambda_arc_events_filter_spark.functions.stats import (
         group_percentile_cont,
     )
@@ -337,25 +297,25 @@ def test_group_percentile_nan_band_guard(spark):
     )
     df = spark.createDataFrame(rows, "k string, v double").repartition(4)
 
-    def run(strategy):
-        return {
-            r.k: (r.p50, r.p90)
-            for r in group_percentile_cont(
-                df,
-                ["k"],
-                "v",
-                {"p50": 0.5, "p90": 0.9},
-                strategy=strategy,
-                num_partitions=8,
-            ).collect()
-        }
+    def run(out):
+        return {r.k: (r.p50, r.p90) for r in out.collect()}
 
-    g, rg = run("group"), run("range")
+    g = run(
+        df.groupBy("k").agg(
+            F.percentile("v", 0.5).alias("p50"),
+            F.percentile("v", 0.9).alias("p90"),
+        )
+    )
+    rg = run(
+        group_percentile_cont(
+            df, ["k"], "v", {"p50": 0.5, "p90": 0.9}, num_partitions=8
+        )
+    )
     assert set(g) == set(rg) == {"a", "b", "c"}
     for k in g:
         for a, b in zip(g[k], rg[k]):
             # NaN-tolerant equality
-            assert (a != a and b != b) or a == b, (k, g[k], rg[k])
+            assert (a != a and b != b) or abs(a - b) < 1e-9, (k, g[k], rg[k])
     # the clean group's quantiles are exact regardless of NaN elsewhere
     # (89.1 up to one interpolation ulp: 1 + 99*0.9 = 90.1 in IEEE)
     assert rg["c"][0] == 49.5

@@ -86,8 +86,8 @@ def test_empty_right_side_yields_zero_counts(spark):
 
 def test_descending_interval_is_loud(spark):
     """A reversed interval (start > end) violates the documented
-    precondition; with validate (the default) it must RAISE, not silently
-    drop matches (ADVICE r7 / VERDICT r7 ask #5)."""
+    precondition; it must RAISE, not silently drop matches (ADVICE r7 /
+    VERDICT r7 ask #5)."""
     from pyspark.errors import PySparkException
 
     a = spark.createDataFrame(
@@ -101,21 +101,11 @@ def test_descending_interval_is_loud(spark):
     df = interval_overlap_count(a, b, a_keys=("aid",))
     with pytest.raises(PySparkException, match="descending interval"):
         df.collect()
-    # validate=False restores the unchecked plan (no raise; the reversed
-    # row simply owns whatever cells sequence() yields — caller's problem)
-    same_cell = spark.createDataFrame(
-        [(1, _ts(500), _ts(100))],  # descending WITHIN one cell
-        "aid long, a_start timestamp, a_end timestamp",
-    )
-    rows = interval_overlap_count(
-        same_cell, b, a_keys=("aid",), validate=False
-    ).collect()
-    assert len(rows) == 1
 
 
 def test_null_bounds_keep_legacy_drop_semantics(spark):
     """NULL start/end rows are dropped by the explode (legacy behavior) —
-    the validate guard must not turn them into raises."""
+    the descending-interval guard must not turn them into raises."""
     a = spark.createDataFrame(
         [(1, _ts(0), _ts(600)), (2, None, _ts(600)), (3, _ts(0), None)],
         "aid long, a_start timestamp, a_end timestamp",

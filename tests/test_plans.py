@@ -232,7 +232,7 @@ def test_unigram_logprob_lm_side_broadcasts(spark, sf_dir):
 def test_range_percentile_broadcasts_targets(spark, sf_dir):
     """The range-rank percentile's straddling-rank join must broadcast the
     tiny target relation — a hash exchange of the ranked corpus there
-    would undo the strategy's point."""
+    would undo the plan's point."""
     from lambda_arc_events_filter_spark.functions.stats import (
         group_percentile_cont,
     )
@@ -242,14 +242,13 @@ def test_range_percentile_broadcasts_targets(spark, sf_dir):
         ["l_returnflag"],
         "l_extendedprice",
         {"median": 0.5},
-        strategy="range",
     )
     plan = I.formatted_plan(df)
     assert "BroadcastHashJoin" in plan, plan[:1500]
 
 
 def test_range_percentile_counts_pass_shared_no_expand(spark, sf_dir):
-    """The r13 restructure of the range strategy (functions/stats.py):
+    """The r13 restructure of the banded percentile (functions/stats.py):
     per-(group, band) counts come from ONE plain aggregate (no GROUPING
     SETS — the old fused plan's per-consumer ``_gid`` filters were pushed
     below the exchange, specializing it into 2-3 separate Expand fact
@@ -276,7 +275,6 @@ def test_range_percentile_counts_pass_shared_no_expand(spark, sf_dir):
             "l_extendedprice",
             {"p25": 0.25, "median": 0.5},
             extra_aggs=[F.count(F.lit(1)).alias("n_rows")],
-            strategy="range",
         )
         plan = I.formatted_plan(df)
         assert "Expand" not in plan, plan[:2000]

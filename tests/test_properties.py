@@ -318,9 +318,17 @@ def test_frame_manifest_tiles_payload_exactly(spark, texts):
             assert f.frame_idx == j and f.frame_offset == j * 256
 
 
-def test_percentile_strategies_agree(spark, sf_dir):
-    """The group-window and range-rank percentile plans are two physical
-    strategies for ONE exact semantics — outputs must be identical."""
+def _builtin_percentiles(df, keys, value_col, quantiles):
+    """Reference: Spark's builtin exact ``percentile``, one aggregate per
+    quantile alias (the same PERCENTILE_CONT interpolation)."""
+    return df.groupBy(*keys).agg(
+        *[F.percentile(value_col, q).alias(a) for a, q in quantiles.items()]
+    )
+
+
+def test_percentile_matches_builtin(spark, sf_dir):
+    """The banded percentile plan computes Spark's builtin ``percentile``
+    exactly — the builtin is the independent reference."""
     from lambda_arc_events_filter_spark.catalog import load
     from lambda_arc_events_filter_spark.functions.stats import (
         group_percentile_cont,
@@ -330,14 +338,14 @@ def test_percentile_strategies_agree(spark, sf_dir):
     qs = {"p25": 0.25, "median": 0.5, "p95": 0.95}
     a = {
         r.l_returnflag: (r.p25, r.median, r.p95)
-        for r in group_percentile_cont(
-            l, ["l_returnflag"], "l_extendedprice", qs, strategy="group"
+        for r in _builtin_percentiles(
+            l, ["l_returnflag"], "l_extendedprice", qs
         ).collect()
     }
     b = {
         r.l_returnflag: (r.p25, r.median, r.p95)
         for r in group_percentile_cont(
-            l, ["l_returnflag"], "l_extendedprice", qs, strategy="range"
+            l, ["l_returnflag"], "l_extendedprice", qs
         ).collect()
     }
     assert a.keys() == b.keys()
@@ -346,10 +354,10 @@ def test_percentile_strategies_agree(spark, sf_dir):
             assert abs(x - y) < 1e-9, (k, a[k], b[k])
 
 
-def test_percentile_strategies_agree_on_null_keys(spark):
-    """NULL-key groups must survive BOTH strategies identically: the range
-    plan joins on the group key, so a plain equi-join would silently drop
-    the NULL group that the window-based group plan keeps (ADVICE r2)."""
+def test_percentile_matches_builtin_on_null_keys(spark):
+    """NULL-key groups must survive: the banded plan joins on the group
+    key, so a plain equi-join would silently drop the NULL group that the
+    builtin aggregate keeps (ADVICE r2)."""
     from lambda_arc_events_filter_spark.functions.stats import (
         group_percentile_cont,
     )
@@ -358,16 +366,12 @@ def test_percentile_strategies_agree_on_null_keys(spark):
     df = spark.createDataFrame(rows, "k string, v double")
     qs = {"median": 0.5, "p90": 0.9}
 
-    def run(strategy):
-        return {
-            r.k: (r.median, r.p90)
-            for r in group_percentile_cont(
-                df, ["k"], "v", qs, strategy=strategy
-            ).collect()
-        }
+    def run(out):
+        return {r.k: (r.median, r.p90) for r in out.collect()}
 
-    a, b = run("group"), run("range")
-    assert None in a, "group strategy must keep the NULL-key group"
+    a = run(_builtin_percentiles(df, ["k"], "v", qs))
+    b = run(group_percentile_cont(df, ["k"], "v", qs))
+    assert None in a, "the builtin keeps the NULL-key group"
     assert a.keys() == b.keys()
     for k in a:
         for x, y in zip(a[k], b[k]):
@@ -440,9 +444,7 @@ def test_custom_pyds_handles_nanos_timestamps(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from lambda_arc_events_filter_spark.sources.pyds import (
-        register_events_replay,
-    )
+    from lambda_arc_events_filter_spark.sources import pyds
 
     path = str(tmp_path / "ns_events.parquet")
     ts_ns = pa.array([1_700_000_000_000_000_001, 1_700_000_000_000_000_002],
@@ -454,7 +456,7 @@ def test_custom_pyds_handles_nanos_timestamps(spark, tmp_path):
         coerce_timestamps=None,
     )
     assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
-    register_events_replay(spark)
+    pyds.register(spark, pyds.make_events_replay_datasource)
     got = (
         spark.read.format("events_replay")
         .schema("event_id long, ts long")

@@ -176,6 +176,53 @@ def _resident_probe(name: str, index_sf_dir: str):
     return R._with_plan_cache(name, fn)
 
 
+def test_plan_cache_runs_a_failing_query_once(spark, monkeypatch):
+    """An exception from the query itself reaches the caller after ONE
+    call: only a failure of the cache machinery may fall back to a plain
+    call, never a failure of the query."""
+    import pytest
+
+    from lambda_arc_events_filter_spark import registry as R
+
+    monkeypatch.setattr(C, "_GROUPS", {})
+    calls = []
+
+    def fn(spark, sf_dir):
+        calls.append(sf_dir)
+        raise RuntimeError("query failed")
+
+    wrapped = R._with_plan_cache("failing_probe", fn)
+    with pytest.raises(RuntimeError, match="query failed"):
+        wrapped(spark, "/sf/a")
+    assert len(calls) == 1
+
+
+def test_stale_cached_plan_repairs_with_one_rebuild(spark, monkeypatch):
+    """A cached plan that no longer analyzes (its view was dropped) is
+    replaced by ONE rebuild, and the rebuilt plan serves the next call."""
+    from lambda_arc_events_filter_spark import registry as R
+
+    monkeypatch.setattr(C, "_GROUPS", {})
+    app = spark.sparkContext.applicationId
+    spark.range(3).createOrReplaceTempView("_stale_plan_view")
+    stale = spark.sql("select id from _stale_plan_view")._jdf.queryExecution()
+    stale = stale.logical()
+    spark.catalog.dropTempView("_stale_plan_view")
+    calls = []
+
+    def fn(spark, sf_dir):
+        calls.append(sf_dir)
+        return spark.range(4)
+
+    wrapped = R._with_plan_cache("stale_probe", fn)
+    C.session_group(app, "/sf/a").plans["stale_probe"] = stale
+    assert wrapped(spark, "/sf/a").count() == 4
+    assert len(calls) == 1
+    assert "stale_probe" in C._GROUPS[(app, "/sf/a")].plans
+    assert wrapped(spark, "/sf/a").count() == 4
+    assert len(calls) == 1, "the repaired plan serves the next call"
+
+
 def test_blessing_is_application_scoped(spark, monkeypatch):
     """RDD ids restart at 0 with every new SparkContext, so a resident id
     must never leak across applications (round-8 review): a stale id

@@ -253,3 +253,27 @@ def test_python_stream_source_offsets_partition_exactly(spark, sf_dir):
             raise AssertionError("offset never reached EOF")
     n = spark.read.parquet(path).count()
     assert total == n
+
+
+def test_python_stream_source_reads_declared_columns(spark, sf_dir):
+    """The chunk stream source emits exactly the columns of the schema the
+    query declares, and ``ts_us`` carries the event time as epoch
+    microseconds — the values the native batch read gives."""
+    from lambda_arc_events_filter_spark.catalog import load, table_path
+    from lambda_arc_events_filter_spark.sources import pyds
+
+    path = table_path(sf_dir, "events")
+    pyds.register(spark, pyds.make_events_stream_chunks_datasource)
+    s = (
+        spark.readStream.format("events_stream_chunks")
+        .schema("ts_us bigint, value double")
+        .option("path", path)
+        .load()
+    )
+    assert s.columns == ["ts_us", "value"]
+    ds = pyds.make_events_stream_chunks_datasource()(
+        options={"path": path, "chunk": "1000000"}
+    )
+    rows, _ = ds.simpleStreamReader(s.schema).read({"row": 0})
+    want = load(spark, sf_dir, "events").select(F.unix_micros("ts"), "value")
+    assert sorted(rows) == sorted(tuple(r) for r in want.collect())

@@ -241,28 +241,51 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     )
 
 
-def test_ingest_compaction_path_is_lossless(spark, sf_dir, monkeypatch):
+def test_ingest_compaction_path_is_lossless(spark, sf_dir, tmp_path):
     """catalog's ingest compaction (multi-row-group rewrite) must return
     byte-identical data to the raw fixture scan, at every table it
-    rewrites — and the env kill-switch must bypass it."""
+    rewrites.  The fixture tables of the test scale are too small to be
+    rewritten, so a 10k-row single-row-group events file is synthesized
+    too — one the compaction does rewrite."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from lambda_arc_events_filter_spark import catalog
 
-    for table in ("events", "lineitem"):
-        monkeypatch.setenv("SPARK_GRAFT_INGEST", "0")
-        raw = catalog._load_uncached(spark, sf_dir, table)
-        monkeypatch.setenv("SPARK_GRAFT_INGEST", "1")
-        compacted = catalog._load_uncached(spark, sf_dir, table)
-        assert raw.schema == compacted.schema
-        assert raw.exceptAll(compacted).count() == 0
-        assert compacted.exceptAll(raw).count() == 0
+    big = str(tmp_path / "big")
+    os.makedirs(big)
+    events = pq.read_table(catalog.table_path(sf_dir, "events"))
+    reps = -(-10_000 // events.num_rows)
+    pq.write_table(
+        pa.concat_tables([events] * reps),
+        catalog.table_path(big, "events"),
+        row_group_size=1 << 20,
+    )
+    src = catalog.table_path(big, "events")
+    copy = catalog._ingested_path(big, "events")
+    assert copy != src, "the synthesized table must take the compaction path"
+    try:
+        for d, table in ((sf_dir, "events"), (sf_dir, "lineitem"), (big, "events")):
+            raw = catalog._read_parquet(spark, table, catalog.table_path(d, table))
+            compacted = catalog._load_uncached(spark, d, table)
+            assert raw.schema == compacted.schema
+            assert raw.exceptAll(compacted).count() == 0
+            assert compacted.exceptAll(raw).count() == 0
+    finally:
+        # the copy is keyed by this temp file's mtime: never reused
+        catalog._INGEST_PATHS.pop(src, None)
+        os.remove(copy)
 
 
 def test_catalog_handles_both_ts_units(spark, tmp_path):
     """Fixture generations have shipped events.ts as TIMESTAMP(NANOS)
     (round 1) and TIMESTAMP(MICROS) (round 2); the catalog probes the
     footer per file.  Synthesize both layouts and assert identical
-    loaded values — the regression test for the 1000x-corruption bug the
-    round-2 regeneration exposed."""
+    loaded values, through the batch loader and the stream replay alike —
+    the regression test for the 1000x-corruption bug the round-2
+    regeneration exposed."""
     import datetime as dt
     import os
     import shutil
@@ -283,7 +306,12 @@ def test_catalog_handles_both_ts_units(spark, tmp_path):
         "value": pa.array([1.5, 2.5], pa.float64()),
         "props": pa.array(['{"k": 1}', '{"k": 2}']),
     }
-    loaded = {}
+    from lambda_arc_events_filter_spark.sources.streams import (
+        events_stream,
+        run_to_memory,
+    )
+
+    loaded, streamed = {}, {}
     for unit in ("us", "ns"):
         d = str(tmp_path / f"sf_{unit}")
         os.makedirs(d)
@@ -306,9 +334,14 @@ def test_catalog_handles_both_ts_units(spark, tmp_path):
         loaded[unit] = sorted(
             (r.event_id, r.ts) for r in df.select("event_id", "ts").collect()
         )
+        stream = run_to_memory(
+            events_stream(spark, d).select("event_id", "ts"), "ts_unit"
+        )
+        streamed[unit] = sorted((r.event_id, r.ts) for r in stream.collect())
         shutil.rmtree(d)
     assert loaded["us"] == loaded["ns"], loaded
     assert loaded["us"][0][1] == ts[0]
+    assert streamed == loaded, streamed
 
 
 def test_filter_empty_allowlist_matches_nothing(spark):

@@ -13,7 +13,11 @@ runs, in order, each against the CURRENT tree:
    --out, which asserts one status line per registered query);
 2. full oracle sweep at sf0.1 (stress scale), appending its summary line
    to the same artifact (the r8 precedent format);
-3. artifact-contract pytest (tests/test_bench_contract.py) against the
+3. full oracle sweep at sf0.01 with ``SPARK_GRAFT_CHECK_REUSE=1`` (every
+   query checked again through its prepared plan — the proof that the
+   registry's plan cache returns the same rows), appending its summary
+   line too;
+4. artifact-contract pytest (tests/test_bench_contract.py) against the
    tree AS IT STANDS — i.e. including any bench/sweep records just
    written.  The r12 defect was exactly this sequencing hole: pytest ran
    BEFORE the closing bench artifact was committed, so a malformed
@@ -23,7 +27,7 @@ runs, in order, each against the CURRENT tree:
    bench records that are not single-JSON contract documents belong in
    records/ (e.g. records/BENCH_r12_builder.jsonl), never in the root
    BENCH_r*.json driver namespace;
-4. exits non-zero if any step failed.
+5. exits non-zero if any step failed.
 
 bench.py and PLAN_AUDIT refresh stay separate commands (the bench must
 run on an otherwise-idle host, and the plan audit is cheap to run solo):
@@ -31,8 +35,8 @@ run on an otherwise-idle host, and the plan audit is cheap to run solo):
   PYTHONPATH=. python tools/plan_audit.py /root/testdata/sf0.01 PLAN_AUDIT.json
   python bench.py          # quiet host; commit the printed lines' source
 
-Each sweep runs in a SUBPROCESS so the two scale factors get fresh
-sessions (mirrors how the driver and check.py are actually invoked).
+Each sweep runs in a SUBPROCESS so every sweep gets a fresh session, as
+a plain ``python tools/check.py`` run does.
 """
 
 from __future__ import annotations
@@ -42,6 +46,27 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _summary_sweep(
+    out: str, check: str, sf_dir: str, env: dict[str, str], title: str
+) -> int:
+    """Run ``check.py`` over ``sf_dir`` with ``env`` added, append its
+    summary line to ``out`` under ``# title:``, return its exit code."""
+    run = subprocess.run(
+        [sys.executable, check, sf_dir],
+        cwd=ROOT,
+        env={**os.environ, **env},
+        capture_output=True,
+        text=True,
+    )
+    tail = [
+        line for line in run.stdout.strip().splitlines() if line.endswith(sf_dir)
+    ]
+    with open(out, "a") as fh:
+        fh.write(f"# {title}:\n")
+        fh.write((tail[-1] if tail else "MISSING SUMMARY") + "\n")
+    return run.returncode
 
 
 def main() -> int:
@@ -57,24 +82,18 @@ def main() -> int:
         cwd=ROOT,
     ).returncode
 
-    # Stress sweep at 10x driver scale: run fully, append only the
-    # summary line (r8 artifact format); per-query lines live in the
-    # sf0.01 section, which the count assertion already guards.
-    stress = subprocess.run(
-        [sys.executable, check, "/root/testdata/sf0.1"],
-        cwd=ROOT,
-        capture_output=True,
-        text=True,
+    # Stress sweep at sf0.1 (10x the sf0.01 scale), then the
+    # prepared-plan reuse sweep: run fully, append only the summary line (r8 artifact
+    # format); per-query lines live in the sf0.01 section, which the
+    # count assertion already guards.
+    rc2 = _summary_sweep(
+        out, check, "/root/testdata/sf0.1", {},
+        "Stress sweep at sf0.1, 10x the sf0.01 scale (same tree)",
     )
-    tail = [
-        line
-        for line in stress.stdout.strip().splitlines()
-        if line.endswith("/root/testdata/sf0.1")
-    ]
-    with open(out, "a") as fh:
-        fh.write(f"# Stress sweep at 10x driver scale (same tree):\n")
-        fh.write((tail[-1] if tail else "MISSING SUMMARY") + "\n")
-    rc2 = stress.returncode
+    rc_reuse = _summary_sweep(
+        out, check, "/root/testdata/sf0.01", {"SPARK_GRAFT_CHECK_REUSE": "1"},
+        "Prepared-plan reuse sweep, SPARK_GRAFT_CHECK_REUSE=1 (same tree)",
+    )
 
     # Artifact-contract guard AFTER the artifacts exist on disk (r12
     # lesson: running pytest before the bench record lands lets a
@@ -85,8 +104,11 @@ def main() -> int:
     ).returncode
 
     print(f"\nround-close artifact written: {out}")
-    print(f"sf0.01 rc={rc1}  sf0.1 rc={rc2}  artifact-contract rc={rc3}")
-    return rc1 or rc2 or rc3
+    print(
+        f"sf0.01 rc={rc1}  sf0.1 rc={rc2}  reuse rc={rc_reuse}  "
+        f"artifact-contract rc={rc3}"
+    )
+    return rc1 or rc2 or rc_reuse or rc3
 
 
 if __name__ == "__main__":
