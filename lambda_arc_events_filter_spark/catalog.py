@@ -105,13 +105,6 @@ SCHEMAS: dict[str, StructType] = {
 
 TABLES = tuple(SCHEMAS)
 
-#: Dimension tables small enough to always broadcast, at any scale factor
-#: (region=5, nation=25 rows — and in any TPC-H-like deployment they stay
-#: tiny while facts grow).  SURVEY.md §4: "dims always broadcast".
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 EMBEDDING_DIM = 64  # FIXTURES.md: embeddings.embedding is list<float>[64]
 
 
@@ -145,12 +138,11 @@ def _ingested_path(sf_dir: str, table: str) -> str:
     produce many files/row groups already, which is why the check below
     returns the source path untouched when the layout is already splittable.
     Any failure also returns the source path.  A test pins that the
-    rewritten copy reads back identical to the source file.
+    rewritten copy reads back identical to the source file.  Only a
+    relation miss in ``load`` reaches here, so the stat and footer read
+    are paid once per table per session group.
     """
     src = table_path(sf_dir, table)
-    cached = _INGEST_PATHS.get(src)
-    if cached is not None and os.path.exists(cached):
-        return cached
     try:
         import pyarrow.parquet as pq
 
@@ -160,7 +152,6 @@ def _ingested_path(sf_dir: str, table: str) -> str:
         rows_per_group = max(4096, min(16384, n // 8))
         needed_groups = n // rows_per_group
         if needed_groups < 2 or meta.num_row_groups >= needed_groups:
-            _INGEST_PATHS[src] = src
             return src  # already splittable (or too small to matter)
         dst = os.path.join(
             _INGEST_DIR, f"{table}-{st.st_size}-{st.st_mtime_ns}.parquet"
@@ -170,14 +161,10 @@ def _ingested_path(sf_dir: str, table: str) -> str:
             tmp = f"{dst}.tmp{os.getpid()}"
             pq.write_table(pq.read_table(src), tmp, row_group_size=rows_per_group)
             os.replace(tmp, dst)
-        _INGEST_PATHS[src] = dst
         return dst
     except Exception:
         return src  # never let the cache break a read
 
-
-#: Process-local memo of resolved ingest paths (avoids per-query stat+footer).
-_INGEST_PATHS: dict[str, str] = {}
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Load one fixture table with its explicit schema.
@@ -261,10 +248,6 @@ def _read_parquet(spark: SparkSession, table: str, path: str) -> DataFrame:
 
 def _load_uncached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return _read_parquet(spark, table, _ingested_path(sf_dir, table))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def values_relation(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -149,17 +149,6 @@ def shingle_postings(
     return post
 
 
-def jaccard_expr(a: str, b: str) -> Column:
-    """Exact Jaccard similarity of two distinct-element array columns.
-    Two empty sets define J = 0 here (not NaN): empty docs are never
-    near-duplicates of anything."""
-    inter = F.size(F.array_intersect(F.col(a), F.col(b)))
-    denom = F.size(F.col(a)) + F.size(F.col(b)) - inter
-    return F.when(denom > 0, (inter / denom).cast("double")).otherwise(
-        F.lit(0.0)
-    )
-
-
 def _hot_posting_keys(post: DataFrame, max_doc_freq: int) -> DataFrame:
     """Posting keys whose document frequency exceeds ``max_doc_freq``.
 
@@ -614,10 +603,9 @@ def simhash_near_pairs(
 
 
 # Default cosine threshold (integer percent) used by the registered
-# dedup_prefix_cosine_pairs query.  tools/scale_probe.py imports these
-# helpers instead of re-deriving the formulas (r12 ADVICE): the probe's
-# predicted-vs-measured comparison must track the operator definition,
-# not a copy of it.
+# dedup_prefix_cosine_pairs query.  The prefix-filter formulas below are
+# one small function each so that prefix_cosine_pairs reads as the
+# AllPairs steps it implements: t², prefix cutoff, prefix, size filter.
 PREFIX_COSINE_DEFAULT_THRESHOLD_PCT = 80
 
 
@@ -634,19 +622,12 @@ def prefix_keep_rank(n: Column, p2: int) -> Column:
     return n - m + 1
 
 
-def posting_dfreq(post: DataFrame) -> DataFrame:
-    """Global document frequency per hashed shingle — the rarity order
-    that makes prefixes the least-joinable tokens."""
-    return post.groupBy("sk").agg(F.count(F.lit(1)).alias("_df"))
-
-
-def prefix_postings(
-    post: DataFrame, p2: int, dfreq: DataFrame | None = None
-) -> DataFrame:
+def prefix_postings(post: DataFrame, p2: int) -> DataFrame:
     """Rarest-df-first prefix of each posting list (ranks ≤
-    ``prefix_keep_rank``), as (_pid, sk, _pn)."""
-    if dfreq is None:
-        dfreq = posting_dfreq(post)
+    ``prefix_keep_rank``), as (_pid, sk, _pn).  The global document
+    frequency per hashed shingle is the rarity order that makes prefixes
+    the least-joinable tokens."""
+    dfreq = post.groupBy("sk").agg(F.count(F.lit(1)).alias("_df"))
     ranked = post.join(dfreq, "sk").withColumn(
         "_r",
         F.row_number().over(Window.partitionBy("_id").orderBy("_df", "sk")),

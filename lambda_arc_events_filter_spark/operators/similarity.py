@@ -498,10 +498,8 @@ def ivfpq_probes(
     """The probe relation of :func:`ivfpq_topk`: per (query, probed
     cell), the query's unit vector plus the per-subspace ADC lookup
     tables (scaled-integer squared distances of the query RESIDUAL
-    against each codebook entry).  Exposed separately so
-    tools/scale_probe.py measures the operator's own candidate
-    derivation instead of re-implementing it (the r12 ADVICE
-    non-circularity discipline)."""
+    against each codebook entry).  Its own function so the probe stage
+    reads apart from the ADC scoring and exact re-rank that consume it."""
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),

@@ -13,7 +13,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from lambda_arc_events_filter_spark.cache import session_artifact
-from lambda_arc_events_filter_spark.catalog import load, values_relation
+from lambda_arc_events_filter_spark.catalog import (
+    EMBEDDING_DIM,
+    load,
+    values_relation,
+)
 from lambda_arc_events_filter_spark.functions.exact import (
     round_half_up,
     round_int_ratio,
@@ -631,16 +635,13 @@ def dedup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: SemDeDup cluster index, built once per (session, sf_dir): the k-means
-#: assignment and the unit-vector corpus are the INDEX artifact of
-#: semantic dedup (cluster once, prune many times / incrementally —
-#: Abbas et al. run exactly this split), so they localCheckpoint like the
-#: IVF index and the dedup postings; the per-run phase is the pair scan.
-#: Kept with cache.session_artifact, so its RDD scans are resident and
-#: consumers may ride the prepared-plan cache.
-_SEMDEDUP_DIM = 64
-
-
+# SemDeDup cluster index, built once per (session, sf_dir): the k-means
+# assignment and the unit-vector corpus are the INDEX artifact of
+# semantic dedup (cluster once, prune many times / incrementally —
+# Abbas et al. run exactly this split), so they localCheckpoint like the
+# IVF index and the dedup postings; the per-run phase is the pair scan.
+# Kept with cache.session_artifact, so its RDD scans are resident and
+# consumers may ride the prepared-plan cache.
 def _semdedup_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -665,7 +666,7 @@ def _semdedup_index(
         ).localCheckpoint()
         flat = ev.select(
             "vec_id",
-            *[F.col("v")[i].alias(f"c{i}") for i in range(_SEMDEDUP_DIM)],
+            *[F.col("v")[i].alias(f"c{i}") for i in range(EMBEDDING_DIM)],
         )
         # the joined (cluster ⋈ flat-unit-vector) relation IS the index
         # artifact the pair scan probes — checkpoint it joined and already
@@ -677,7 +678,7 @@ def _semdedup_index(
         m = (
             assign.join(flat, "vec_id").repartition(width).localCheckpoint()
         )
-        dim = _SEMDEDUP_DIM
+        dim = EMBEDDING_DIM
         a_side = m.select(
             F.col("cluster"),
             F.col("vec_id").alias("ia"),
@@ -781,7 +782,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     already carries.
     """
     assign, a, b = _semdedup_index(spark, sf_dir)
-    dim = _SEMDEDUP_DIM
+    dim = EMBEDDING_DIM
     # Pair generation: PROBE side pre-spread across the cores inside the
     # index checkpoint (a 1-partition probe evaluated every pair on one
     # task: measured 0.87 s → 0.45 s), BUILD side broadcast (the whole
@@ -2649,11 +2650,10 @@ def stream_dedup_exact_substring(
 # Sinkhorn/IPF optimal-transport mixture rebalancing (BB8)
 # ---------------------------------------------------------------------------
 
-#: Length-bucket boundaries (chars) and the TARGET bucket mixture the
-#: curated corpus should hit — part of the query definition.  Three
-#: buckets: short [0,200), medium [200,400), long [400,∞); fixtures
-#: occupy every (source, bucket) cell at every SF.
-_IPF_TARGET_BUCKET = (0.25, 0.35, 0.40)
+#: IPF rounds of corpus_sinkhorn_rebalance.  Its three length buckets
+#: (chars: short [0,200), medium [200,400), long [400,∞)) and the target
+#: bucket mixture (0.25/0.35/0.40) are literals of the query and its
+#: oracle; fixtures occupy every (source, bucket) cell at every SF.
 _IPF_ITERS = 3
 
 

@@ -16,6 +16,7 @@ from lambda_arc_events_filter_spark.functions.exact import (
 )
 from lambda_arc_events_filter_spark.operators.range_join import banded_range_join
 from lambda_arc_events_filter_spark.registry import register
+from lambda_arc_events_filter_spark.session import temporary_conf
 from lambda_arc_events_filter_spark.sources import readers
 
 
@@ -1035,9 +1036,7 @@ def sql_scripting_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
     migration path for warehouse workloads.
     """
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_script")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with temporary_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         out = spark.sql(
             """
             BEGIN
@@ -1056,11 +1055,6 @@ def sql_scripting_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before the conf reverts (scripting executes lazily
         # per-statement but the returned frame is the final SELECT)
         rows = out.collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
     return spark.createDataFrame(rows, out.schema)
 
 

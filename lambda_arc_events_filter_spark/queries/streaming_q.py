@@ -24,6 +24,7 @@ from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import SCHEMAS, load
 from lambda_arc_events_filter_spark.functions.exact import round_half_up
 from lambda_arc_events_filter_spark.registry import register
+from lambda_arc_events_filter_spark.session import temporary_conf
 from lambda_arc_events_filter_spark.sources import readers
 from lambda_arc_events_filter_spark.sources.streams import events_stream, run_to_memory
 
@@ -486,9 +487,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(new_path)
         os.replace(tmp, pointer)
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with temporary_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             agg.writeStream.foreachBatch(merge)
             .outputMode("update")
@@ -497,8 +496,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
         spark.read.schema("user_id long, n_events long, total_value double")
         .parquet(str(_latest()))
@@ -1352,9 +1349,7 @@ def stream_state_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     ck = readers.scratch_dir("ss_audit_ck")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with temporary_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             agg.writeStream.format("noop")
             .outputMode("update")
@@ -1363,8 +1358,6 @@ def stream_state_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     state = spark.read.format("statestore").load(ck)
     # The state VALUE schema carries the aggregation-buffer field names
     # (`count`, `sum`), not the output aliases — the reader exposes the

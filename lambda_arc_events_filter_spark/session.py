@@ -13,6 +13,8 @@ pandas exchange, RocksDB state store for streaming state.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -100,3 +102,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def temporary_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set the session confs in ``conf`` for the body of the ``with``,
+    then put each one back, also when the body raises: a conf the session
+    had is restored to its value, a conf it did not have is unset (so it
+    falls back to Spark's default, not to a value leaked from here)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -29,16 +29,7 @@ through it equals reading the table natively.
 
 from __future__ import annotations
 
-try:  # the DataSource API exists in pyspark >= 4.0
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
-
-    PYDS_AVAILABLE = True
-except ImportError:  # pragma: no cover - older pyspark
-    PYDS_AVAILABLE = False
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
 def make_events_replay_datasource():
@@ -118,10 +109,6 @@ def register(spark, make_datasource) -> None:
     """Idempotently register the data source that ``make_datasource``
     builds (one of this module's ``make_*_datasource`` factories) with
     this session."""
-    if not PYDS_AVAILABLE:
-        raise RuntimeError(
-            "pyspark.sql.datasource API not available in this Spark"
-        )
     key = (make_datasource.__name__, spark.sparkContext.applicationId)
     if key not in _REGISTERED:
         spark.dataSource.register(make_datasource())

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from lambda_arc_events_filter_spark.catalog import read_events, table_path
+from lambda_arc_events_filter_spark.session import temporary_conf
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,12 +80,6 @@ def run_to_memory(
     """
     qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_store = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # State-store provider is per-query (read at start, baked into the
     # checkpoint).  This sink replays a BOUNDED fixture (availableNow), so
     # state fits in memory with room to spare — the in-memory HDFS-backed
@@ -101,11 +96,14 @@ def run_to_memory(
         if state_store == "rocksdb"
         else "HDFSBackedStateStoreProvider"
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." + provider,
-    )
-    try:
+    conf = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state." + provider
+        )
+    }
+    if state_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with temporary_conf(spark, conf):
         writer = (
             df.writeStream.format("memory").queryName(qname).outputMode(mode)
         )
@@ -124,18 +122,6 @@ def run_to_memory(
         else:
             q = writer.trigger(availableNow=True).start()
             q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # Restore UNCONDITIONALLY: when the session had no explicit
-        # provider set, unset (falls back to the session default) rather
-        # than leaving the HDFSBacked override leaked into session conf
-        # for later non-run_to_memory streaming queries.
-        if prev_store is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_store
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     # Resolve the memory-sink table, then DROP the temp view: the
     # returned DataFrame holds the resolved relation, while leaving the
     # view registered would pin every materialized result in the driver
@@ -194,9 +180,11 @@ def kinesis_stream(
     'Filters ARC kinesis feed events', README.md:2).
 
     Uses the spark-sql-kinesis connector (``format("aws-kinesis")``), which
-    is not bundled in this container — tests use ``events_stream`` instead;
-    the decode path (``decode_kinesis_records``) is shared and unit-tested
-    against synthetic Lambda-envelope records.
+    Spark does not bundle.  Without it this raises an actionable
+    ``RuntimeError`` (a test pins it); the queries and tests replay files
+    through ``events_stream`` instead, and the decode path
+    (``decode_kinesis_records``) is shared and unit-tested against
+    synthetic Lambda-envelope records.
     """
     reader = (
         spark.readStream.format("aws-kinesis")
@@ -209,7 +197,7 @@ def kinesis_stream(
         reader = reader.option("kinesis.endpointUrl", endpoint)
     try:
         return reader.load()
-    except Exception as ex:  # pragma: no cover - connector not in container
+    except Exception as ex:
         # Only the connector-missing failure mode is rebranded with the
         # actionable message; a real configuration/auth error from an
         # INSTALLED connector propagates untouched (round-8 review: the

@@ -65,25 +65,6 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def compare_frames(
-    scols: list[str], srows: list[tuple], dcols: list[str], drows: list[tuple]
-) -> list[str]:
-    """Return a list of mismatch descriptions (empty = equal)."""
-    problems: list[str] = []
-    if sorted(scols) != sorted(dcols):
-        problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-    if len(srows) != len(drows):
-        problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-    if not problems:
-        sset = rowset(scols, srows)
-        dset = rowset(dcols, drows)
-        if sset != dset:
-            only_s = [k for k in sset if sset[k] != dset.get(k, 0)][:3]
-            only_d = [k for k in dset if dset[k] != sset.get(k, 0)][:3]
-            problems.append(f"values; spark-only={only_s} duck-only={only_d}")
-    return problems
-
-
 def _column_kind(col: pd.Series) -> str:
     """Comparison kind for a column: numpy dtype kind with unsigned folded
     into signed int, and object columns holding date/datetime values folded

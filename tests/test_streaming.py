@@ -9,7 +9,11 @@ import uuid
 import pyspark.sql.functions as F
 import pytest
 
-from lambda_arc_events_filter_spark.sources.streams import run_to_memory
+from lambda_arc_events_filter_spark.session import temporary_conf
+from lambda_arc_events_filter_spark.sources.streams import (
+    kinesis_stream,
+    run_to_memory,
+)
 
 
 @pytest.fixture()
@@ -277,3 +281,50 @@ def test_python_stream_source_reads_declared_columns(spark, sf_dir):
     rows, _ = ds.simpleStreamReader(s.schema).read({"row": 0})
     want = load(spark, sf_dir, "events").select(F.unix_micros("ts"), "value")
     assert sorted(rows) == sorted(tuple(r) for r in want.collect())
+
+
+def test_temporary_conf_restores_or_unsets_when_the_body_raises(spark):
+    """A conf the session had goes back to its value and a conf it lacked
+    is unset, also when the body raises."""
+    had = "spark.sql.shuffle.partitions"
+    lacked = "spark.sql.scripting.enabled"
+    before = spark.conf.get(had)
+    assert spark.conf.get(lacked, None) is None
+    with pytest.raises(ValueError, match="body failed"):
+        with temporary_conf(spark, {had: "3", lacked: "true"}):
+            assert spark.conf.get(had) == "3"
+            assert spark.conf.get(lacked) == "true"
+            raise ValueError("body failed")
+    assert spark.conf.get(had) == before
+    assert spark.conf.get(lacked, None) is None
+
+
+def test_run_to_memory_leaves_the_state_store_provider_unset(spark):
+    """run_to_memory pins its own state-store provider for one query; a
+    session without an explicit provider has none afterwards."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        out = run_to_memory(
+            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+            .limit(0).groupBy().count(),
+            "provider_unset",
+            mode="complete",
+        )
+        assert out.collect()[0]["count"] == 0
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+
+
+def test_kinesis_stream_without_connector_raises_actionable_error(spark):
+    """The Kinesis connector ships apart from Spark.  Without it the
+    production source names the file-backed replacement instead of
+    surfacing the bare data-source lookup failure, which stays chained."""
+    with pytest.raises(RuntimeError, match="events_stream") as info:
+        kinesis_stream(spark, "arc-events")
+    cause = info.value.__cause__
+    assert cause is not None
+    assert "aws-kinesis" in str(cause) or "DATA_SOURCE_NOT_FOUND" in str(cause)

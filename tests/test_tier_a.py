@@ -275,7 +275,6 @@ def test_ingest_compaction_path_is_lossless(spark, sf_dir, tmp_path):
             assert compacted.exceptAll(raw).count() == 0
     finally:
         # the copy is keyed by this temp file's mtime: never reused
-        catalog._INGEST_PATHS.pop(src, None)
         os.remove(copy)
 
 
