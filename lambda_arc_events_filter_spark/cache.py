@@ -27,10 +27,10 @@ takes its plans with it, so no cached plan outlives the index whose
 
 Eviction only drops the driver-side reference: executor-side blocks
 (localCheckpoint RDDs) are released by the ContextCleaner once the
-DataFrame is unreachable.  Layout paths are scratch dirs under the temp
-dir (``TMPDIR``, ``readers.scratch_dir``) that nothing deletes: an
-evicted path stays on disk.  The other bounded cache here holds the
-band-boundary probes (``band_bounds``).
+DataFrame is unreachable.  Layout paths are scratch dirs under the
+process's scratch root (``readers.scratch_dir``): an evicted path stays
+on disk until the interpreter exits and the root is removed.  The other
+bounded cache here holds the band-boundary probes (``band_bounds``).
 """
 
 from __future__ import annotations

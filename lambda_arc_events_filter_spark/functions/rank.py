@@ -34,17 +34,17 @@ from the row itself, so no plan-shape invariant is load-bearing.  The
 summary branch never touches the fact shuffle at all — it is a
 map-combinable 2-column scan aggregate.
 
-Non-bandable leading order columns (strings, arrays) fall back to the
-range-partition path, which keeps the core-projection reuse invariant
-documented on ``_pid_order_stats``.
+The leading order column must be bandable: numeric, decimal, timestamp or
+date (a monotonic cast to double).  Any other type raises ``ValueError``.
 
-Callers MUST pass a TOTAL order (include a unique tiebreak key).  Same
-machinery as ``functions/stats.py::group_percentile_cont``'s ``range``
-strategy, generalized to rank + running sum/max/min with inclusive or
+Callers MUST pass a TOTAL order (include a unique tiebreak key).  The band
+cut (probe, boundary cache, comparison chain, band-count default) is
+shared with ``functions/stats.py::group_percentile_cont``; the helpers
+here generalize it to rank + running sum/max/min with inclusive or
 exclusive frames; bounded lag/lead/sliding frames build on the global
 rank via rank-shifted equi-joins (``global_order_neighbors`` — chosen
 over a ghost-row partition shift, whose one-partition reach silently
-loses neighbors across empty/sparse range partitions; regression-tested).
+loses neighbors across empty/sparse bands; regression-tested).
 """
 
 from __future__ import annotations
@@ -92,66 +92,80 @@ _NUMERIC_DTYPES = frozenset(
 )
 
 
-def _band_column(core: DataFrame, name: str, direction: str, n_bands: int):
-    """Band id for the leading order column, or None if not bandable.
+def _default_partitions(df: DataFrame, num_partitions: int | None) -> int:
+    """Band count: ``num_partitions``, else the session's parallelism
+    capped at 32."""
+    if num_partitions is not None:
+        return num_partitions
+    return min(32, df.sparkSession.sparkContext.defaultParallelism)
 
-    Runs the one-off approxQuantile boundary probe (a GK-sketch scan of
-    the single pruned column; the driver receives ~n_bands doubles) and
-    returns a literal comparison chain assigning each row its band.  Band
-    ids ASCEND in the direction of the total order: nulls-first for asc
-    (band −1), nulls-last for desc (band n+1), matching Spark's window
-    null ordering.  NaN (sorts greater than any double) falls through
-    every ``<= bound`` test into the last ascending band.
+
+def _as_double(df: DataFrame, name: str) -> Column:
+    """Column ``name`` cast to double, order-preserving, or ``ValueError``
+    when its type has no such cast (strings, arrays, ...)."""
+    dt = dict(df.dtypes)[name]
+    if dt in _NUMERIC_DTYPES or dt.startswith(("decimal", "timestamp")):
+        return F.col(name).cast("double")
+    if dt == "date":
+        return F.col(name).cast("timestamp").cast("double")
+    raise ValueError(
+        f"global_order_stats: leading order column {name!r} has type "
+        f"{dt}, which cannot be cut into value bands; lead the order with "
+        "a numeric, decimal, timestamp or date column"
+    )
+
+
+def _band_bounds(
+    df: DataFrame, name: str, x: Column, n_bands: int, materialize: bool = True
+) -> tuple[DataFrame, list[float]]:
+    """``(df, bounds)``: ``df``, localCheckpointed once if it is derived
+    (``materialize=False`` skips that), and the sorted cut points that
+    split ``x`` (column ``name`` as a double) into ~``n_bands`` bands.
+
+    The cut points come from one approxQuantile probe (a GK-sketch scan
+    of the single pruned column; the driver receives ~n_bands doubles)
+    with NaN bounds dropped: an all-NaN or empty column would otherwise
+    make the sort order-unstable and the chain non-monotone.  They are
+    session-cached in ``cache.band_bounds`` per (app, input plan,
+    column, band count).  The probe only steers band balance (any fixed
+    cuts are order-consistent), so repeat builds over the same input
+    skip the job, and a stale or colliding entry is still correct.  The
+    key is taken BEFORE materialization: a localCheckpoint gets a fresh
+    plan id per call, while the plan it checkpoints is call-stable.
     """
-    dt = dict(core.dtypes)[name]
-    if dt in _NUMERIC_DTYPES or dt.startswith("decimal"):
-        conv = F.col(name).cast("double")
-    elif dt.startswith("timestamp"):
-        conv = F.col(name).cast("double")
-    elif dt == "date":
-        conv = F.col(name).cast("timestamp").cast("double")
-    else:
-        return None
-    qs = [i / n_bands for i in range(1, n_bands)]
-    if not qs:
-        return F.lit(0)
-    # session bounds cache (cache.band_bounds, shared with
-    # functions/stats.py): the probe only steers band balance (any fixed
-    # cuts are order-consistent), so repeat constructions over the same
-    # input plan skip the approxQuantile job.  Lazily-checkpointed derived
-    # inputs get a fresh plan id per call and simply never hit —
-    # scan-chain inputs (the common consumers) do.
     key = (
-        core.sparkSession.sparkContext.applicationId,
-        core.semanticHash(),
+        df.sparkSession.sparkContext.applicationId,
+        df.semanticHash(),
         name,
         n_bands,
     )
-    bounds = band_bounds(
+    if materialize:
+        df = _materialize_if_derived(df)
+    qs = [i / n_bands for i in range(1, n_bands)]
+    if not qs:  # one band: nothing to cut
+        return df, []
+    return df, band_bounds(
         key,
         lambda: sorted(
             {
                 b
-                for b in core.select(conv.alias("_v")).stat.approxQuantile(
+                for b in df.select(x.alias("_v")).stat.approxQuantile(
                     "_v", qs, 0.01
                 )
-                if b == b  # drop NaN boundaries (all-NaN / empty columns)
+                if b == b
             }
         ),
     )
-    n = len(bounds)
-    asc: Column = F.lit(n)
+
+
+def _band_chain(x: Column, bounds: Sequence[float]) -> Column:
+    """Ascending band id of ``x``: the index of the first bound ``b`` with
+    ``x <= b``, or ``len(bounds)`` past the last (NaN, which sorts above
+    every double, included)."""
+    band: Column = F.lit(len(bounds))
     for i, b in reversed(list(enumerate(bounds))):
-        asc = F.when(conv <= F.lit(b), F.lit(i)).otherwise(asc)
-    if direction == "asc":
-        return F.when(F.col(name).isNull(), F.lit(-1)).otherwise(asc)
-    return F.when(F.col(name).isNull(), F.lit(n + 1)).otherwise(F.lit(n) - asc)
-
-
-def _default_partitions(df: DataFrame, num_partitions: int | None) -> int:
-    if num_partitions is not None:
-        return num_partitions
-    return min(32, df.sparkSession.sparkContext.defaultParallelism)
+        band = F.when(x <= F.lit(b), F.lit(i)).otherwise(band)
+    return band
 
 
 def _materialize_if_derived(df: DataFrame) -> DataFrame:
@@ -206,11 +220,13 @@ def global_order_stats(
 
     If ``df`` has columns beyond the order/base columns, pass ``key`` — a
     unique key that is PART of the order — and the helper computes on the
-    core projection and joins results back on it (see module docstring
-    for why the core projection is load-bearing, not a tidy-up).
+    core projection and joins results back on it, so only the order and
+    base columns cross the band shuffle.  The leading order column must
+    be bandable (see the module docstring); another type raises
+    ``ValueError``.
 
-    Float caveat: the cross-partition combine re-associates a double sum
-    (per-partition totals first), so double running sums can drift ~1 ulp
+    Float caveat: the cross-band combine re-associates a double sum
+    (per-band totals first), so double running sums can drift ~1 ulp
     versus a sequential fold.  Integer sums and max/min are exact — use
     the engine-wide integer-cents discipline when the oracle must agree
     bit-for-bit.
@@ -278,30 +294,28 @@ def global_order_stats(
         key = list(key)
         if not set(key) <= set(order_names):
             raise ValueError("key must be part of the order (total order)")
-        core = df.select(*core_names)
     else:
         key = None
-        core = df.select(*core_names)  # fix column order
-    if materialize:
-        core = _materialize_if_derived(core)
+    core = df.select(*core_names)  # also fixes the column order
 
-    band = _band_column(core, order_names[0], order_dirs[0], num_partitions)
-    if band is not None:
-        # banded path: ONE fact shuffle (the hash exchange the band window
-        # requires).  The summary branch is a map-combinable aggregate over
-        # a second pruned SCAN — deterministic band literals mean the two
-        # branches need no shared physical exchange to agree.
-        rp = core.withColumn("_pid", band)
-        sizes_src = rp
+    # ONE fact shuffle (the hash exchange the band window requires).  The
+    # summary branch is a map-combinable aggregate over a second pruned
+    # SCAN — deterministic band literals mean the two branches need no
+    # shared physical exchange to agree.  Band ids ASCEND in the direction
+    # of the total order: nulls-first for asc (band −1), nulls-last for
+    # desc (band n+1), matching Spark's window null ordering.
+    lead, lead_dir = order_names[0], order_dirs[0]
+    x = _as_double(core, lead)
+    core, bounds = _band_bounds(core, lead, x, num_partitions, materialize)
+    n = len(bounds)
+    asc = _band_chain(x, bounds)
+    if lead_dir == "asc":
+        band = F.when(F.col(lead).isNull(), F.lit(-1)).otherwise(asc)
     else:
-        # fallback (non-bandable leading order column): range partition +
-        # partition-id window.  Costs a second fact shuffle, and the
-        # summary MUST reuse the sampled range exchange (core projection
-        # keeps both branches canonically identical — see module docstring).
-        rp = core.repartitionByRange(num_partitions, *cols).withColumn(
-            "_pid", F.spark_partition_id()
+        band = F.when(F.col(lead).isNull(), F.lit(n + 1)).otherwise(
+            F.lit(n) - asc
         )
-        sizes_src = rp
+    rp = core.withColumn("_pid", band)
     w_loc = Window.partitionBy("_pid").orderBy(*cols)
     hi = -1 if exclusive else Window.currentRow
     w_run = w_loc.rowsBetween(Window.unboundedPreceding, hi)
@@ -323,7 +337,7 @@ def global_order_stats(
     # SATISFIES the offsets window's clustering requirement — Catalyst
     # then plans the window with no exchange (one fewer stage per helper
     # call; measured ~40 ms at fixture scale)
-    sizes = sizes_src.groupBy("_pid").agg(*aggs).coalesce(1)
+    sizes = rp.groupBy("_pid").agg(*aggs).coalesce(1)
 
     # running offsets over ascending _pid on the TINY summary relation.
     # Keyed by a constant expression DERIVED from _pid so Catalyst cannot
@@ -387,7 +401,7 @@ def ntile_from_rank(rank_col: Column, n_col: Column, buckets: int) -> Column:
     DuckDB ntile convention (with q = n div buckets and r = n mod
     buckets, the first r buckets hold q+1 rows): bucket(i) = ceil(i/(q+1))
     while i ≤ r(q+1), else r + ceil((i − r(q+1))/q).  Lets a decile/
-    quantile label ride the range-partitioned rank instead of a
+    quantile label ride the banded rank instead of a
     single-partition ntile window."""
     q = F.floor((n_col - n_col % buckets) / buckets).cast("long")
     r = (n_col % buckets).cast("long")
@@ -417,13 +431,13 @@ def global_order_neighbors(
     rows-frame [lo, hi] relative to the current row (lo ≤ 0 ≤ hi or any
     bounded pair).  ``key`` as in :func:`global_order_stats`.
 
-    Mechanism: the range-partitioned global rank ``g`` (above) makes a
+    Mechanism: the banded global rank ``g`` (above) makes a
     row's frame a RANK INTERVAL, so lag(k) is an equi-join on ``g − k``
     and a bounded frame is an explode of the (hi−lo+1) relative offsets
     joined on the shifted rank and re-aggregated — shuffles keyed by the
     dense rank, never a single-partition exchange, and immune to the
     sparse-partition hazard a ghost-row shift has (a neighbor more than
-    one range partition away is still one rank away).  Frame aggregates
+    one band away is still one rank away).  Frame aggregates
     combine hash-aggregate-style; integer inputs are exact, double
     inputs carry the usual ±1 ulp association caveat vs a sequential
     window evaluation.

@@ -5,20 +5,24 @@ UDAF for large groups: the builtin buffers EVERY group value in a single
 aggregation buffer (OpenHashMap per group) — a driver-of-OOM at 100 TB and
 ~7s on a 600k-row group locally.
 
-Implementation is a RANGE-PARTITIONED distributed rank, not a
-group-partitioned window: ``Window.partitionBy(group)`` puts each group in
-ONE task (three return flags → three tasks sorting 200k rows each; a 10B-row
-group at 100 TB → one task, i.e. a scalability cliff).  Instead:
+Implementation is a VALUE-BANDED distributed rank, not a group-partitioned
+window: ``Window.partitionBy(group)`` puts each group in ONE task (three
+return flags → three tasks sorting 200k rows each; a 10B-row group at
+100 TB → one task, i.e. a scalability cliff).  Instead:
 
-1. ``repartitionByRange(P, keys..., value)`` — the engine's range
-   partitioner splits every group across P partitions in sorted order.
-2. local rank per (physical partition, group) — a window keyed on
-   ``spark_partition_id()``, so P partitions sort in parallel.
-3. global rank = local rank + offset, where offsets are a running sum over
-   the tiny (partition, group, count) relation — |P|·|groups| rows.
-4. the two straddling ranks per quantile come from a BROADCAST join of the
-   per-group target ranks (derived from group counts) into the ranked
-   relation — the big side never reshuffles.
+1. cut the value domain into ~P bands at sampled quantile boundaries,
+   baked into the plan as a literal comparison chain (the band cut of
+   ``functions/rank.py``) — every row with value ≤ b sorts before every
+   row with value > b in every group;
+2. ONE per-(group, band) count aggregate; per-band offsets and the group
+   total are running / full-frame sums over that tiny relation;
+3. the per-group target ranks (derived from the group counts) select the
+   few bands that hold a straddling rank; only those bands are ranked,
+   by a window keyed on (band, group), so P bands sort in parallel and
+   global rank = band-local rank + band offset;
+4. the rows AT a straddling rank come from a BROADCAST join of the
+   target ranks into the ranked relation — the big side never
+   reshuffles.
 
 The interpolation is the standard PERCENTILE_CONT formula — identical to
 DuckDB ``quantile_cont`` and Spark ``percentile``:
@@ -32,7 +36,11 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from lambda_arc_events_filter_spark.cache import band_bounds
+from lambda_arc_events_filter_spark.functions.rank import (
+    _band_bounds,
+    _band_chain,
+    _default_partitions,
+)
 
 #: internal column names the banded-rank plan materializes on the fact
 #: relation.  Input columns and caller aliases must not collide —
@@ -98,7 +106,6 @@ def group_percentile_cont(
     sets the band count (default: the session's parallelism, capped at
     32).
     """
-    spark = df.sparkSession
     keys = list(keys)
     clashes = _RESERVED_NAMES.intersection(df.columns).union(
         _RESERVED_NAMES.intersection(quantiles)
@@ -127,27 +134,7 @@ def group_percentile_cont(
             )
     nn = df.filter(F.col(value_col).isNotNull())
 
-    if num_partitions is None:
-        num_partitions = min(32, spark.sparkContext.defaultParallelism)
-
-    # the banded plan evaluates ``nn`` several times (boundary probe, base
-    # aggregates, band window, band sizes) — cheap for a pruned scan chain,
-    # not for a derived input (PSI feeds a window-derived half-split here);
-    # materialize derived inputs once (see functions/rank.py)
-    from lambda_arc_events_filter_spark.functions.rank import (
-        _materialize_if_derived,
-    )
-
-    # bounds-cache key BEFORE materialization: a localCheckpoint gets a
-    # fresh plan id per call, but the pre-materialization analyzed plan
-    # of a scan-chain input is call-stable.
-    bounds_key = (
-        spark.sparkContext.applicationId,
-        nn.semanticHash(),
-        value_col,
-        num_partitions,
-    )
-    nn = _materialize_if_derived(nn)
+    num_partitions = _default_partitions(df, num_partitions)
 
     # VALUE-BANDED global rank, ONE shuffle.  The obvious plan —
     # ``repartitionByRange`` + a window keyed on ``spark_partition_id()`` —
@@ -155,43 +142,20 @@ def group_percentile_cont(
     # range partitioning satisfies the window's ClusteredDistribution(_pid),
     # so it stacks ``Exchange hashpartitioning(_pid, keys)`` on top of
     # ``Exchange rangepartitioning`` (read off the executed plan, round 4).
-    # Instead: cut the value domain into ~``num_partitions`` bands at
-    # sampled quantile boundaries, baked into the plan as a codegen'd
-    # comparison chain.  Any fixed boundary is order-consistent (every row
-    # with value ≤ b sorts before every row with value > b, per group), so
-    # band-local rank + per-(group, band) offsets equals the global
+    # Band-local rank + per-(group, band) offsets equals the global
     # per-group rank exactly — same semantics as the range partitioner
     # (which likewise cannot split ties), at HALF the shuffle volume.  The
-    # boundary probe is one approxQuantile job (GK sketch, driver gets
-    # ~P doubles, accuracy only affects band balance, never correctness)
-    # that runs at plan-CONSTRUCTION time — build-once/probe-many callers
-    # and the plan cache pay it once, like a broadcast build.  Bounds are
-    # additionally session-cached per (app, input plan, column, P) in
-    # ``cache.band_bounds`` — repeat calls skip the probe job entirely (and
-    # a stale/colliding entry is still correct: bounds steer balance, not
-    # semantics).
-    bounds = band_bounds(
-        bounds_key,
-        lambda: sorted(
-            {
-                b
-                for b in nn.select(
-                    F.col(value_col).cast("double").alias("_v")
-                ).stat.approxQuantile(
-                    "_v",
-                    [i / num_partitions for i in range(1, num_partitions)],
-                    0.01,
-                )
-                if b == b  # drop NaN boundaries (all-NaN / empty columns),
-                # matching the sibling guard in functions/rank.py — a NaN
-                # bound makes sorted(set(...)) order-unstable and the CASE
-                # chain non-monotone
-            }
-        ),
+    # boundary probe runs at plan-CONSTRUCTION time — build-once/probe-many
+    # callers and the plan cache pay it once, like a broadcast build — and
+    # repeat builds over the same input hit the session bounds cache.  The
+    # banded plan evaluates ``nn`` several times (boundary probe, base
+    # aggregates, band window, band sizes) — cheap for a pruned scan chain,
+    # not for a derived input (PSI feeds a window-derived half-split here),
+    # so ``_band_bounds`` materializes derived inputs once.
+    nn, bounds = _band_bounds(
+        nn, value_col, F.col(value_col).cast("double"), num_partitions
     )
-    band: Column = F.lit(len(bounds))
-    for i, b in reversed(list(enumerate(bounds))):
-        band = F.when(F.col("_vd") <= F.lit(b), i).otherwise(band)
+    band = _band_chain(F.col("_vd"), bounds)
     # cast once in a projection — a per-``when`` cast re-evaluates for
     # every branch when the chain falls out of whole-stage codegen
     bd = (

@@ -18,6 +18,7 @@ from lambda_arc_events_filter_spark.functions.exact import (
     round_int_ratio,
 )
 from lambda_arc_events_filter_spark.functions.rank import global_order_stats
+from lambda_arc_events_filter_spark.functions.sessions import with_session_seq
 from lambda_arc_events_filter_spark.operators.interval import (
     interval_overlap_count,
 )
@@ -805,18 +806,8 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned) is the 100 TB shape.
     """
     e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = F.unix_micros(F.col("ts")) - F.lag(
-        F.unix_micros(F.col("ts"))
-    ).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     a = (
-        e.select("user_id", "ts")
-        .withColumn("_ns", new_sess)
-        .withColumn("session_seq", F.sum("_ns").over(run))
+        with_session_seq(e.select("user_id", "ts"))
         .groupBy("user_id", "session_seq")
         .agg(F.min("ts").alias("a_start"), F.max("ts").alias("a_end"))
     )
@@ -882,10 +873,10 @@ def lineitem_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     — engines disagree on float summation ASSOCIATION (segment-tree vs
     streaming window sums), but not on integer addition, so the A/B
     boundary cannot flip on a last-ulp drift — including across the
-    range-partition combine.  The running total RUNS range-partitioned
-    (``functions/rank.py``: repartitionByRange + per-partition running
-    sum + broadcast offset rebase): no single-partition window, no
-    serial step; the grand total is a 1-row broadcast.
+    cross-band combine.  The running total RUNS value-banded
+    (``functions/rank.py``: literal value bands + per-band running sum +
+    broadcast offset rebase): no single-partition window, no serial
+    step; the grand total is a 1-row broadcast.
     """
     li = load(spark, sf_dir, "lineitem")
     # quantize PER ROW, sum integers: a per-part float sum then a single
@@ -1199,9 +1190,9 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one hash(custkey) aggregate over orders, then three global
     ranks over the |customers| relation — at 100 TB the base aggregate
-    is the only corpus-scale stage; each rank runs range-partitioned
-    (``functions/rank.py``: repartitionByRange + per-partition
-    row_number + broadcast offset rebase, joined back on custkey), so
+    is the only corpus-scale stage; each rank runs value-banded
+    (``functions/rank.py``: literal value bands + per-band row_number +
+    broadcast offset rebase, joined back on custkey), so
     the scoring involves no single-partition window; the customer count
     is a 1-row broadcast.
     """
@@ -1308,7 +1299,7 @@ def orders_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     price (max date — map-side combinable, and a row per PRICE makes
     "strictly cheaper" an exclusive ROWS frame, preserving strict
     dominance exactly like the oracle's value-based RANGE frame), take
-    the range-partitioned exclusive running max (``functions/rank.py``
+    the value-banded exclusive running max (``functions/rank.py``
     — no single-partition window, no serial sort), and join the
     per-price frontier bound back to the orders on price.  Versus the
     self-join's |orders|² pair stream this is two shuffles by price.

@@ -188,6 +188,30 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _label_centroids(e: DataFrame) -> DataFrame:
+    """ONE row, ``cs``: the per-label mean embeddings, unrounded, as an
+    array of ``(clabel, cvec)`` structs sorted by label.  Means aggregate
+    via posexplode → (label, pos) (k·dim rows), so the corpus is
+    scanned once and only k·dim rows shuffle.  Unlike
+    ``similarity.label_centroids`` nothing is rounded here: the callers
+    round the distances they compare."""
+    dims = e.select("label", F.posexplode("embedding").alias("pos", "val"))
+    cent = dims.groupBy("label", "pos").agg(
+        F.avg(F.col("val").cast("double")).alias("cv")
+    )
+    packed = (
+        cent.groupBy("label")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pc"))
+        .select(
+            F.col("label").alias("clabel"),
+            F.expr("transform(pc, s -> s.cv)").alias("cvec"),
+        )
+    )
+    return packed.agg(
+        F.array_sort(F.collect_list(F.struct("clabel", "cvec"))).alias("cs")
+    )
+
+
 @register(
     "embedding_centroid_eval",
     oracle="""
@@ -236,24 +260,7 @@ def embedding_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     COVERAGE.md).
     """
     e = load(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode("embedding").alias("pos", "val")
-    )
-    cent = dims.groupBy("label", "pos").agg(
-        F.avg(F.col("val").cast("double")).alias("cv")
-    )
-    packed = cent.groupBy("label").agg(
-        F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pc")
-    ).select(
-        F.col("label").alias("clabel"),
-        F.expr("transform(pc, s -> s.cv)").alias("cvec"),
-    )
-    cents = packed.agg(
-        F.array_sort(
-            F.collect_list(F.struct("clabel", "cvec"))
-        ).alias("cs")
-    )
-    scored = e.join(F.broadcast(cents)).select(
+    scored = e.join(F.broadcast(_label_centroids(e))).select(
         "vec_id",
         "label",
         F.expr(
@@ -528,7 +535,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     document (min(doc_id) per term — one explode→min aggregate), so
     cumulative vocabulary = running sum of per-doc first-use counts.
     The decile label reproduces ntile(10) ARITHMETICALLY from the
-    range-partitioned global rank (``functions/rank.py``) and the doc
+    value-banded global rank (``functions/rank.py``) and the doc
     count n: with q = n div 10, r = n mod 10, the first r buckets hold
     q+1 rows — bucket(i) = ceil(i/(q+1)) while i ≤ r(q+1), else
     r + ceil((i − r(q+1))/q); integer-exact, identical to both engines'
@@ -2349,21 +2356,6 @@ def labels_confident_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere in the decision path, and the argmin breaks ties on the
     label."""
     e = load(spark, sf_dir, "embeddings")
-    dims = e.select("label", F.posexplode("embedding").alias("pos", "val"))
-    cent = dims.groupBy("label", "pos").agg(
-        F.avg(F.col("val").cast("double")).alias("cv")
-    )
-    packed = (
-        cent.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pc"))
-        .select(
-            F.col("label").alias("clabel"),
-            F.expr("transform(pc, s -> s.cv)").alias("cvec"),
-        )
-    )
-    cents = packed.agg(
-        F.array_sort(F.collect_list(F.struct("clabel", "cvec"))).alias("cs")
-    )
     darr_expr = (
         "transform(cs, c -> struct("
         " c.clabel as clabel,"
@@ -2372,7 +2364,7 @@ def labels_confident_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "           * (cast(x as double) - y)),"
         "   0D, (a, b) -> a + b), 6) * 1000000) as bigint) as d2e6))"
     )
-    scored = e.join(F.broadcast(cents)).select(
+    scored = e.join(F.broadcast(_label_centroids(e))).select(
         "vec_id", "label", F.expr(darr_expr).alias("darr")
     )
     thr = (

@@ -26,6 +26,7 @@ from lambda_arc_events_filter_spark.functions.exact import (
 from lambda_arc_events_filter_spark.operators import dedup as D
 from lambda_arc_events_filter_spark.operators.graph import connected_components
 from lambda_arc_events_filter_spark.registry import register
+from lambda_arc_events_filter_spark.sources import readers
 
 # ---------------------------------------------------------------------------
 # Repetition rules (Gopher/MassiveText-style quality filtering)
@@ -2554,7 +2555,6 @@ def stream_dedup_exact_substring(
     """
     import os
     import shutil
-    import uuid
 
     k = _ESS_K
     anchors = F.expr(
@@ -2569,7 +2569,7 @@ def stream_dedup_exact_substring(
         snap.select(F.explode(anchors).alias("gk")).distinct().localCheckpoint()
     )
 
-    base = os.path.join("/tmp", f"ess_stream_{uuid.uuid4().hex}")
+    base = readers.scratch_dir("ess_stream")
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")

@@ -6,7 +6,7 @@ a deterministic hash score so both engines see the identical model.
 Scale shape shared by all three: ONE map-side-combinable aggregate over
 the fact table (group by the 1000-bucket score key), then all ordering /
 cumulation happens on the ≤1000-row grouped relation — rank arithmetic
-rides ``functions/rank.py`` (range-partitioned, no single-partition
+rides ``functions/rank.py`` (value-banded, no single-partition
 window over anything that grows), and every reported ratio is
 integer/integer rounded in integer space (``functions/exact.py``), so a
 fixture regeneration can never land on a cross-engine half-boundary.
@@ -78,7 +78,7 @@ def score_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests; here it is the ranking metric).
 
     No per-row ranks: one fact-scale group-by on the score bucket, the
-    cumulative counts via the range-partitioned running sum, and the
+    cumulative counts via the value-banded running sum, and the
     final AUC as ONE integer ratio (2A+B over 2n₁n₀) rounded in integer
     space — every intermediate is an exact integer, so the engines agree
     bit-for-bit at any scale.
@@ -152,7 +152,7 @@ def score_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the top down to this decile (the gains chart a targeting
     campaign reads).
 
-    Deciles via the arithmetic ntile on the range-partitioned global rank
+    Deciles via the arithmetic ntile on the value-banded global rank
     (``ntile_from_rank`` — never a single-partition ntile window over the
     fact), per-decile stats in one aggregate, the 10-row cumulative gain
     via a triangular self-join.  avg_score is the exact integer ratio
@@ -341,7 +341,7 @@ def score_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ρ = Σcx̃ỹ / √(Σcx̃²·Σcỹ²) is one deterministic double expression from
     exact int64 sums (≤4n³ ≈ 8.6×10¹⁷ at sf0.1 — inside int64; the final
     int→double conversions round identically in both engines).
-    Cumulative bucket counts ride the range-partitioned running sum, so
+    Cumulative bucket counts ride the value-banded running sum, so
     nothing single-partitions — at any corpus size the heavy relations
     are the fact scan and the bounded contingency table.
     """

@@ -474,7 +474,7 @@ def features_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     features).  ``shift`` is the additive correction at each decile.
 
     Scale shape: both grids ride ``group_percentile_cont`` — the
-    range-partitioned exact-quantile plan (no per-group sort cliff, no
+    value-banded exact-quantile plan (no per-group sort cliff, no
     partition-less window); the 9-decile widening is a ``stack`` over the
     per-source aggregate (|sources| rows), and the pooled grid broadcasts
     into the join.  Interpolation arithmetic is the same

@@ -2996,34 +2996,9 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-scale work no matter the corpus size, the reason RRF
     composes without a new heavy operator.
     """
-    from lambda_arc_events_filter_spark.queries.round4_q import (
-        _BM25_B,
-        _BM25_K1,
-        _BM25_TERMS,
-    )
+    from lambda_arc_events_filter_spark.queries.round4_q import bm25_scores
 
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
-    stats = dl.agg(F.count(F.lit(1)).alias("n"), F.avg("len").alias("avglen"))
-    tf = (
-        tok.filter(F.col("w").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    term = idf * (F.col("tf") * (_BM25_K1 + 1)) / (
-        F.col("tf")
-        + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("len") / F.col("avglen"))
-    )
-    bm = (
-        tf.join(F.broadcast(dfreq), "w")
-        .join(dl, "doc_id")
-        .join(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(term), 6).alias("score"))
-    )
+    bm = bm25_scores(load(spark, sf_dir, "documents"))
     # top-depth FIRST via TakeOrderedAndProject (scale-safe: no global
     # window over the full hit list), then the rank is a row_number over
     # the ≤depth-row result — the only unpartitioned window in the plan

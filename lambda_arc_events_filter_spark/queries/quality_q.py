@@ -20,6 +20,7 @@ from lambda_arc_events_filter_spark.functions.exact import (
     round_int_ratio,
 )
 from lambda_arc_events_filter_spark.functions.rank import global_order_neighbors
+from lambda_arc_events_filter_spark.functions.sessions import with_session_seq
 from lambda_arc_events_filter_spark.queries.text_index import (
     tf_index,
     vocab_stats,
@@ -272,24 +273,8 @@ def events_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows produce gap 0, landing in the same session under any tie order.
     """
     e = load(spark, sf_dir, "events").select("user_id", "ts", "value")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    # unix_micros, not cast("long"): casting a timestamp to long truncates
-    # to epoch SECONDS, which would misclassify sub-second-accurate gaps
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    run = Window.partitionBy("user_id").orderBy("ts").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     return (
-        # two select steps: a window expression cannot nest inside another
-        # window's aggregate, so materialize the flag column first (same
-        # exchange serves both passes — no extra shuffle)
-        e.withColumn("_new_sess", new_sess)
-        .withColumn(
-            "session_seq", F.sum("_new_sess").over(run).cast("bigint")
-        )
+        with_session_seq(e)
         .groupBy("user_id", "session_seq")
         .agg(
             F.min("ts").alias("session_start"),
@@ -910,19 +895,7 @@ def events_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     lever before this query, not because of it.
     """
     e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros(F.col("ts")) - F.lag(
-        F.unix_micros(F.col("ts"))
-    ).over(Window.partitionBy("user_id").orderBy("ts"))
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    s = e.select("user_id", "ts", "event_id", "event_type").withColumn(
-        "session_seq",
-        F.sum(new_sess).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    s = with_session_seq(e.select("user_id", "ts", "event_id", "event_type"))
     path = F.array_join(
         F.transform(
             F.array_sort(
@@ -1412,14 +1385,14 @@ def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lag/lead classification runs over the tiny hourly series — a few
     hundred rows at any corpus size, because the series length is
     bounded by the TIME RANGE, not the event count — via the
-    range-partitioned ghost-row frame, so no single-partition window
+    value-banded rank-shifted joins, so no single-partition window
     appears anywhere in the plan.  All comparisons are integer counts.
     """
     e = load(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.date_trunc("hour", "ts").alias("hr")
     ).agg(F.count(F.lit(1)).alias("n"))
-    # lag/lead over the range-partitioned global hour rank (rank-shifted
+    # lag/lead over the value-banded global hour rank (rank-shifted
     # equi-joins, functions/rank.py) — the series is time-bounded, but
     # the plan stays free of single-partition windows either way
     flagged = global_order_neighbors(
@@ -1901,16 +1874,9 @@ def sessions_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar day.
     """
     e = load(spark, sf_dir, "events").select("user_id", "ts")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    run_w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     sess = (
-        e.withColumn("_new", new_sess)
-        .withColumn("seq", F.sum("_new").over(run_w))
-        .groupBy("user_id", "seq")
+        with_session_seq(e)
+        .groupBy("user_id", "session_seq")
         .agg(
             F.min("ts").alias("s_start"),
             (F.max("ts") + F.expr("INTERVAL 30 MINUTE")).alias("s_end"),
@@ -2052,6 +2018,33 @@ _MARKOV_CHANNELS = ("click", "error", "signup", "view")
 _MARKOV_ITERS = 12
 
 
+def _conversion_journeys(events: DataFrame) -> DataFrame:
+    """Every session's journey up to and including its first purchase:
+    ``user_id``, ``session_seq`` (``with_session_seq``), ``ts``,
+    ``event_id``, ``event_type``, ``st`` (the event type, purchase
+    renamed ``CONV``), ``rn`` (1-based position in the session by
+    (ts, event_id)), ``conv_rn`` (the first purchase's position, NULL
+    for a session that never converts) and ``last_rn`` (the session's
+    length).  The attribution models read paths off these rows."""
+    sess = with_session_seq(
+        events.select("user_id", "ts", "event_id", "event_type").withColumn(
+            "st",
+            F.when(F.col("event_type") == "purchase", "CONV").otherwise(
+                F.col("event_type")
+            ),
+        )
+    )
+    w_s = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
+    rn = sess.withColumn("rn", F.row_number().over(w_s))
+    cut = rn.groupBy("user_id", "session_seq").agg(
+        F.min(F.when(F.col("st") == "CONV", F.col("rn"))).alias("conv_rn"),
+        F.max("rn").alias("last_rn"),
+    )
+    return rn.join(cut, ["user_id", "session_seq"]).filter(
+        F.col("conv_rn").isNull() | (F.col("rn") <= F.col("conv_rn"))
+    )
+
+
 @register(
     "events_attribution_markov_removal",
     oracle=f"""
@@ -2187,35 +2180,8 @@ def events_attribution_markov_removal(
     which is exactly why Markov attribution runs daily on ad-platform
     fact tables.
     """
-    e = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    run_w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = (
-        e.withColumn(
-            "st",
-            F.when(F.col("event_type") == "purchase", "CONV").otherwise(
-                F.col("event_type")
-            ),
-        )
-        .withColumn("_new", new_sess)
-        .withColumn("sid", F.sum("_new").over(run_w))
-    )
-    w_s = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
-    rn = sess.withColumn("rn", F.row_number().over(w_s))
-    cut = rn.groupBy("user_id", "sid").agg(
-        F.min(F.when(F.col("st") == "CONV", F.col("rn"))).alias("conv_rn"),
-        F.max("rn").alias("last_rn"),
-    )
-    kept = rn.join(cut, ["user_id", "sid"]).filter(
-        F.col("conv_rn").isNull() | (F.col("rn") <= F.col("conv_rn"))
-    )
-    w_k = Window.partitionBy("user_id", "sid").orderBy("rn")
+    kept = _conversion_journeys(load(spark, sf_dir, "events"))
+    w_k = Window.partitionBy("user_id", "session_seq").orderBy("rn")
     inner = kept.select(
         F.coalesce(F.lag("st").over(w_k), F.lit("START")).alias("src"),
         F.col("st").alias("dst"),
@@ -2398,38 +2364,12 @@ def events_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange collapses the fact table to per-session masks; everything
     after is a 16-row lattice.
     """
-    e = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    run_w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = (
-        e.withColumn(
-            "st",
-            F.when(F.col("event_type") == "purchase", "CONV").otherwise(
-                F.col("event_type")
-            ),
-        )
-        .withColumn("_new", new_sess)
-        .withColumn("sid", F.sum("_new").over(run_w))
-    )
-    w_s = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
-    rn = sess.withColumn("rn", F.row_number().over(w_s))
-    cut = rn.groupBy("user_id", "sid").agg(
-        F.min(F.when(F.col("st") == "CONV", F.col("rn"))).alias("conv_rn")
-    )
-    kept = rn.join(cut, ["user_id", "sid"]).filter(
-        F.col("conv_rn").isNull() | (F.col("rn") <= F.col("conv_rn"))
-    )
+    kept = _conversion_journeys(load(spark, sf_dir, "events"))
 
     def touched(ch):
         return F.max(F.when(F.col("st") == ch, 1).otherwise(0))
 
-    per_sess = kept.groupBy("user_id", "sid").agg(
+    per_sess = kept.groupBy("user_id", "session_seq").agg(
         F.max(F.when(F.col("st") == "CONV", 1).otherwise(0)).alias("conv"),
         (
             touched("click")
@@ -2659,16 +2599,7 @@ def events_policy_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    run_w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = e.withColumn("_new", new_sess).withColumn(
-        "sid", F.sum("_new").over(run_w)
-    )
-    per = sess.groupBy("user_id", "sid").agg(
+    per = with_session_seq(e).groupBy("user_id", "session_seq").agg(
         F.min_by("event_type", F.struct("ts", "event_id")).alias("arm"),
         F.max(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)

@@ -187,6 +187,34 @@ def _haversine_km(lat_a, lon_a, lat_b, lon_b):
     return 2 * 6371.0 * F.asin(F.sqrt(arg))
 
 
+def _band_pairs(pts: DataFrame) -> DataFrame:
+    """Candidate point pairs ``(user_id, ub)`` within one 5° latitude band
+    of each other, with their haversine distance ``km`` rounded to 3.
+    Points land in 5°(≈556 km)-tall bands and the probe side also visits
+    its two neighbor bands (explode ×3), so the pairs hold every pair
+    within any radius ≤ the band height — a pure equi-join on the band
+    key."""
+    band = F.floor(F.col("lat") / 5.0).cast("long")
+    a = pts.select("user_id", "lat", "lon", band.alias("band"))
+    b = pts.select(
+        F.col("user_id").alias("ub"),
+        F.col("lat").alias("blat"),
+        F.col("lon").alias("blon"),
+        F.explode(
+            F.array(band - 1, band.cast("long"), band + 1)
+        ).alias("band"),
+    )
+    km = F.round(
+        _haversine_km(F.col("lat"), F.col("lon"), F.col("blat"), F.col("blon")),
+        3,
+    )
+    return (
+        a.join(b, "band")
+        .filter(F.col("user_id") != F.col("ub"))
+        .withColumn("km", km)
+    )
+
+
 @register(
     "users_geo_radius_join",
     oracle="""
@@ -237,25 +265,8 @@ def users_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     point set outgrows one node; the banded equi-join is the shape that
     survives that crossover, which is why the engine plans it.
     """
-    pts = _user_points(spark, sf_dir)
-    band = F.floor(F.col("lat") / 5.0).cast("long")
-    a = pts.select("user_id", "lat", "lon", band.alias("band"))
-    b = pts.select(
-        F.col("user_id").alias("ub"),
-        F.col("lat").alias("blat"),
-        F.col("lon").alias("blon"),
-        F.explode(
-            F.array(band - 1, band.cast("long"), band + 1)
-        ).alias("band"),
-    )
-    km = F.round(
-        _haversine_km(F.col("lat"), F.col("lon"), F.col("blat"), F.col("blon")),
-        3,
-    )
     return (
-        a.join(b, "band")
-        .filter(F.col("user_id") != F.col("ub"))
-        .withColumn("km", km)
+        _band_pairs(_user_points(spark, sf_dir))
         .filter(F.col("km") <= 500.0)
         .groupBy(F.col("user_id").alias("user_a"))
         .agg(
@@ -510,6 +521,46 @@ _BM25_TERMS = ("join", "filter", "scan")
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 
+def bm25_scores(documents: DataFrame) -> DataFrame:
+    """BM25 score of every document that holds a ``_BM25_TERMS`` term:
+    ``doc_id``, ``score`` (rounded to 6) and ``n_terms_hit``.  Term
+    frequencies come from ONE explode→filter→count aggregate restricted
+    to the query terms (the filter prunes the token stream before the
+    shuffle); doc lengths are a second map-side aggregate; df and the
+    corpus stats are broadcast 1-row/3-row relations."""
+    tok = documents.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("w")
+    )
+    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n"), F.avg("len").alias("avglen")
+    )
+    tf = (
+        tok.filter(F.col("w").isin(*_BM25_TERMS))
+        .groupBy("doc_id", "w")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
+    idf = F.log(
+        (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1
+    )
+    term = idf * (F.col("tf") * (_BM25_K1 + 1)) / (
+        F.col("tf")
+        + _BM25_K1
+        * (1 - _BM25_B + _BM25_B * F.col("len") / F.col("avglen"))
+    )
+    return (
+        tf.join(F.broadcast(df), "w")
+        .join(dl, "doc_id")
+        .join(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(
+            F.round(F.sum(term), 6).alias("score"),
+            F.count(F.lit(1)).alias("n_terms_hit"),
+        )
+    )
+
+
 @register(
     "text_bm25_search",
     oracle="""
@@ -561,38 +612,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     score with doc_id tiebreak.  No window, no join wider than the
     query-term hit list.
     """
-    d = load(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    )
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("len").alias("avglen")
-    )
-    tf = (
-        tok.filter(F.col("w").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1
-    )
-    term = idf * (F.col("tf") * (_BM25_K1 + 1)) / (
-        F.col("tf")
-        + _BM25_K1
-        * (1 - _BM25_B + _BM25_B * F.col("len") / F.col("avglen"))
-    )
-    scored = (
-        tf.join(F.broadcast(df), "w")
-        .join(dl, "doc_id")
-        .join(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum(term), 6).alias("score"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-    )
+    scored = bm25_scores(load(spark, sf_dir, "documents"))
     return scored.orderBy(F.col("score").desc(), "doc_id").limit(20)
 
 
@@ -664,8 +684,8 @@ def users_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares two).
 
     The at-risk counts are reverse running sums over the day-granular
-    duration axis, computed range-partitioned for both cohorts in ONE
-    ``functions/rank.py`` pass (two running aggregates share the range
+    duration axis, computed value-banded for both cohorts in ONE
+    ``functions/rank.py`` pass (two running aggregates share the band
     exchange) — no partition-less window, fact-scale work confined to
     the per-user span aggregate.  All at-risk/observed quantities are
     integers; the E/V terms divide integers in an identical expression
@@ -765,7 +785,7 @@ def customer_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports as a scalar; this emits the 10 points an inequality chart
     plots.
 
-    Integer-cents revenue, range-partitioned global rank with the
+    Integer-cents revenue, value-banded global rank with the
     arithmetic ntile reproduction (``functions/rank.py::ntile_from_rank``
     — no single-partition window over the growing customer relation),
     then the 10-row cumulative share via a triangular self-join.  Every
@@ -1531,7 +1551,7 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch → new seed, new permutation; a restart can seek to any
     (shard, offset)).
 
-    The position is the range-partitioned global rank over the hash
+    The position is the value-banded global rank over the hash
     order (``functions/rank.py`` — no single-partition window over the
     corpus, no global sort materialized); shard/offset are pure
     arithmetic on the rank.  The hash is engine-portable integer
@@ -1841,24 +1861,8 @@ def users_geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pts = _user_points(spark, sf_dir)
-    band = F.floor(F.col("lat") / 5.0).cast("long")
-    a = pts.select("user_id", "lat", "lon", band.alias("band"))
-    b = pts.select(
-        F.col("user_id").alias("ub"),
-        F.col("lat").alias("blat"),
-        F.col("lon").alias("blon"),
-        F.explode(F.array(band - 1, band.cast("long"), band + 1)).alias(
-            "band"
-        ),
-    )
-    km = F.round(
-        _haversine_km(F.col("lat"), F.col("lon"), F.col("blat"), F.col("blon")),
-        3,
-    )
     pr = (
-        a.join(b, "band")
-        .filter(F.col("user_id") != F.col("ub"))
-        .withColumn("km", km)
+        _band_pairs(pts)
         .filter(F.col("km") <= 200.0)
         .select(F.col("user_id").alias("ua"), "ub")
         .localCheckpoint(eager=False)  # feeds degree, CC edges, border

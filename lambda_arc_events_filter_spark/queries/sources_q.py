@@ -36,12 +36,16 @@ def csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (timestamps round-trip via ISO strings)."""
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     path = readers.scratch_dir("csv_rt")
-    readers.write_csv(o, path)
-    back = readers.read_csv(
-        spark,
-        path,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+    o.write.mode("overwrite").option("header", True).csv(path)
+    # explicit schema: the header is skipped, never inferred
+    back = (
+        spark.read.schema(
+            "o_orderkey long, o_custkey long, o_orderstatus string,"
+            " o_totalprice double, o_orderdate timestamp,"
+            " o_orderpriority string"
+        )
+        .option("header", True)
+        .csv(path)
     )
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -64,7 +68,10 @@ def parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read goes through the same explicit-schema scan as any source."""
     e = load(spark, sf_dir, "events").filter(F.col("value") > 100)
     path = readers.scratch_dir("pq_rt")
-    readers.write_parquet(e, path)
+    # snappy parquet, one directory per dataset; at scale add
+    # ``partitionBy`` on the natural pruning column (e.g. event date) so
+    # downstream reads partition-prune
+    e.write.mode("overwrite").parquet(path)
     back = spark.read.schema(
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string"
@@ -98,13 +105,15 @@ def json_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-block like any text source."""
     o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 150000)
     path = readers.scratch_dir("json_rt")
-    readers.write_json(o, path)
-    back = readers.read_json(
-        spark,
-        path,
+    # JSON lines (one object per line — the splittable layout; a single
+    # giant JSON array would serialize the scan)
+    o.write.mode("overwrite").json(path)
+    # explicit schema: no sampling pass, and timestamps parse from the ISO
+    # strings the sink writes
+    back = spark.read.schema(
         "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
+        " o_totalprice double, o_orderdate timestamp, o_orderpriority string"
+    ).json(path)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),
@@ -134,13 +143,11 @@ def orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the sink+scan is lossless including µs timestamps."""
     e = load(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 3)
     path = readers.scratch_dir("orc_rt")
-    readers.write_orc(e, path)
-    back = readers.read_orc(
-        spark,
-        path,
+    e.write.mode("overwrite").orc(path)
+    back = spark.read.schema(
         "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
+        " value double, props string"
+    ).orc(path)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("value"), 4).alias("total_value"),
@@ -797,15 +804,20 @@ def xml_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     inferred."""
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
     path = readers.scratch_dir("xml_rt")
-    readers.write_xml(
-        li.select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"),
-        path,
-    )
-    back = readers.read_xml(
-        spark,
-        path,
-        "l_orderkey long, l_returnflag string, l_quantity double,"
-        " l_extendedprice double",
+    # one element per row under the row tag; files split per partition, so
+    # the layout stays parallel-scannable like the other text codecs
+    li.select(
+        "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"
+    ).write.mode("overwrite").option("rowTag", "row").format("xml").save(path)
+    # explicit schema: an inference pass is a full read
+    back = (
+        spark.read.schema(
+            "l_orderkey long, l_returnflag string, l_quantity double,"
+            " l_extendedprice double"
+        )
+        .option("rowTag", "row")
+        .format("xml")
+        .load(path)
     )
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1090,8 +1102,6 @@ def custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import json
     import os
-    import tempfile
-    import uuid as _uuid
 
     from lambda_arc_events_filter_spark.sources import pyds
 
@@ -1103,9 +1113,7 @@ def custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents"
         ),
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"jsonl_audit_{_uuid.uuid4().hex[:8]}"
-    )
+    path = readers.scratch_dir("jsonl_audit")
     agg.repartition(4).write.format("jsonl_audit").option(
         "path", path
     ).mode("append").save()

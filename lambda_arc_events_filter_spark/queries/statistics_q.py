@@ -907,6 +907,24 @@ def events_ab_welch_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _type_dow_cells(e: DataFrame) -> DataFrame:
+    """The event type × weekday (``dow``, 0 = Sunday) contingency table
+    shared by the χ² and mutual-information queries: one row per cell
+    with its count ``o``, row margin ``r``, column margin ``c`` and total
+    ``n``."""
+    cell = e.groupBy(
+        "event_type", (F.dayofweek("ts") - 1).cast("int").alias("dow")
+    ).agg(F.count(F.lit(1)).alias("o"))
+    rt = cell.groupBy("event_type").agg(F.sum("o").alias("r"))
+    ct = cell.groupBy("dow").agg(F.sum("o").alias("c"))
+    n = cell.agg(F.sum("o").alias("n"))
+    return (
+        cell.join(F.broadcast(rt), "event_type")
+        .join(F.broadcast(ct), "dow")
+        .join(F.broadcast(n))
+    )
+
+
 @register(
     "events_chi_square_independence",
     oracle="""
@@ -942,18 +960,9 @@ def events_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFram
     Weekday alignment: Spark ``dayofweek`` is 1-based Sunday, DuckDB
     ``dow`` 0-based Sunday — the Spark side subtracts 1.
     """
-    e = load(spark, sf_dir, "events")
-    cell = e.groupBy(
-        "event_type", (F.dayofweek("ts") - 1).cast("int").alias("dow")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    rt = cell.groupBy("event_type").agg(F.sum("o").alias("r"))
-    ct = cell.groupBy("dow").agg(F.sum("o").alias("c"))
-    n = cell.agg(F.sum("o").alias("n"))
     exp = F.col("r") * F.col("c") / F.col("n")
     return (
-        cell.join(F.broadcast(rt), "event_type")
-        .join(F.broadcast(ct), "dow")
-        .join(F.broadcast(n))
+        _type_dow_cells(load(spark, sf_dir, "events"))
         .groupBy("event_type", "r")
         .agg(
             F.count(F.lit(1)).alias("n_cells"),
@@ -1229,18 +1238,9 @@ def events_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines, so only ln() itself is platform math (both use
     IEEE double ln; drift ~1 ulp, 10 orders below the round-6 cut).
     """
-    e = load(spark, sf_dir, "events")
-    cell = e.groupBy(
-        "event_type", (F.dayofweek("ts") - 1).cast("int").alias("dow")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    rt = cell.groupBy("event_type").agg(F.sum("o").alias("r"))
-    ct = cell.groupBy("dow").agg(F.sum("o").alias("c"))
-    n = cell.agg(F.sum("o").alias("n"))
     o, r, c, nn = (F.col(x) for x in ("o", "r", "c", "n"))
     return (
-        cell.join(F.broadcast(rt), "event_type")
-        .join(F.broadcast(ct), "dow")
-        .join(F.broadcast(n))
+        _type_dow_cells(load(spark, sf_dir, "events"))
         .select(
             "event_type",
             "dow",
@@ -1590,7 +1590,7 @@ def events_seasonal_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile = hourly.groupBy(
         F.hour("hr").cast("long").alias("hod")
     ).agg(F.round(F.avg("n"), 6).alias("seasonal"))
-    # the ±12h sliding mean runs over the range-partitioned global hour
+    # the ±12h sliding mean runs over the value-banded global hour
     # rank (offset-explode + rank equi-join, functions/rank.py) — the
     # series is time-bounded, but the plan stays single-partition-free
     # either way; counts are integers, so the re-associated average is
@@ -1955,7 +1955,7 @@ def users_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("exits"),
     )
     # both cumulative passes (reverse at-risk count, forward log-survival)
-    # run range-partitioned (functions/rank.py) — the duration axis is
+    # run value-banded (functions/rank.py) — the duration axis is
     # day-granular and time-bounded, but the plan stays free of
     # single-partition windows either way.  The cross-partition combine
     # re-associates the double log-sum (±1 ulp vs a sequential fold, far
@@ -2341,7 +2341,7 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is fully exact until the final two divisions of identical
     operands.  One aggregate over orders, then the rank over the
     per-customer relation (≪ orders, but GROWS with the data) runs
-    range-partitioned (``functions/rank.py``) — no single-partition
+    value-banded (``functions/rank.py``) — no single-partition
     window anywhere; n/total are a 1-row broadcast.
     """
     o = load(spark, sf_dir, "orders")
@@ -2429,7 +2429,7 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     The supremum is attained at sample points, so per-VALUE counts
     suffice: group the fact table down to one row per distinct value
     (map-side combinable — the only corpus-scale stage), then the
-    running CDF counts come from the range-partitioned running sum
+    running CDF counts come from the value-banded running sum
     (``functions/rank.py``) — the fact table never feeds a
     single-partition window.  max|ca·nb − cb·na| stays in INTEGERS
     (cross-multiplied — no per-step float division) and divides once at
@@ -2517,7 +2517,7 @@ def events_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     A tie group occupying ranks [C_prev+1, C_prev+cnt] has average rank
     C_prev + (cnt+1)/2, so ranks never need materializing per ROW: group
     the fact table to one row per distinct value (cnt, ca — the only
-    corpus-scale stage, map-side combinable), take the range-partitioned
+    corpus-scale stage, map-side combinable), take the value-banded
     running count (``functions/rank.py`` — no single-partition window
     over the fact table or anything else), and each group contributes
     ca·avg_rank to the rank sum.  Average ranks are k+0.5-exact dyadics
@@ -4758,6 +4758,53 @@ def orders_jackknife_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stratified-propensity IPW average treatment effect
 # ---------------------------------------------------------------------------
 
+#: the confounded cohort's pre/post cut: days 1-10 are the pre-period,
+#: days 11+ the post-period (the oracles spell the same date)
+_COHORT_CUT = "2024-01-11"
+
+
+def _confounded_cohort(e: DataFrame) -> DataFrame:
+    """One row per user with events in both periods of ``_COHORT_CUT``:
+    ``pre_cnt`` (pre-period event count), ``y`` (post-period mean value),
+    ``stratum`` (the pre-activity tertile 1-3, thresholds ``q1``/``q2``
+    rounded to 6 so both engines cut identical tertiles) and ``treated``
+    — the Lehmer-multiplier rule mod the prime 97 whose treatment share
+    rises with the stratum, so exposure is CONFOUNDED with pre-period
+    activity.  Shared by the IPW, AIPW and matching estimators.
+    """
+    cut = F.lit(_COHORT_CUT).cast("timestamp")
+    pre = (
+        e.filter(F.col("ts") < cut)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("pre_cnt"))
+    )
+    post = (
+        e.filter(F.col("ts") >= cut)
+        .groupBy("user_id")
+        .agg(F.avg("value").alias("y"))
+    )
+    u = pre.join(post, "user_id")
+    th = u.agg(
+        F.round(F.expr("percentile(pre_cnt, 1.0/3.0)"), 6).alias("q1"),
+        F.round(F.expr("percentile(pre_cnt, 2.0/3.0)"), 6).alias("q2"),
+    )
+    return (
+        u.crossJoin(F.broadcast(th))
+        .withColumn(
+            "stratum",
+            F.when(F.col("pre_cnt") <= F.col("q1"), 1)
+            .when(F.col("pre_cnt") <= F.col("q2"), 2)
+            .otherwise(3),
+        )
+        .withColumn(
+            "treated",
+            (
+                (F.col("user_id") * F.lit(48271)) % 97
+                < 19 + 10 * F.col("stratum")
+            ).cast("int"),
+        )
+    )
+
 
 @register(
     "events_ipw_ate_stratified",
@@ -4824,44 +4871,13 @@ def events_ipw_ate_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile scalar over the USER relation (broadcast back — no
     global-order window anywhere, per the single-partition-window ban),
     and propensities are a 3-row aggregate joined by broadcast.  The
-    assignment rule is plain integer arithmetic (Knuth multiplicative
-    hash mod 10), identical in both engines — no engine hash functions.
+    assignment rule is plain integer arithmetic (the Lehmer multiplier
+    48271 mod 97), identical in both engines — no engine hash functions.
     Thresholds round to 6 before the stratum CASE so both engines cut
     identical tertiles; estimates round to 6.
     """
     e = load(spark, sf_dir, "events")
-    cut = F.lit("2024-01-11").cast("timestamp")
-    pre = (
-        e.filter(F.col("ts") < cut)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("pre_cnt"))
-    )
-    post = (
-        e.filter(F.col("ts") >= cut)
-        .groupBy("user_id")
-        .agg(F.avg("value").alias("y"))
-    )
-    u = pre.join(post, "user_id")
-    th = u.agg(
-        F.round(F.expr("percentile(pre_cnt, 1.0/3.0)"), 6).alias("q1"),
-        F.round(F.expr("percentile(pre_cnt, 2.0/3.0)"), 6).alias("q2"),
-    )
-    a = (
-        u.crossJoin(F.broadcast(th))
-        .withColumn(
-            "stratum",
-            F.when(F.col("pre_cnt") <= F.col("q1"), 1)
-            .when(F.col("pre_cnt") <= F.col("q2"), 2)
-            .otherwise(3),
-        )
-        .withColumn(
-            "treated",
-            (
-                (F.col("user_id") * F.lit(48271)) % 97
-                < 19 + 10 * F.col("stratum")
-            ).cast("int"),
-        )
-    )
+    a = _confounded_cohort(e)
     es = a.groupBy("stratum").agg(F.avg("treated").alias("e"))
     w = a.join(F.broadcast(es), "stratum").withColumn(
         "wt",
@@ -4958,38 +4974,7 @@ def events_aipw_doubly_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact rescan; every per-stratum quantity rides the same broadcast.
     """
     e = load(spark, sf_dir, "events")
-    cut = F.lit("2024-01-11").cast("timestamp")
-    pre = (
-        e.filter(F.col("ts") < cut)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("pre_cnt"))
-    )
-    post = (
-        e.filter(F.col("ts") >= cut)
-        .groupBy("user_id")
-        .agg(F.avg("value").alias("y"))
-    )
-    u = pre.join(post, "user_id")
-    th = u.agg(
-        F.round(F.expr("percentile(pre_cnt, 1.0/3.0)"), 6).alias("q1"),
-        F.round(F.expr("percentile(pre_cnt, 2.0/3.0)"), 6).alias("q2"),
-    )
-    a = (
-        u.crossJoin(F.broadcast(th))
-        .withColumn(
-            "stratum",
-            F.when(F.col("pre_cnt") <= F.col("q1"), 1)
-            .when(F.col("pre_cnt") <= F.col("q2"), 2)
-            .otherwise(3),
-        )
-        .withColumn(
-            "treated",
-            (
-                (F.col("user_id") * F.lit(48271)) % 97
-                < 19 + 10 * F.col("stratum")
-            ).cast("int"),
-        )
-    )
+    a = _confounded_cohort(e)
     sm = a.groupBy("stratum").agg(
         F.avg("treated").alias("e"),
         F.avg(F.when(F.col("treated") == 1, F.col("y"))).alias("m1"),
@@ -5095,7 +5080,7 @@ def events_cochran_armitage_trend(
     rollup is broadcast-sized; no window, no Python.
     """
     e = load(spark, sf_dir, "events")
-    cut = F.lit("2024-01-11").cast("timestamp")
+    cut = F.lit(_COHORT_CUT).cast("timestamp")
     pre = (
         e.filter(F.col("ts") < cut)
         .groupBy("user_id")
@@ -5320,7 +5305,7 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (NULL comparison → CASE else).  Round-6 on the two reported stats.
     """
     e = load(spark, sf_dir, "events")
-    cut = F.lit("2024-01-11").cast("timestamp")
+    cut = F.lit(_COHORT_CUT).cast("timestamp")
     y = (
         e.filter(F.col("ts") >= cut)
         .groupBy("user_id")
@@ -5454,38 +5439,8 @@ def events_psm_nn_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounted by n_treated − n_matched.  No Python, round-6.
     """
     e = load(spark, sf_dir, "events")
-    cut = F.lit("2024-01-11").cast("timestamp")
-    pre = (
-        e.filter(F.col("ts") < cut)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("pre_cnt"))
-    )
-    post = (
-        e.filter(F.col("ts") >= cut)
-        .groupBy("user_id")
-        .agg(F.avg("value").alias("y"))
-    )
-    u = pre.join(post, "user_id")
-    th = u.agg(
-        F.round(F.expr("percentile(pre_cnt, 1.0/3.0)"), 6).alias("q1"),
-        F.round(F.expr("percentile(pre_cnt, 2.0/3.0)"), 6).alias("q2"),
-    )
-    a2 = (
-        u.crossJoin(F.broadcast(th))
-        .withColumn(
-            "stratum",
-            F.when(F.col("pre_cnt") <= F.col("q1"), 1)
-            .when(F.col("pre_cnt") <= F.col("q2"), 2)
-            .otherwise(3),
-        )
-        .withColumn("bucket", F.floor(F.col("pre_cnt") / 5).cast("bigint"))
-        .withColumn(
-            "treated",
-            (
-                (F.col("user_id") * F.lit(48271)) % 97
-                < 19 + 10 * F.col("stratum")
-            ).cast("int"),
-        )
+    a2 = _confounded_cohort(e).withColumn(
+        "bucket", F.floor(F.col("pre_cnt") / 5).cast("bigint")
     )
     t = a2.filter(F.col("treated") == 1).select(
         F.col("user_id").alias("t_id"),
@@ -6054,7 +6009,7 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     binning, no float accumulation anywhere.
 
     Scale shape: one fact scan groups to the distinct-cents support
-    (map-combinable); the cumulative CDFs ride the range-partitioned
+    (map-combinable); the cumulative CDFs ride the value-banded
     global-order machinery (``functions/rank.py`` — integer running
     sums are EXACT there, no single-partition window over the support),
     the adjacent-value join is a self-join on rank r = r+1, and the

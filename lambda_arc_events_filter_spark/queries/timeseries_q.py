@@ -5,7 +5,7 @@ interpolation.
 Scale shape shared by both: ONE map-side-combinable aggregate collapses
 the fact table to a calendar-bounded daily series (≤ #days rows no matter
 how many events per day), and every order-dependent step after that rides
-``functions/rank.py``'s range-partitioned helpers — no single-partition
+``functions/rank.py``'s value-banded helpers — no single-partition
 window touches anything that grows with the data.  All reported values
 are exact integers or integer-rounded ratios (``functions/exact.py``), so
 Spark and the DuckDB oracle agree bit-for-bit at any scale.
@@ -28,6 +28,7 @@ from lambda_arc_events_filter_spark.functions.rank import (
     global_order_neighbors,
     global_order_stats,
 )
+from lambda_arc_events_filter_spark.functions.sessions import with_session_seq
 from lambda_arc_events_filter_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -71,7 +72,7 @@ def daily_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     |n·S_t − t·S_n| (no division until the final reported means), so the
     argmax is deterministic across engines.  Scale: the fact table
     collapses to ≤ #days rows in one combinable group-by; the running sum
-    rides the range-partitioned helper; the argmax plans as
+    rides the value-banded helper; the argmax plans as
     TakeOrdered(1) on the daily relation — nothing downstream of the
     first aggregate grows with the data.
     """
@@ -717,19 +718,8 @@ def events_transition_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us >= 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    run_w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = e.withColumn("_new", new_sess).withColumn(
-        "sid", F.sum("_new").over(run_w)
-    )
-    w2 = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
-    dwell = sess.select(
+    w2 = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
+    dwell = with_session_seq(e).select(
         F.lag("event_type").over(w2).alias("src"),
         F.col("event_type").alias("dst"),
         (

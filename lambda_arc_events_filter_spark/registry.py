@@ -38,7 +38,6 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL; None → driver does rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -178,7 +177,7 @@ def register(
             fn if _NO_PLAN_CACHE_TAGS & set(tags) else _with_plan_cache(name, fn)
         )
         _REGISTRY[name] = QuerySpec(
-            name=name, fn=reg_fn, oracle=oracle, tags=tuple(tags), doc=fn.__doc__ or ""
+            name=name, fn=reg_fn, oracle=oracle, tags=tuple(tags)
         )
         return fn
 

@@ -1,82 +1,33 @@
-"""Batch readers & writers beyond the parquet catalog — SURVEY.md §2 B3-B4.
+"""Scratch directories for the queries that write a layout copy, a sink
+round-trip, a checkpoint or a state store.
 
-CSV ingest and parquet sink round-trips, with explicit schemas on every
-read (inference scans are banned engine-wide; see catalog.py).
+Every scratch dir lives under ONE per-process root in the temp dir
+(``TMPDIR``), created on first use and removed when the interpreter
+exits, so a run leaves nothing behind in the temp dir.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+_ROOT: str | None = None
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> str:
-    """B4 parquet sink.  Snappy parquet, one directory per dataset; at
-    scale add ``partitionBy`` on the natural pruning column (e.g. event
-    date) so downstream reads partition-prune."""
-    df.write.mode(mode).parquet(path)
-    return path
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> str:
-    df.write.mode(mode).option("header", True).csv(path)
-    return path
-
-
-def read_csv(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
-    """B3 CSV scan with explicit schema (header skipped, never inferred)."""
-    return spark.read.schema(schema).option("header", True).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> str:
-    """JSON-lines sink (one object per line — the splittable layout; a
-    single giant JSON array would serialize the scan)."""
-    df.write.mode(mode).json(path)
-    return path
-
-
-def read_json(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
-    """JSON-lines scan with explicit schema: no sampling pass, and
-    timestamps parse from the ISO strings the sink writes."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> str:
-    """ORC sink — the other columnar container Spark ships natively."""
-    df.write.mode(mode).orc(path)
-    return path
-
-
-def read_orc(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
-    return spark.read.schema(schema).orc(path)
+def _remove_root(root: str, owner_pid: int) -> None:
+    # a forked child inherits the exit hook; only the creating process
+    # may delete the root its still-running siblings write under
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def scratch_dir(prefix: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_{uuid.uuid4().hex[:8]}")
-
-
-def write_xml(
-    df: DataFrame, path: str, row_tag: str = "row", mode: str = "overwrite"
-) -> str:
-    """XML sink (Spark 4 built-in source — no external package).  One
-    element per row under ``row_tag``; files split per partition, so the
-    layout stays parallel-scannable like the other text codecs."""
-    df.write.mode(mode).option("rowTag", row_tag).format("xml").save(path)
-    return path
-
-
-def read_xml(
-    spark: SparkSession, path: str, schema: StructType | str, row_tag: str = "row"
-) -> DataFrame:
-    """XML scan with explicit schema (never inferred — an inference pass
-    is a full read, same rule as every other source here)."""
-    return (
-        spark.read.schema(schema)
-        .option("rowTag", row_tag)
-        .format("xml")
-        .load(path)
-    )
+    """A fresh, not yet existing path ``<root>/<prefix>_<8 hex>``."""
+    global _ROOT
+    if _ROOT is None:
+        _ROOT = tempfile.mkdtemp(prefix="spark_graft_scratch_")
+        atexit.register(_remove_root, _ROOT, os.getpid())
+    return os.path.join(_ROOT, f"{prefix}_{uuid.uuid4().hex[:8]}")

@@ -48,7 +48,7 @@ def run_to_memory(
     df: DataFrame,
     name_prefix: str = "q",
     mode: str = "append",
-    state_partitions: int | None = 8,
+    state_partitions: int = 8,
     drain: bool = False,
     state_store: str = "memory",
 ) -> DataFrame:
@@ -74,8 +74,7 @@ def run_to_memory(
     per partition under our provider — is opened per partition per batch,
     a fixed cost that dwarfs fixture-scale data (measured 1.9s → 1.0s at
     sf0.1 going 32 → 4).  State partitions should be sized to state
-    VOLUME, not cluster cores; at 100 TB raise it (or leave None to
-    inherit the session's shuffle partitioning).  The session conf is
+    VOLUME, not cluster cores; at 100 TB raise it.  The session conf is
     restored after the run — it only pins this query's checkpoint.
     """
     qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
@@ -99,10 +98,9 @@ def run_to_memory(
     conf = {
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state." + provider
-        )
+        ),
+        "spark.sql.shuffle.partitions": str(state_partitions),
     }
-    if state_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
     with temporary_conf(spark, conf):
         writer = (
             df.writeStream.format("memory").queryName(qname).outputMode(mode)

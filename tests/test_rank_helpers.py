@@ -1,14 +1,13 @@
 """functions/rank.py: banded global-order primitives.
 
 Each helper is checked VALUE-FOR-VALUE against the single-partition
-window it replaces, plus the plan invariants each path depends on —
-banded (numeric leading order): NO range exchange and a single fact
-shuffle; fallback (non-bandable leading order): exactly one materialized
-range exchange shared via ReusedExchange (sampled boundaries must be
-consistent across branches).  Edge cases pin NULL placement (asc-first /
-desc-last, matching the window's null ordering), NaN (greatest band),
-constant columns, timestamp/date leading columns, and exclusive frames
-across band boundaries.
+window it replaces, plus the plan invariant the banded path depends on:
+NO range exchange and a single fact shuffle.  A leading order column
+that cannot be banded (a string) raises ``ValueError``, and a repeat
+build over the same derived input reuses its cached band bounds.  Edge
+cases pin NULL placement (asc-first / desc-last, matching the window's
+null ordering), NaN (greatest band), constant columns, timestamp/date
+leading columns, and exclusive frames across band boundaries.
 """
 
 from __future__ import annotations
@@ -19,6 +18,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Window
 
+from lambda_arc_events_filter_spark import cache
 from lambda_arc_events_filter_spark.functions.rank import (
     global_order_neighbors,
     global_order_stats,
@@ -125,22 +125,28 @@ def test_banded_path_single_fact_shuffle(rdf):
     assert hashes <= 2, f"expected ≤2 hash exchanges (fact + summary), got {hashes}"
 
 
-def test_fallback_single_materialized_range_exchange(rdf, spark):
-    """Non-bandable (string) leading order column → the range-partition
-    fallback, whose correctness invariant is that both branches share ONE
-    sampled range exchange (ReusedExchange) — otherwise per-partition
-    offsets rebase the wrong rows."""
-    sdf = rdf.select(F.format_string("k%05d", "id").alias("s"), "id", "v")
-    out = global_order_stats(
-        sdf.select("s", "id"), ["s", "id"], rank="rk"
+def test_non_bandable_leading_column_raises(rdf):
+    """A string leading order column has no order-preserving cast to
+    double, so it cannot be cut into value bands: the helper refuses it,
+    naming the column."""
+    sdf = rdf.select(F.format_string("k%05d", "id").alias("s"), "id")
+    with pytest.raises(ValueError, match="'s'"):
+        global_order_stats(sdf, ["s", "id"], rank="rk")
+
+
+def test_derived_input_reuses_band_bounds(rdf):
+    """The bounds-cache key is the input plan BEFORE its localCheckpoint,
+    so a second build over the same derived input probes no bounds and
+    adds no cache entry."""
+    derived = rdf.groupBy("v").agg(F.max("id").alias("id"))
+    global_order_stats(derived, ["v", "id"], rank="rk")
+    keys = set(cache._BAND_BOUNDS)
+    out = global_order_stats(derived, ["v", "id"], rank="rk")
+    assert set(cache._BAND_BOUNDS) == keys
+    ref = derived.select(
+        "v", "id", F.row_number().over(Window.orderBy("v", "id")).alias("rk")
     )
-    mat, reused = I.executed_range_exchanges(out)
-    assert mat == 1, f"expected exactly 1 materialized range exchange, got {mat}"
-    assert reused >= 1
-    ref = sdf.select(
-        "s", "id", F.row_number().over(Window.orderBy("s", "id")).alias("rk")
-    )
-    assert _rows(out, "s", "id", "rk") == _rows(ref, "s", "id", "rk")
+    assert _rows(out, "v", "id", "rk") == _rows(ref, "v", "id", "rk")
 
 
 def test_helper_plans_have_no_empty_partition_window(rdf):

@@ -437,3 +437,36 @@ def test_layout_path_cache_is_bounded(spark, sf_dir, monkeypatch):
         C.session_artifact(spark, f"/sf/{i}", "other", lambda: None)
     assert key not in C._GROUPS
     assert len(C._GROUPS) == C._MAX_GROUPS
+
+
+def test_scratch_root_is_removed_at_exit(tmp_path):
+    """Scratch dirs (layout copies, sinks, checkpoints) share one
+    per-process root under the temp dir, and the root goes when the
+    interpreter exits: a child process makes a dir, writes a file, and
+    exits, and nothing of it is left."""
+    import os
+    import subprocess
+    import sys
+
+    root_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from lambda_arc_events_filter_spark.sources.readers import scratch_dir\n"
+        "a, b = scratch_dir('a'), scratch_dir('b')\n"
+        "assert os.path.dirname(a) == os.path.dirname(b)\n"
+        "os.makedirs(a)\n"
+        "open(os.path.join(a, 'part'), 'w').close()\n"
+        "print(os.path.dirname(a))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=root_dir)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    root = out.stdout.strip()
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
+    assert os.listdir(tmp_path) == []
